@@ -21,8 +21,24 @@ object Session {
     // bucketed-table data (Formats.writeBucketed) goes to tmp, not cwd;
     // pid-suffixed so concurrent JVMs (tests + bench) never collide on
     // the same warehouse path / table names
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
+    .config("spark.sql.warehouse.dir", warehouse)
+
+  /** The JVM's warehouse directory, deleted by a shutdown hook that is
+    * registered once, on first use — catalog tables saved by one run
+    * never outlive its JVM.
+    */
+  private lazy val warehouse: String = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-warehouse-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(deleteTree(dir))
+    dir.getPath
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
 
   def local(cores: Int = 32): SparkSession = {
     val s = tune(SparkSession.builder()

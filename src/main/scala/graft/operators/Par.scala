@@ -13,26 +13,37 @@ package graft.operators
   * another task mutates.
   */
 private[graft] object Par {
-  def inParallel(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fs = tasks.map(t => Future(t()))
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
+  def inParallel(tasks: (() => Unit)*): Unit =
+    inParallelAll(tasks).foreach(_ => ())
 
   /** [[inParallel]] returning each task's value, in input order — for
     * overlapping independent EAGER frame constructions (a budget
     * sweep's per-param walks, a recall gate's exact side ∥ its walk)
     * whose results the caller then composes. Same contract: tasks must
-    * touch disjoint mutable state; first failure rethrows.
+    * touch disjoint mutable state. On a failure every sibling is still
+    * awaited before the first error (in input order) rethrows, so no
+    * sibling's Spark jobs outlive the call.
     */
   def inParallelAll[T](tasks: Seq[() => T]): Seq[T] = {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
+    import scala.util.Try
     implicit val ec: ExecutionContext = ExecutionContext.global
     val fs = tasks.map(t => Future(t()))
-    fs.map(Await.result(_, Duration.Inf))
+    fs.map(f => Try(Await.result(f, Duration.Inf))).map(_.get)
+  }
+
+  /** Run `body` with `label` as the Spark job description of the jobs
+    * it starts on this thread, restoring the caller's description
+    * afterwards — so a job profile or listener can tell which phase a
+    * job belongs to.
+    */
+  def labelled[T](spark: org.apache.spark.sql.SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty(key, prev)
   }
 
   /** Scale-adaptive fan-out for COMPUTE-HEAVY map-side operators

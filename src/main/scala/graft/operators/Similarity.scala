@@ -1134,13 +1134,20 @@ object Similarity {
     * property the graph tier exists for.
     *
     * Scale plan: the graph build is [[knnGraph]]'s one probe-cell
-    * equi-join (Σcell·nprobe, linear under √n centroids), checkpointed;
-    * per round the frontier is nQueries·beam rows, its expansion
-    * ≤ ×kGraph, and scoring BROADCASTS the visited set onto one
-    * corpus scan — rounds × scans, never rounds × shuffles. In a
-    * production serving store the adjacency rides vector-inline and
-    * the scan becomes point lookups; the Spark shape keeps the same
-    * dataflow.
+    * equi-join (Σcell·nprobe, linear under √n centroids), checkpointed.
+    * The walk takes one of [[graphWalkScored]]'s two paths, byte-equal
+    * to each other. While the node frame plus the adjacency fits under
+    * `spark.sql.autoBroadcastJoinThreshold` (the optimized plans'
+    * estimated sizes), the graph is collected once, broadcast, and
+    * every query's whole walk runs inside one task. Above that budget
+    * (or with an unknown size) the walk is the round loop: per round
+    * the frontier is nQueries·beam rows, its expansion ≤ ×kGraph, and
+    * scoring BROADCASTS the candidates onto one corpus scan — rounds ×
+    * scans, never rounds × shuffles. The checkpointed build keeps the
+    * estimate of the plan that produced it, a self-join whose estimate
+    * is the product of its sides, so this recompute walk takes the
+    * loop in practice; the stored walks, sized from their files, take
+    * the in-task path.
     */
   def annGraphSearch(embeddings: DataFrame, nCentroids: Int, kGraph: Int,
                      nQueries: Int, beam: Int, rounds: Int, k: Int,
@@ -1167,12 +1174,54 @@ object Similarity {
       .select(col("qid"), col("vid"), col("cos"), col("rank"))
   }
 
-  /** The walk core over QUERY-CARRYING seeds `(qid, qv, qn, vid)` —
-    * the r18 job-count restructure of the per-round dataflow. Three
-    * structural changes vs the r17 shape, all result-identical (cos is
-    * a pure function of (qid, vid): same vectors, same `graft_vec_dot`
-    * operation order, same r3 rounding — so WHEN a pair is scored can
-    * never change WHAT it scores):
+  /** The walk core over QUERY-CARRYING seeds `(qid, qv, qn, vid)`:
+    * `rounds` rounds of expand / score / keep the top-`beam` visited,
+    * answer = top-k of visited with the query itself excluded. Returns
+    * (qid, qv, qn, vid, cos, rank) with rank ≤ k — qv/qn retained so
+    * a chained walk (hier navigation) seeds the next level without
+    * re-joining the query frame.
+    *
+    * Scale plan — two paths with byte-equal output, chosen from the
+    * optimized plans' estimated sizes (no job runs to decide):
+    *   - **In-task** while `e` plus `adj` fits under
+    *     `spark.sql.autoBroadcastJoinThreshold`: the graph is collected
+    *     in one query, broadcast, and each query's whole walk runs in
+    *     one `mapPartitions` pass over the seeds grouped by qid
+    *     ([[BroadcastWalk]], the Odyssey shape: the index on every
+    *     worker, the queries split among them). Jobs no longer grow
+    *     with `rounds`.
+    *   - **Round loop** above the budget, or when a size is unknown
+    *     ([[walkRounds]]): the only path that serves a graph too big
+    *     to broadcast.
+    * Both score with the one `walkCos` expression (the same
+    * `graft_vec_dot`, `Divide` and r3), dedup each (qid, vid) with
+    * max(qv)/max(qn)/min(cos) and rank by (cos desc, vid asc) under
+    * Spark's orderings, so the path can never change an answer.
+    */
+  private def graphWalkScored(e: DataFrame, adj: DataFrame,
+                              seeds: DataFrame, beam: Int,
+                              rounds: Int, k: Int): DataFrame = {
+    // the lazy one-round loop (analysed, never run) carries the loop's
+    // exact output schema: later rounds union frames of the same types
+    // and nullability
+    if (BroadcastWalk.fits(e, adj, seeds))
+      BroadcastWalk(e, adj, seeds, walkCos,
+        walkRounds(e, adj, seeds, beam, 1, k).schema, beam, rounds, k)
+    else walkRounds(e, adj, seeds, beam, rounds, k)
+  }
+
+  /** A walk's pair score from node columns (v, norm) and query columns
+    * (qv, qn) — the one expression both walk paths evaluate.
+    */
+  private def walkCos: Column =
+    r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qn")))
+
+  /** [[graphWalkScored]]'s round loop — the r18 job-count restructure
+    * of the per-round dataflow. Three structural changes vs the r17
+    * shape, all result-identical (cos is a pure function of (qid, vid):
+    * same vectors, same `graft_vec_dot` operation order, same r3
+    * rounding — so WHEN a pair is scored can never change WHAT it
+    * scores):
     *
     *   - **Score on FIRST VISIT, not per round.** `visited` carries
     *     (qid, qv, qn, vid, cos); each round scores only the new
@@ -1187,7 +1236,7 @@ object Similarity {
     *     groupBy(qid,vid) clustering (subset rule) and the window
     *     partitioning, so each round is: hop join (broadcast) → score
     *     join (broadcast) → one hash(qid) exchange → dedup agg → rk
-    *     window → checkpoint.
+    *     window → checkpoint (job description `graphWalk:round<r>`).
     *   - **The LAST round is lazy.** Its merge + the answer window run
     *     in the consumer's own job (the next level's first checkpoint,
     *     or the sink) — one fewer scheduler barrier per walk; rounds
@@ -1196,14 +1245,11 @@ object Similarity {
     *
     * Dedup keeps min(cos)/max(qv)/max(qn) — duplicates of a (qid, vid)
     * pair carry IDENTICAL values (pure functions of the pair), so the
-    * agg choice is determinism bookkeeping, not semantics. Returns
-    * (qid, qv, qn, vid, cos, rank) with rank ≤ k, the query itself
-    * excluded — qv/qn retained so a chained walk (hier navigation)
-    * seeds the next level without re-joining the query frame.
+    * agg choice is determinism bookkeeping, not semantics.
     */
-  private def graphWalkScored(e: DataFrame, adj: DataFrame,
-                              seeds: DataFrame, beam: Int,
-                              rounds: Int, k: Int): DataFrame = {
+  private def walkRounds(e: DataFrame, adj: DataFrame,
+                         seeds: DataFrame, beam: Int,
+                         rounds: Int, k: Int): DataFrame = {
     require(k <= beam, s"annGraphSearch: k=$k must be <= beam=$beam")
     require(rounds >= 1, s"annGraphSearch: rounds must be >= 1, got $rounds")
     // every frontier/expansion frame is WALK-BUDGET-bounded at any
@@ -1213,8 +1259,7 @@ object Similarity {
     // pins the serve-tail shape with AQE off)
     def scoreNew(cand: DataFrame) = broadcast(cand)
       .join(e, cand("vid") === e("vec_id"))
-      .select(cand("qid"), cand("qv"), cand("qn"), cand("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qn"))).as("cos"))
+      .select(cand("qid"), cand("qv"), cand("qn"), cand("vid"), walkCos.as("cos"))
     val carry = Seq(col("qid"), col("qv"), col("qn"), col("vid"))
     var visited: DataFrame = null // (qid, qv, qn, vid, cos[, rk])
     for (r <- 1 to rounds) {
@@ -1235,10 +1280,11 @@ object Similarity {
         .groupBy(col("qid"), col("vid"))
         .agg(max(col("qv")).as("qv"), max(col("qn")).as("qn"),
           min(col("cos")).as("cos"))
-      visited = if (r < rounds)
-        merged.withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
-          .localCheckpoint()
+      visited = if (r < rounds) Par.labelled(e.sparkSession, s"graphWalk:round$r") {
+          merged.withColumn("rk", row_number().over(
+              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
+            .localCheckpoint()
+        }
       else merged
     }
     visited
@@ -1422,12 +1468,12 @@ object Similarity {
                                  beam: Int, rounds: Int,
                                  k: Int, nLabels: Int): DataFrame = {
     val isMatch = col("label") === pmod(col("qid"), lit(nLabels.toLong)).cast("int")
-    // candidate-sized sides broadcast EXPLICITLY (see graphWalkScored:
+    // candidate-sized sides broadcast EXPLICITLY (see walkRounds:
     // the corpus-sized node/label scans must never shuffle, statically)
     def scoreNew(cand: DataFrame) = broadcast(broadcast(cand)
       .join(nodes, cand("vid") === nodes("vec_id"))
       .select(cand("qid"), cand("qv"), cand("qn"), cand("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qn"))).as("cos")))
+        walkCos.as("cos")))
       .join(labels, Seq("vid"))
     // walk the adjacency UNDIRECTED: the stored kNN graph keeps each
     // node's top-k OUT-edges, and a node can sit in many top-k lists
@@ -1880,6 +1926,14 @@ object Similarity {
     * [[appendKnnGraph]] after that frame was built); byte-equal to
     * the recompute path on the same build input (the stored-parity
     * gate contract).
+    *
+    * Scale plan: the masked `_nodes` and `_edges` scans are sized from
+    * their files, with no job. While together they fit under
+    * `spark.sql.autoBroadcastJoinThreshold`, the walk is
+    * [[graphWalkScored]]'s in-task path: one collect of the graph, one
+    * exchange of the queries, and the whole walk in the consumer's job
+    * — a handful of jobs whatever `rounds` is. A store past that budget
+    * walks the round loop, a checkpointed exchange per round.
     */
   def annGraphSearchStored(spark: org.apache.spark.sql.SparkSession, table: String,
                            nQueries: Int, beam: Int, rounds: Int,

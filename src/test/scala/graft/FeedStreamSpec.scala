@@ -4,14 +4,33 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{MlFeed, Multimodal}
 import graft.streaming.StreamOps
 
-class FeedStreamSpec extends AnyFunSuite {
+class FeedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = Session.local(4)
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A temp input dir that is reaped at JVM exit (see [[afterAll]]). */
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.synchronized(tempDirs += d)
+    d
+  }
+
+  // the dirs' files exist only once their tests have run; deleteOnExit
+  // runs in reverse registration order, so register parents first
+  override def afterAll(): Unit = try {
+    for (d <- tempDirs if Files.exists(d)) {
+      val walk = Files.walk(d)
+      try walk.forEach(p => p.toFile.deleteOnExit()) finally walk.close()
+    }
+  } finally super.afterAll()
 
   lazy val daily = {
     import spark.implicits._
@@ -29,7 +48,7 @@ class FeedStreamSpec extends AnyFunSuite {
   }
 
   test("writeShards + batches: sharded roundtrip, bounded batch size") {
-    val dir = Files.createTempDirectory("mlfeed").toString
+    val dir = tempDir("mlfeed").toString
     val many = daily.unionByName(daily.withColumn("user_id", col("user_id") + 1))
       .unionByName(daily.withColumn("user_id", col("user_id") + 2))
     MlFeed.writeShards(MlFeed.samples(many, 10, 5), dir, 2)
@@ -42,7 +61,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("batchesByShard: deterministic per-shard numbering that matches shardOf") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("mlfeed-sh").toString
+    val dir = tempDir("mlfeed-sh").toString
     val many = (0 until 10).map(u => daily.withColumn("user_id", col("user_id") + u))
       .reduce(_ unionByName _)
     val samples = MlFeed.samples(many, 10, 5)
@@ -73,7 +92,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("batchesByShard validation fails loudly when a shard file splits across read partitions") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("mlfeed-split").toString
+    val dir = tempDir("mlfeed-split").toString
     // one shard, one file, MANY row groups (tiny parquet.block.size), so
     // a small maxPartitionBytes genuinely yields rows in several read
     // partitions — the exact silent-corruption scenario of ADVICE r8
@@ -176,7 +195,7 @@ class FeedStreamSpec extends AnyFunSuite {
   }
 
   test("streaming windowAgg over a file source matches the batch twin") {
-    val dir = Files.createTempDirectory("stream-in").toString
+    val dir = tempDir("stream-in").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select("ts", "event_type", "value")
     ev.write.mode("overwrite").parquet(dir)
@@ -198,7 +217,7 @@ class FeedStreamSpec extends AnyFunSuite {
   }
 
   test("streaming OHLC bars match the batch twin exactly (associative endpoints)") {
-    val dir = Files.createTempDirectory("ohlc-in").toString
+    val dir = tempDir("ohlc-in").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select("ts", "user_id", "event_id", "value")
     ev.write.mode("overwrite").parquet(dir)
@@ -222,7 +241,7 @@ class FeedStreamSpec extends AnyFunSuite {
   }
 
   test("streaming HLL registers match the batch twin; flat m-row state per day") {
-    val dir = Files.createTempDirectory("hll-in").toString
+    val dir = tempDir("hll-in").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select("ts", "user_id")
     ev.write.mode("overwrite").parquet(dir)
@@ -246,7 +265,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming dedup drops exact repeats within the watermark") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedup-in").toString
+    val dir = tempDir("dedup-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     val rows = Seq(
@@ -267,18 +286,18 @@ class FeedStreamSpec extends AnyFunSuite {
   test("csv and json roundtrip with explicit schema; day-partitioned lake prunes") {
     import graft.sources.Formats
     val df = daily
-    val csvDir = Files.createTempDirectory("fmt-csv").toString
+    val csvDir = tempDir("fmt-csv").toString
     Formats.writeCsv(df, csvDir)
     val backCsv = Formats.readCsv(spark, csvDir, df.schema)
     assert(backCsv.count() === 20)
     // file sources surface every column nullable; compare names+types
     assert(backCsv.schema.map(f => (f.name, f.dataType)) ===
       df.schema.map(f => (f.name, f.dataType)))
-    val jsonDir = Files.createTempDirectory("fmt-json").toString
+    val jsonDir = tempDir("fmt-json").toString
     Formats.writeJson(df, jsonDir)
     assert(Formats.readJson(spark, jsonDir, df.schema).agg(sum("v")).collect()
       .head.getDouble(0) === (1 to 20).sum.toDouble)
-    val lakeDir = Files.createTempDirectory("fmt-lake").toString
+    val lakeDir = tempDir("fmt-lake").toString
     Formats.writeDayPartitioned(df, lakeDir)
     val lake = Formats.readDayPartitioned(spark, lakeDir)
     val oneDay = lake.where(col("day") === lit("2024-01-03").cast("date"))
@@ -396,7 +415,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming anomaly flags exactly the profile outliers at ingest") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("anom-in").toString
+    val dir = tempDir("anom-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000L)
     val history = Seq(
@@ -426,7 +445,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming funnel state machine emits each completed ladder exactly once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("funnel-in").toString
+    val dir = tempDir("funnel-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000L)
     // batch 1: user 1 completes the full ladder; user 2 reaches click;
@@ -472,7 +491,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming attribution credits across micro-batch boundaries; window expires") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("attr-in").toString
+    val dir = tempDir("attr-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(h: Long) = new java.sql.Timestamp(base.getTime + h * 3600000L)
     // batch 1: user 1 view@0 then purchase@1 (-> view); user 2 click@0
@@ -514,7 +533,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming transitions emit each hop once, across micro-batch boundaries") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("trans-in").toString
+    val dir = tempDir("trans-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000L)
     // batch 1: user 1 a→b→a, user 2 first event only (no hop yet)
@@ -555,7 +574,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming rate limiter: burst absorbed to capacity, refill across micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("rl-in").toString
+    val dir = tempDir("rl-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(sec: Long) = new java.sql.Timestamp(base.getTime + sec * 1000L)
     // capacity 2, refill 1 token / 10s. batch 1: a burst of 4 events in
@@ -599,7 +618,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming CDC upsert emits exactly the hwm-advancing changes, across micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("cdc-in").toString
+    val dir = tempDir("cdc-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000L)
     // arrival column = explicit permutation. batch 1 (arrival 1..3):
@@ -660,8 +679,8 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("stream-stream interval join attributes views to clicks across batches") {
     import spark.implicits._
-    val vDir = Files.createTempDirectory("sj-views").toString
-    val cDir = Files.createTempDirectory("sj-clicks").toString
+    val vDir = tempDir("sj-views").toString
+    val cDir = tempDir("sj-clicks").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000L)
     def us(min: Long) = (base.getTime + min * 60000L) * 1000L
@@ -855,7 +874,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming decontamination flags exactly the benchmark-overlapping docs") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("decon-in").toString
+    val dir = tempDir("decon-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     val rows = Seq(
@@ -886,7 +905,7 @@ class FeedStreamSpec extends AnyFunSuite {
   test("streaming crossDup probe flags exactly the stored-index near-dups") {
     import spark.implicits._
     import graft.operators.Dedup
-    val dir = Files.createTempDirectory("xdup-in").toString
+    val dir = tempDir("xdup-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     // reference = docs 100/102; stream doc 1 is a near-copy of 100,
@@ -930,7 +949,7 @@ class FeedStreamSpec extends AnyFunSuite {
   test("streaming substring probe flags window-sharing docs across a micro-batch boundary; takedown masks at plan time") {
     import spark.implicits._
     import graft.operators.Dedup
-    val dir = Files.createTempDirectory("substr-in").toString
+    val dir = tempDir("substr-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     // reference docs: 100 carries the shared block, 102 a different one
@@ -992,7 +1011,7 @@ class FeedStreamSpec extends AnyFunSuite {
   test("substrDupStream tombstone contract: filings before the (re)start always mask; a RESTART resolves every mid-flight filing (the guaranteed liveness boundary)") {
     import spark.implicits._
     import graft.operators.Dedup
-    val dir = Files.createTempDirectory("substr-live").toString
+    val dir = tempDir("substr-live").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     val blockA = (0 until 4).map(i => s"a$i").mkString(" ")
@@ -1056,7 +1075,7 @@ class FeedStreamSpec extends AnyFunSuite {
   test("streaming semantic dedup flags exactly the stored-index near-copies") {
     import spark.implicits._
     import graft.operators.Similarity
-    val dir = Files.createTempDirectory("semdedup-in").toString
+    val dir = tempDir("semdedup-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     // reference corpus: 20 deterministic unit-ish vectors (vec_ids
@@ -1099,7 +1118,7 @@ class FeedStreamSpec extends AnyFunSuite {
 
   test("streaming session_window emits closed sessions after watermark advances") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("sess-in").toString
+    val dir = tempDir("sess-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(offsetMin: Long) = new java.sql.Timestamp(base.getTime + offsetMin * 60000L)
     val schema = Seq((1L, ts(0), 1.0)).toDF("user_id", "ts", "value").schema
@@ -1123,7 +1142,7 @@ class FeedStreamSpec extends AnyFunSuite {
   test("streaming BM25 triage scores arrivals under PINNED index stats across micro-batches") {
     import spark.implicits._
     import graft.operators.TextOps
-    val dir = Files.createTempDirectory("bm25-in").toString
+    val dir = tempDir("bm25-in").toString
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(m: Long) = new java.sql.Timestamp(base.getTime + m * 60000L)
     // indexed corpus: N = 2, avgdl = 2, df(rare) = 1 — the fixture

@@ -801,4 +801,167 @@ class GraphSearchSpec extends AnyFunSuite {
     info(s"graph-search avg recall = $rec")
     assert(rec > 0.0 && rec <= 1.0)
   }
+
+  /** Runs `body` and returns its value with the description of every
+    * Spark job it started (`-` for none).
+    */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        descs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("-"))
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.SpecBus.drain(sc)
+      (out, scala.jdk.CollectionConverters.IteratorHasAsScala(descs.iterator).asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A walk's outcome: its schema and rows (sorted by their string
+    * form), or the error conditions along the failure's cause chain.
+    */
+  private def outcome(walk: => org.apache.spark.sql.DataFrame)
+      : Either[Seq[String], (org.apache.spark.sql.types.StructType, Seq[Seq[Any]])] =
+    try {
+      val df = walk
+      Right((df.schema, df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq))
+    } catch {
+      case t: Throwable => Left(Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collect { case st: org.apache.spark.SparkThrowable if st.getCondition != null =>
+          st.getCondition }.toSeq.distinct)
+    }
+
+  /** `walk` on both graph-walk paths: in-task under the session's
+    * broadcast budget, then the round loop with the existing
+    * `spark.sql.autoBroadcastJoinThreshold` scoped to -1. Asserts each
+    * side really took its path (by its job descriptions) and that the
+    * two outcomes are equal; returns the in-task outcome.
+    */
+  private def bothPaths(walk: => org.apache.spark.sql.DataFrame) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val conf = spark.conf
+    val (inTask, taskJobs) = jobsOf(outcome(walk))
+    val prev = conf.getOption(key)
+    conf.set(key, "-1")
+    val (loop, loopJobs) = try jobsOf(outcome(walk))
+      finally prev.fold(conf.unset(key))(conf.set(key, _))
+    assert(taskJobs.contains("graphWalk:collect") && !taskJobs.exists(_.startsWith("graphWalk:round")),
+      s"in-task side ran ${taskJobs.mkString(", ")}")
+    assert(!loopJobs.exists(_.startsWith("graphWalk:collect")),
+      s"loop side ran ${loopJobs.mkString(", ")}")
+    assert(inTask === loop)
+    inTask
+  }
+
+  /** A hand-written graph store — the tables a stored walk reads:
+    * `<t>_nodes` (vec_id, v), `<t>_edges` (src, nbr) and, when `tombs`
+    * is non-empty, `<t>_gtombstones`.
+    */
+  private def handStore(t: String, nodes: Seq[(Long, Seq[java.lang.Float])],
+                        edges: Seq[(Long, Long)], tombs: Seq[Long] = Nil): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def save(name: String, rows: Seq[Row], fields: (String, DataType)*): Unit =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          StructType(fields.map { case (n, dt) => StructField(n, dt) }))
+        .write.mode("overwrite").format("parquet").saveAsTable(s"${t}_$name")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_gtombstones")
+    save("nodes", nodes.map { case (id, v) => Row(id, v) },
+      "vec_id" -> LongType, "v" -> ArrayType(FloatType))
+    save("edges", edges.map { case (a, b) => Row(a, b) }, "src" -> LongType, "nbr" -> LongType)
+    if (tombs.nonEmpty) save("gtombstones", tombs.map(Row(_)), "vec_id" -> LongType)
+  }
+
+  private def unit(deg: Double): Seq[java.lang.Float] = {
+    val th = math.toRadians(deg)
+    Seq(math.cos(th).toFloat, math.sin(th).toFloat).map(java.lang.Float.valueOf)
+  }
+
+  test("in-task walk is byte-equal to the round loop: ties, a null element, duplicate and dangling edges, tombstones, k < beam") {
+    val f: Float => java.lang.Float = java.lang.Float.valueOf
+    // query 0 at 0°: 1/2 tie at ±53°, 3/4 tie at ±37°; 5 sits two hops
+    // out; 6 carries a null element (the dot skips it); 9 has no node
+    // row (a dangling edge); 10 repeats an id with a different vector
+    val nodes = Seq(0L -> unit(0), 1L -> unit(53.13), 2L -> unit(-53.13),
+      3L -> unit(36.87), 4L -> unit(-36.87), 5L -> unit(90), 6L -> Seq(null, f(1f)),
+      7L -> unit(10), 8L -> unit(170), 10L -> unit(20), 10L -> unit(25))
+    val edges = Seq(0L -> 1L, 0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L, 1L -> 5L, 1L -> 9L,
+      3L -> 5L, 3L -> 5L, 3L -> 6L, 2L -> 0L, 5L -> 8L, 5L -> 7L, 7L -> 0L, 7L -> 3L,
+      4L -> 10L, 10L -> 8L, 6L -> 7L)
+    handStore("graft_walk_parity", nodes, edges)
+    for ((beam, rounds, k) <- Seq((4, 3, 2), (8, 1, 8), (2, 4, 2), (16, 4, 5))) {
+      val out = bothPaths(Similarity.annGraphSearchStored(spark, "graft_walk_parity", 11,
+        beam, rounds, k))
+      assert(out.isRight && out.toOption.get._2.nonEmpty, s"($beam, $rounds, $k)")
+    }
+    // ties rank by vid: 1 before 2, 3 before 4
+    val top = Similarity.annGraphSearchStored(spark, "graft_walk_parity", 1, 8, 1, 4)
+      .collect().sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("vid")).toSeq
+    assert(top === Seq(3L, 4L, 1L, 2L))
+    // a tombstoned query (7) and a tombstoned neighbour (3)
+    handStore("graft_walk_parity", nodes, edges, tombs = Seq(3L, 7L))
+    val masked = bothPaths(Similarity.annGraphSearchStored(spark, "graft_walk_parity", 11, 4, 3, 3))
+    val rows = masked.toOption.get._2
+    assert(rows.nonEmpty && !rows.exists(r => Set(3L, 7L)(r(0).asInstanceOf[Long]) ||
+      Set(3L, 7L)(r(1).asInstanceOf[Long])))
+  }
+
+  test("in-task walk and round loop agree on a zero-norm vector: NULL cos without ANSI, DIVIDE_BY_ZERO with it") {
+    handStore("graft_walk_zero", Seq(0L -> unit(0), 1L -> unit(30), 2L -> unit(60),
+      3L -> Seq(0f, 0f).map(java.lang.Float.valueOf)),
+      Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 0L -> 3L, 3L -> 1L))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      val off = bothPaths(Similarity.annGraphSearchStored(spark, "graft_walk_zero", 4, 4, 3, 3))
+      assert(off.toOption.get._2.exists(_(2) == null), "a zero-norm pair scores NULL")
+      spark.conf.set(key, "true")
+      val on = bothPaths(Similarity.annGraphSearchStored(spark, "graft_walk_zero", 4, 4, 3, 3))
+      assert(on.left.toOption.exists(_.contains("DIVIDE_BY_ZERO")), on.toString)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** 400 deterministic 8-d vectors for the store-scale walk specs. */
+  private def corpus() = spark.range(400).select(col("id").as("vec_id"),
+    org.apache.spark.sql.functions.array((0 until 8).map(d =>
+      org.apache.spark.sql.functions.sin(col("id") * (0.37 * (d + 1)) + d).cast("float")): _*)
+      .as("embedding"))
+
+  test("in-task walk is byte-equal to the round loop on a generated corpus: flat and hier chained seeds, with pending takedowns") {
+    val emb = corpus()
+    Similarity.writeKnnGraph(emb, 16, 4, "graft_walk_corpus", 4)
+    Similarity.deleteFromKnnGraph(emb.where(col("vec_id") % 10 === 7 && col("vec_id") >= 16)
+      .select(col("vec_id")), "graft_walk_corpus")
+    bothPaths(Similarity.annGraphSearchStored(spark, "graft_walk_corpus", 20, 8, 4, 5))
+    // hier: every level walk seeds the next one, on either path
+    Similarity.writeKnnGraphHier(emb, 16, 4, "graft_walk_hier", 4)
+    Similarity.deleteFromKnnGraph(emb.where(col("vec_id") % 10 === 3 && col("vec_id") >= 16)
+      .select(col("vec_id")), "graft_walk_hier")
+    bothPaths(Similarity.annGraphSearchHierStored(spark, "graft_walk_hier", 20, 8, 3, 5))
+  }
+
+  test("a stored walk under the broadcast budget runs in a handful of jobs, with or without pending tombstones") {
+    val emb = corpus()
+    val t = "graft_walk_jobs"
+    Similarity.writeKnnGraph(emb, 16, 4, t, 4)
+    Similarity.deleteFromKnnGraph(emb.where(col("vec_id") % 10 === 7 && col("vec_id") >= 16)
+      .select(col("vec_id")), t)
+    def walkJobs() = jobsOf(Similarity.annGraphSearchStored(spark, t, 20, 16, 4, 10).collect())._2
+    walkJobs() // warm
+    val pending = walkJobs()
+    Similarity.compactKnnGraph(t)
+    val compacted = walkJobs()
+    info(s"jobs with pending tombstones: ${pending.mkString(", ")}")
+    info(s"jobs after compaction: ${compacted.mkString(", ")}")
+    assert(pending.contains("graphWalk:collect") && compacted.contains("graphWalk:collect"))
+    assert(pending.length <= 8, pending)
+    assert(compacted.length <= 4, compacted)
+  }
 }
