@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, GenericInternalRow, JoinedRow}
@@ -10,9 +11,10 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
-/** The in-task path of the graph walk (`Similarity.graphWalkScored`):
-  * while a kNN graph fits under the broadcast budget, it is collected
-  * in one query, broadcast, and every query's whole `rounds`-round
+/** The in-task path of the graph walk (`Similarity.graphWalk` and
+  * `Similarity.graphWalkScored`): while a kNN graph fits under the
+  * broadcast budget, it is collected in one query, masked and
+  * broadcast, and every query's whole `rounds`-round
   * beam walk runs inside one task — Odyssey's (VLDB 2023) shape: the
   * index copied to every worker, the queries split among them, each
   * answered locally. A walk's job count no longer grows with `rounds`.
@@ -40,57 +42,122 @@ private[operators] object BroadcastWalk {
   private final class Graph(val nodes: Map[Long, Array[InternalRow]],
                             val adj: Map[Long, Array[Long]]) extends Serializable
 
-  /** True when the walk can run in-task: ids are longs, norms are
-    * doubles, and the optimized plans of `e` and `adj` are estimated
-    * (no job runs) to fit under `spark.sql.autoBroadcastJoinThreshold`.
-    * An unknown size estimates as `spark.sql.defaultSizeInBytes` and
-    * fails the test, so the round loop serves it.
+  // the row kinds of the graph collect
+  private val Node = 0
+  private val Edge = 1
+  private val Tomb = 2
+
+  private def typed(t: DataType, df: DataFrame, cs: String*) =
+    cs.forall(df.schema(_).dataType == t)
+
+  /** True when the walk over nodes `e`, edges `adj` and tombstones
+    * `tombs` can run in-task: ids are longs, norms are doubles, and the
+    * optimized plans of the three scans are estimated (no job runs) to
+    * fit together under `spark.sql.autoBroadcastJoinThreshold`. An
+    * unknown size estimates as `spark.sql.defaultSizeInBytes` and fails
+    * the test, so the round loop serves it.
     */
-  def fits(e: DataFrame, adj: DataFrame, seeds: DataFrame): Boolean = {
-    def typed(t: DataType, df: DataFrame, cs: String*) = cs.forall(df.schema(_).dataType == t)
+  def fits(e: DataFrame, adj: DataFrame, tombs: Option[DataFrame]): Boolean = {
     val budget = e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     typed(LongType, e, "vec_id") && typed(LongType, adj, "src", "nbr") &&
-      typed(LongType, seeds, "qid", "vid") &&
-      typed(DoubleType, e, "norm") && typed(DoubleType, seeds, "qn") && budget >= 0 &&
-      Seq(e, adj).map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= budget
+      typed(DoubleType, e, "norm") && tombs.forall(typed(LongType, _, "vec_id")) &&
+      budget >= 0 &&
+      (Seq(e, adj) ++ tombs).map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= budget
+  }
+
+  /** [[fits]] for a walk of `seeds` (qid, qv, qn, vid) over an already
+    * masked graph: the seeds' ids are longs and `qn` a double too.
+    */
+  def fits(e: DataFrame, adj: DataFrame, seeds: DataFrame): Boolean =
+    typed(LongType, seeds, "qid", "vid") && typed(DoubleType, seeds, "qn") &&
+      fits(e, adj, None)
+
+  /** The walk of every query `vec_id < nQueries` over nodes `e`
+    * (vec_id, v, norm), edges `adj` (src, nbr) and tombstones `tombs`
+    * (vec_id): `cos` scores a pair from (v, norm, qv, qn); `schema` is
+    * the round loop's output schema. One query runs now (job
+    * description `graphWalk:collect`): the union of the three scans.
+    * The tombstone mask applies here, on the collected rows, and the
+    * seeds are the surviving node rows below `nQueries`, one seed
+    * (vec_id, v, norm, vec_id) per row, so a repeated id seeds with
+    * each of its rows, as the loop's query frame does. The query groups
+    * spread over `defaultParallelism` slices, and the walk itself runs
+    * in the consumer's job, as the loop's lazy last round does.
+    */
+  def ofQueries(e: DataFrame, adj: DataFrame, tombs: Option[DataFrame], nQueries: Int,
+                cos: Column, schema: StructType, beam: Int, rounds: Int, k: Int): DataFrame = {
+    val spark = e.sparkSession
+    val (graph, nodeRows) = collectGraph(e, adj, tombs)
+    val groups = nodeRows.filter(_.getLong(1) < nQueries)
+      .groupBy(_.getLong(1)).toSeq.sortBy(_._1)
+      .map { case (qid, rs) => (qid: Any, rs.toSeq.map(r => Row(qid, r.get(2), r.get(3), qid))) }
+    val walker = walkerOf(e, graph, cos, e.schema("v").dataType, beam, rounds, k)
+    val walked = spark.sparkContext.parallelize(groups, spark.sparkContext.defaultParallelism)
+      .mapPartitions(it => walker().walkGroups(it))
+    spark.createDataFrame(walked, schema)
   }
 
   /** The walk of `seeds` (qid, qv, qn, vid) over nodes `e` (vec_id, v,
-    * norm) and edges `adj` (src, nbr): `cos` scores a pair from (v,
-    * norm, qv, qn); `schema` is the round loop's output schema. The
-    * graph collect runs now (job description `graphWalk:collect`), as
-    * does the seeds' exchange by qid (`graphWalk:in-task`); the walk
-    * itself runs in the consumer's job, as the loop's lazy last round
-    * does.
+    * norm) and edges `adj` (src, nbr), both already masked: `cos` and
+    * `schema` as in [[ofQueries]]. The graph collect runs now (job
+    * description `graphWalk:collect`), as does the seeds' exchange by
+    * qid (`graphWalk:in-task`); the walk itself runs in the consumer's
+    * job.
     */
   def apply(e: DataFrame, adj: DataFrame, seeds: DataFrame, cos: Column,
             schema: StructType, beam: Int, rounds: Int, k: Int): DataFrame = {
     val spark = e.sparkSession
     val s = seeds.select(col("qid"), col("qv"), col("qn"), col("vid"))
-    val vT = e.schema("v").dataType
-    val qvT = s.schema("qv").dataType
-    val score = boundScore(e, cos,
-      Seq("v" -> vT, "norm" -> DoubleType, "qv" -> qvT, "qn" -> DoubleType))
-    // nodes and edges in ONE query: a union of the two scans, no join
-    val rows = Par.labelled(spark, "graphWalk:collect") {
-      e.select(lit(true).as("node"), col("vec_id").as("id"), col("v"), col("norm"),
-          lit(null).cast(LongType).as("nbr"))
-        .unionByName(adj.select(lit(false).as("node"), col("src").as("id"),
-          lit(null).cast(vT).as("v"), lit(null).cast(DoubleType).as("norm"), col("nbr")))
-        .collect()
+    val (graph, _) = collectGraph(e, adj, None)
+    val walker = walkerOf(e, graph, cos, s.schema("qv").dataType, beam, rounds, k)
+    val walked = Par.labelled(spark, "graphWalk:in-task") {
+      s.repartition(spark.sparkContext.defaultParallelism, col("qid")).rdd
+        .mapPartitions(it => walker().walkAll(it))
     }
+    spark.createDataFrame(walked, schema)
+  }
+
+  /** Nodes, edges and tombstones in ONE query (job description
+    * `graphWalk:collect`): a union of the three scans, with no join.
+    * The mask applies on the collected rows, as the loop's anti-joins
+    * would: a tombstoned node row goes, and so does an edge whose src
+    * or nbr is tombstoned. A null id can match nothing, so its rows go
+    * too. Returns the broadcast graph and the surviving node rows
+    * (kind, id, v, norm, nbr).
+    */
+  private def collectGraph(e: DataFrame, adj: DataFrame, tombs: Option[DataFrame])
+      : (Broadcast[Graph], Array[Row]) = {
+    val spark = e.sparkSession
+    val vT = e.schema("v").dataType
+    val (noV, noNorm, noId) = (lit(null).cast(vT), lit(null).cast(DoubleType), lit(null).cast(LongType))
+    def scan(kind: Int, df: DataFrame, id: String, v: Column, norm: Column, nbr: Column) =
+      df.select(lit(kind).as("kind"), col(id).as("id"), v.as("v"), norm.as("norm"), nbr.as("nbr"))
+    val scans = Seq(scan(Node, e, "vec_id", col("v"), col("norm"), noId),
+        scan(Edge, adj, "src", noV, noNorm, col("nbr"))) ++
+      tombs.map(scan(Tomb, _, "vec_id", noV, noNorm, noId))
+    val rows = Par.labelled(spark, "graphWalk:collect") {
+      scans.reduce(_ unionByName _).collect()
+    }.filter(!_.isNullAt(1)).groupBy(_.getInt(0))
+    def of(kind: Int) = rows.getOrElse(kind, Array.empty[Row])
+    val dead = of(Tomb).map(_.getLong(1)).toSet
+    val nodeRows = of(Node).filter(r => !dead(r.getLong(1)))
+    val edgeRows = of(Edge).filter(r => !r.isNullAt(4) && !dead(r.getLong(1)) && !dead(r.getLong(4)))
     val toV = CatalystTypeConverters.createToCatalystConverter(vT)
-    val (nodeRows, edgeRows) = rows.filter(!_.isNullAt(1)).partition(_.getBoolean(0))
     val graph = spark.sparkContext.broadcast(new Graph(
       nodeRows.groupMap(_.getLong(1))(r =>
         new GenericInternalRow(Array[Any](toV(r.get(2)), r.get(3))): InternalRow),
-      edgeRows.filter(!_.isNullAt(4)).groupMap(_.getLong(1))(_.getLong(4))))
-    val walked = Par.labelled(spark, "graphWalk:in-task") {
-      s.repartition(spark.sparkContext.defaultParallelism, col("qid")).rdd
-        .mapPartitions(it => new Walker(graph.value, score, qvT, beam, rounds, k)
-          .walkAll(it))
-    }
-    spark.createDataFrame(walked, schema)
+      edgeRows.groupMap(_.getLong(1))(_.getLong(4))))
+    (graph, nodeRows)
+  }
+
+  /** A serializable factory of the per-task [[Walker]] over `graph`,
+    * scoring with `cos` for query vectors of type `qvT`.
+    */
+  private def walkerOf(e: DataFrame, graph: Broadcast[Graph], cos: Column, qvT: DataType,
+                       beam: Int, rounds: Int, k: Int): () => Walker = {
+    val score = boundScore(e, cos,
+      Seq("v" -> e.schema("v").dataType, "norm" -> DoubleType, "qv" -> qvT, "qn" -> DoubleType))
+    () => new Walker(graph.value, score, qvT, beam, rounds, k)
   }
 
   /** `cos` analysed over (v, norm, qv, qn) and bound to that row order
@@ -137,11 +204,16 @@ private[operators] object BroadcastWalk {
       if (c != 0) c < 0 else a.vid < b.vid
     }
 
+    /** The walks of seed rows in any order: grouped by qid here. */
     def walkAll(seeds: Iterator[Row]): Iterator[Row] = {
       val byQid = mutable.LinkedHashMap.empty[Any, mutable.ArrayBuffer[Row]]
       seeds.foreach(r => byQid.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty) += r)
-      byQid.iterator.flatMap { case (qid, rs) => walk(qid, rs.toSeq) }
+      walkGroups(byQid.iterator.map { case (qid, rs) => (qid, rs.toSeq) })
     }
+
+    /** The walks of seed rows already grouped by qid. */
+    def walkGroups(groups: Iterator[(Any, Seq[Row])]): Iterator[Row] =
+      groups.flatMap { case (qid, rs) => walk(qid, rs) }
 
     /** One query's walk. A null qid still walks (its pairs score, and
       * may fail, as in the loop) but answers nothing: the loop's final

@@ -962,31 +962,48 @@ object Similarity {
   }
 
   /** The stored node/edge frames with the tombstone mask applied —
-    * the ONLY way stored walks read a graph store (a consumer reading
-    * raw would serve taken-down vectors). Tombstones are
-    * takedown-cadence-bounded and ride BROADCAST anti-joins.
-    * `extraTs` folds in tombstones filed at a DIFFERENT table — the
-    * hier walk passes its root `_gtombstones` so one filing masks
-    * every level (and a filing made directly against a level table,
-    * e.g. `t_l0`, masks through the level's own table — ADVICE r14).
+    * the ONLY way the loop-served stored reads (the round loop, the hier
+    * and filtered walks, the exact and audit reads) see a graph store
+    * (a consumer reading raw would serve taken-down vectors); the
+    * in-task walk of [[annGraphSearchStored]] masks the collected
+    * [[graphStore]] rows on the driver instead. `extraTs` folds in
+    * tombstones filed at a DIFFERENT table — the hier walk passes its
+    * root `_gtombstones` so one filing masks every level (and a filing
+    * made directly against a level table, e.g. `t_l0`, masks through
+    * the level's own table — ADVICE r14).
     */
   private def maskedGraphStore(spark: org.apache.spark.sql.SparkSession,
                                table: String,
                                extraTs: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val nodes = spark.table(s"${table}_nodes")
-    val edges = spark.table(s"${table}_edges")
+    val (nodes, edges, ts) = graphStore(spark, table, extraTs)
+    ts.fold((nodes, edges))(tombstoned(nodes, edges, _))
+  }
+
+  /** A graph store's raw `_nodes` and `_edges` frames and its pending
+    * tombstone ids (`_gtombstones` ∪ `extraTs`), if any.
+    */
+  private def graphStore(spark: org.apache.spark.sql.SparkSession, table: String,
+                         extraTs: Option[DataFrame] = None)
+      : (DataFrame, DataFrame, Option[DataFrame]) = {
     val tsT = s"${table}_gtombstones"
     val own = if (spark.catalog.tableExists(tsT))
       Some(spark.table(tsT).select(col("vec_id"))) else None
-    (own ++ extraTs).reduceOption(_ unionByName _) match {
-      case None => (nodes, edges)
-      case Some(t) =>
-        val ts = t.select(col("vec_id")).distinct()
-        (nodes.join(broadcast(ts), Seq("vec_id"), "left_anti"),
-          edges
-            .join(broadcast(ts.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-            .join(broadcast(ts.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_anti"))
-    }
+    (spark.table(s"${table}_nodes"), spark.table(s"${table}_edges"),
+      (own ++ extraTs).reduceOption(_ unionByName _))
+  }
+
+  /** `nodes` (vec_id, …) and `edges` (src, nbr, …, no vec_id) without
+    * the rows tombstoned in `ts` (vec_id): a node by its id, an edge by
+    * either end. Tombstones are takedown-cadence-bounded: ONE broadcast
+    * of the ids serves all three anti-joins (an anti-join ignores
+    * duplicate right rows, so no `distinct`).
+    */
+  private def tombstoned(nodes: DataFrame, edges: DataFrame,
+                         ts: DataFrame): (DataFrame, DataFrame) = {
+    val t = broadcast(ts.select(col("vec_id")))
+    (nodes.join(t, Seq("vec_id"), "left_anti"),
+      edges.join(t, col("src") === col("vec_id"), "left_anti")
+        .join(t, col("nbr") === col("vec_id"), "left_anti"))
   }
 
   /** Fold accumulated tombstones into a FLAT graph store — the
@@ -1017,7 +1034,7 @@ object Similarity {
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nprobe = metaIntOr(meta, "nprobe", 1)
     val enc = meta.getAs[String]("enc")
-    val ts = spark.table(tsT).select(col("vec_id")).distinct().localCheckpoint()
+    val ts = spark.table(tsT).select(col("vec_id")).localCheckpoint()
     val nodes = spark.table(s"${table}_nodes")
       .join(broadcast(ts), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"), col("v"))
@@ -1078,7 +1095,7 @@ object Similarity {
     if (!spark.catalog.tableExists(tsT)) return
     val kGraph = meta.getAs[Int]("k_graph")
     val nBuckets = meta.getAs[Int]("n_buckets")
-    val ts = spark.table(tsT).select(col("vec_id")).distinct().localCheckpoint()
+    val ts = spark.table(tsT).select(col("vec_id")).localCheckpoint()
     val nodes = spark.table(s"${table}_nodes")
       .join(broadcast(ts), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"), col("v"))
@@ -1162,16 +1179,39 @@ object Similarity {
     * `e` is the prepared (vec_id, v, norm) vector frame — the build
     * input for the recompute path, the `<table>_nodes` store for the
     * stored path (so a walk after [[appendKnnGraph]] scores appended
-    * nodes even when the caller's frame predates the append).
+    * nodes even when the caller's frame predates the append) — and
+    * `tombs` the store's pending tombstone ids: a tombstoned node
+    * leaves the seeds, the frontiers and the answers.
+    *
+    * Scale plan — [[graphWalkScored]]'s two paths, chosen the same way
+    * with the tombstone scan's estimated size added to the budget test:
+    *   - **In-task** ([[BroadcastWalk.ofQueries]]): ONE collect query,
+    *     a union of the node, edge and tombstone scans with no join,
+    *     masked on the driver; the seeds are the surviving node rows
+    *     below `nQueries`, and the whole walk runs in the consumer's
+    *     job — two jobs with the consumer's, whatever `rounds` is and
+    *     whether tombstones are pending or not.
+    *   - **Round loop** above the budget, over the anti-join-masked
+    *     frames ([[tombstoned]]).
     */
   private def graphWalk(e: DataFrame, graph: DataFrame,
-                        nQueries: Int, beam: Int, rounds: Int, k: Int): DataFrame = {
-    val q = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-    graphWalkScored(e, graph,
-        q.select(col("qid"), col("qv"), col("qn"), col("qid").as("vid")),
-        beam, rounds, k)
-      .select(col("qid"), col("vid"), col("cos"), col("rank"))
+                        nQueries: Int, beam: Int, rounds: Int, k: Int,
+                        tombs: Option[DataFrame] = None): DataFrame = {
+    def seeds(e: DataFrame) = e.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"),
+        col("vec_id").as("vid"))
+    // the in-task path takes the lazy one-round loop's schema over the
+    // UNMASKED frames: an anti-join keeps its left side's output, so
+    // the mask cannot change it
+    val walked =
+      if (BroadcastWalk.fits(e, graph, tombs))
+        BroadcastWalk.ofQueries(e, graph, tombs, nQueries, walkCos,
+          walkRounds(e, graph, seeds(e), beam, 1, k).schema, beam, rounds, k)
+      else {
+        val (me, mg) = tombs.fold((e, graph))(tombstoned(e, graph, _))
+        walkRounds(me, mg, seeds(me), beam, rounds, k)
+      }
+    walked.select(col("qid"), col("vid"), col("cos"), col("rank"))
   }
 
   /** The walk core over QUERY-CARRYING seeds `(qid, qv, qn, vid)`:
@@ -1189,7 +1229,9 @@ object Similarity {
     *     one `mapPartitions` pass over the seeds grouped by qid
     *     ([[BroadcastWalk]], the Odyssey shape: the index on every
     *     worker, the queries split among them). Jobs no longer grow
-    *     with `rounds`.
+    *     with `rounds`: the collect, the seeds' exchange and the
+    *     consumer's job. (A walk seeded by its own queries, not by a
+    *     frame, is [[graphWalk]], which drops the exchange too.)
     *   - **Round loop** above the budget, or when a size is unknown
     *     ([[walkRounds]]): the only path that serves a graph too big
     *     to broadcast.
@@ -1925,15 +1967,19 @@ object Similarity {
     * from the caller's frame would silently drop nodes added by
     * [[appendKnnGraph]] after that frame was built); byte-equal to
     * the recompute path on the same build input (the stored-parity
-    * gate contract).
+    * gate contract). The tombstone mask ([[deleteFromKnnGraph]])
+    * applies, so a taken-down vector vanishes from seeds, frontiers
+    * and answers the moment its tombstone lands.
     *
-    * Scale plan: the masked `_nodes` and `_edges` scans are sized from
-    * their files, with no job. While together they fit under
-    * `spark.sql.autoBroadcastJoinThreshold`, the walk is
-    * [[graphWalkScored]]'s in-task path: one collect of the graph, one
-    * exchange of the queries, and the whole walk in the consumer's job
-    * — a handful of jobs whatever `rounds` is. A store past that budget
-    * walks the round loop, a checkpointed exchange per round.
+    * Scale plan: the `_nodes`, `_edges` and `_gtombstones` scans are
+    * sized from their files, with no job. While together they fit
+    * under `spark.sql.autoBroadcastJoinThreshold`, the walk is
+    * [[graphWalk]]'s in-task path: one collect of the three scans, the
+    * mask and the seeds on the driver, and the whole walk in the
+    * consumer's job — two jobs whatever `rounds` is, with or without
+    * pending tombstones. A store past that budget walks the round loop
+    * over the anti-join-masked store, a checkpointed exchange per
+    * round.
     */
   def annGraphSearchStored(spark: org.apache.spark.sql.SparkSession, table: String,
                            nQueries: Int, beam: Int, rounds: Int,
@@ -1941,14 +1987,10 @@ object Similarity {
     VectorExprs.register(spark)
     require(spark.catalog.tableExists(s"${table}_edges"),
       s"kNN graph '$table' has no ${table}_edges table — build it with writeKnnGraph")
-    // the tombstone mask (deleteFromKnnGraph) applies here, so a
-    // taken-down vector vanishes from seeds, frontiers and answers
-    // the moment its tombstone lands
-    val (mNodes, mEdges) = maskedGraphStore(spark, table)
-    val nodes = mNodes
-      .select(col("vec_id"), col("v"))
-      .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
-    graphWalk(nodes, mEdges, nQueries, beam, rounds, k)
+    val (nodes, edges, tombs) = graphStore(spark, table)
+    graphWalk(nodes.select(col("vec_id"), col("v"))
+        .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)"))),
+      edges, nQueries, beam, rounds, k, tombs)
   }
 
   /** Recall@k of the graph walk vs exact — next to the IVF/PQ/SQ
@@ -2301,7 +2343,7 @@ object Similarity {
     val nLayers = metaIntOr(hm, "n_layers", 2)
     val rootTsT = s"${table}_gtombstones"
     val rootTs = if (spark.catalog.tableExists(rootTsT))
-      Some(spark.table(rootTsT).select(col("vec_id")).distinct().localCheckpoint())
+      Some(spark.table(rootTsT).select(col("vec_id")).localCheckpoint())
     else None
     // per-level fold + compaction touches DISJOINT table families —
     // run the levels concurrently (the hier build/append discipline)

@@ -912,6 +912,55 @@ class GraphSearchSpec extends AnyFunSuite {
       Set(3L, 7L)(r(1).asInstanceOf[Long])))
   }
 
+  test("in-task walk masks tombstones on the driver as the loop's anti-joins do: duplicate, absent, repeated-id, sole-neighbour and query tombstones") {
+    // 10 is stored twice; 11's only neighbour is 8; 7 is a query; 8 is
+    // filed twice and 42 is not in the store. Query 6, stored twice and
+    // kept, scores 0 lowest from its 40° row and 3 from its -20° row,
+    // so it must seed with both
+    val nodes = Seq(0L -> unit(0), 1L -> unit(53.13), 2L -> unit(-53.13),
+      3L -> unit(36.87), 4L -> unit(-36.87), 5L -> unit(90), 6L -> unit(-20), 6L -> unit(40),
+      7L -> unit(10), 8L -> unit(170), 10L -> unit(20), 10L -> unit(25), 11L -> unit(5))
+    val edges = Seq(0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L, 1L -> 5L, 3L -> 5L,
+      2L -> 0L, 5L -> 8L, 5L -> 7L, 7L -> 0L, 7L -> 3L, 4L -> 10L, 10L -> 8L,
+      10L -> 4L, 11L -> 8L, 0L -> 11L, 8L -> 1L, 6L -> 0L, 6L -> 3L)
+    val tombs = Seq(8L, 8L, 42L, 10L, 7L)
+    val gone = tombs.toSet
+    def walk(t: String) = Similarity.annGraphSearchStored(spark, t, 12, 4, 3, 3)
+    handStore("graft_walk_mask", nodes, edges, tombs)
+    val rows = bothPaths(walk("graft_walk_mask")).toOption.get._2
+    assert(rows.nonEmpty)
+    assert(!rows.exists(r => gone(r(0).asInstanceOf[Long]) || gone(r(1).asInstanceOf[Long])), rows)
+    assert(!rows.exists(_(0) == 11L), "11 reaches nothing past its tombstoned neighbour")
+    // the mask equals a store that never held the tombstoned rows
+    handStore("graft_walk_unmasked", nodes.filterNot(n => gone(n._1)),
+      edges.filterNot { case (a, b) => gone(a) || gone(b) })
+    assert(bothPaths(walk("graft_walk_unmasked")).toOption.get._2 === rows)
+  }
+
+  test("the tombstone scan counts against the broadcast budget: a store that fits only without it walks the loop") {
+    val t = "graft_walk_budget"
+    handStore(t, Seq(0L -> unit(0), 1L -> unit(30), 2L -> unit(60), 3L -> unit(90)),
+      Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L, 0L -> 2L), tombs = Seq(3L))
+    def walkJobs() = jobsOf(Similarity.annGraphSearchStored(spark, t, 4, 4, 3, 3).collect())._2
+    def size(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    walkJobs() // registers graft_vec_dot
+    val nodes = spark.table(s"${t}_nodes").select(col("vec_id"), col("v"))
+      .withColumn("norm", org.apache.spark.sql.functions.sqrt(
+        org.apache.spark.sql.functions.expr("graft_vec_dot(v, v)")))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, (size(nodes) + size(spark.table(s"${t}_edges"))).toString)
+      val pending = walkJobs()
+      assert(pending.exists(_.startsWith("graphWalk:round")) && !pending.contains("graphWalk:collect"),
+        pending)
+      spark.sql(s"DROP TABLE ${t}_gtombstones")
+      val clean = walkJobs()
+      assert(clean.contains("graphWalk:collect") && !clean.exists(_.startsWith("graphWalk:round")),
+        clean)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("in-task walk and round loop agree on a zero-norm vector: NULL cos without ANSI, DIVIDE_BY_ZERO with it") {
     handStore("graft_walk_zero", Seq(0L -> unit(0), 1L -> unit(30), 2L -> unit(60),
       3L -> Seq(0f, 0f).map(java.lang.Float.valueOf)),
@@ -960,8 +1009,10 @@ class GraphSearchSpec extends AnyFunSuite {
     val compacted = walkJobs()
     info(s"jobs with pending tombstones: ${pending.mkString(", ")}")
     info(s"jobs after compaction: ${compacted.mkString(", ")}")
-    assert(pending.contains("graphWalk:collect") && compacted.contains("graphWalk:collect"))
-    assert(pending.length <= 8, pending)
-    assert(compacted.length <= 4, compacted)
+    // the collect and the consumer's own job
+    for (jobs <- Seq(pending, compacted)) {
+      assert(jobs.count(_ == "graphWalk:collect") == 1, jobs)
+      assert(jobs.length <= 2, jobs)
+    }
   }
 }
