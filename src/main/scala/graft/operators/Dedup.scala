@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.Store
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -645,13 +647,10 @@ object Dedup {
   /** Eager guard shared by every index consumer: the stored banding
     * parameters must equal the caller's (see [[writeBandIndex]]).
     */
-  private[graft] def requireIndexParams(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def requireIndexParams(spark: SparkSession,
                                         table: String, perms: Int,
                                         rowsPerBand: Int): Unit = {
-    val metaT = s"${table}_meta"
-    require(spark.catalog.tableExists(metaT),
-      s"band index '$table' has no $metaT table — (re)build it with writeBandIndex")
-    val m = spark.table(metaT).collect().head
+    val m = bandMeta(spark, table)
     require(m.getInt(0) == perms && m.getInt(1) == rowsPerBand,
       s"band index '$table' was built with perms=${m.getInt(0)}, " +
         s"rowsPerBand=${m.getInt(1)} but probed/appended with perms=$perms, " +
@@ -686,57 +685,52 @@ object Dedup {
     * of [[graft.operators.Similarity.deleteFromAnnIndex]]: removed
     * reference docs (licensing takedowns, opt-outs) stop witnessing
     * dedup verdicts IMMEDIATELY via an anti-join mask; the physical
-    * rows go at the next [[compactBandIndex]]. At 100 TB rewriting two
-    * bucketed tables per takedown request is not viable; a broadcast
-    * anti-join on the (compaction-cadence-bounded) tombstone set is
-    * one map-side pass.
+    * rows go at the next [[compactBandIndex]], whose [[Store.commit]]
+    * drops the filing only once the new generation is live. At 100 TB
+    * rewriting two bucketed tables per takedown request is not viable;
+    * a broadcast anti-join on the (compaction-cadence-bounded)
+    * tombstone set is one map-side pass.
     */
   def deleteFromBandIndex(ids: DataFrame, table: String): Unit = {
     val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"band index '$table' has no ${table}_meta table — (re)build it with writeBandIndex")
-    ids.select(col("doc_id")).write.mode("append")
-      .format("parquet").saveAsTable(s"${table}_tombstones")
+    Store.guard(spark, table, "meta", "band index", "writeBandIndex")
+    Store.file(ids.select(col("doc_id")), s"${table}_tombstones")
   }
+
+  /** A band index's `_meta` row (see [[Store.meta]]). */
+  private def bandMeta(spark: SparkSession, table: String): Row =
+    Store.meta(spark, table, "meta", "band index", "writeBandIndex")
 
   /** The `<table>_bands` / `<table>_sigs` scan with the tombstone mask
-    * applied — the ONLY way index consumers read the stored tables (a
-    * consumer reading them raw would resurrect taken-down docs). No
-    * distinct on the tombstone side: anti-joins are duplicate-safe and
-    * a distinct would cost a shuffle inside the broadcast subtree.
+    * applied ([[Store.mask]]) — the ONLY way index consumers read the
+    * stored tables (a consumer reading them raw would resurrect
+    * taken-down docs).
     */
-  private[graft] def maskedBandTable(spark: org.apache.spark.sql.SparkSession,
-                                     table: String, which: String): DataFrame = {
-    val t = spark.table(s"${table}_$which")
-    val tsT = s"${table}_tombstones"
-    if (spark.catalog.tableExists(tsT))
-      t.join(broadcast(spark.table(tsT).select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")
-    else t
-  }
+  private[graft] def maskedBandTable(spark: SparkSession,
+                                     table: String, which: String): DataFrame =
+    Store.mask(spark.table(s"${table}_$which"),
+      Store.pending(spark, s"${table}_tombstones", "doc_id"), "doc_id")
 
-  /** Fold accumulated tombstones into the band index: rewrite both
-    * bucketed tables as NEW generations (write-then-swap, one linear
-    * bucketed pass each — never read-and-overwrite in place), drop the
-    * tombstones. Banding params/meta untouched, so probes answer
+  /** Fold accumulated tombstones into the band index: both bucketed
+    * tables are rewritten as staged generations (one linear bucketed
+    * pass each — never read-and-overwrite in place) and swapped in by
+    * [[Store.commit]], which drops the tombstones last (a failed
+    * commit leaves the previous generation live with its tombstones
+    * pending). Banding params/meta untouched, so probes answer
     * bit-identically to an index built on the survivor set.
     */
   def compactBandIndex(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"band index '$table' has no ${table}_meta table — (re)build it with writeBandIndex")
-    val nBuckets = spark.table(s"${table}_meta").collect().head.getInt(2)
+    val spark = SparkSession.active
+    val nBuckets = bandMeta(spark, table).getInt(2)
     val tsT = s"${table}_tombstones"
     if (spark.catalog.tableExists(tsT)) {
-      Seq("bands" -> Seq("band", "sig"), "sigs" -> Seq("doc_id")).foreach {
-        case (which, keys) =>
-          graft.sources.Formats.writeBucketedKeys(
-            maskedBandTable(spark, table, which),
-            s"${table}_${which}_compacting", keys, nBuckets)
-          spark.sql(s"DROP TABLE ${table}_$which")
-          spark.sql(s"ALTER TABLE ${table}_${which}_compacting RENAME TO ${table}_$which")
-      }
-      spark.sql(s"DROP TABLE $tsT")
+      val tables = Seq("bands" -> Seq("band", "sig"), "sigs" -> Seq("doc_id"))
+      for ((which, keys) <- tables)
+        graft.sources.Formats.writeBucketedKeys(
+          maskedBandTable(spark, table, which),
+          s"${table}_${which}_compacting", keys, nBuckets)
+      Store.commit(spark, tables.map { case (which, _) =>
+        s"${table}_$which" -> s"${table}_${which}_compacting" }, tsT)
     }
   }
 
@@ -1177,9 +1171,7 @@ object Dedup {
     */
   def appendSubstringIndex(newDocs: DataFrame, table: String): Unit = {
     val spark = newDocs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val m = spark.table(s"${table}_smeta").head()
+    val m = gramMeta(spark, table)
     val (minLen, nBuckets) = (m.getAs[Int]("min_len"), m.getAs[Int]("n_buckets"))
     val sdT = s"${table}_sdocs"
     val newIds = newDocs.select(col("doc_id")).distinct()
@@ -1212,7 +1204,8 @@ object Dedup {
     * while one remains (the refcount edge case the spec pins).
     * Re-deleting the same doc is idempotent while its tombstones
     * live (countDistinct); the physical fold happens at the next
-    * [[compactSubstringIndex]].
+    * [[compactSubstringIndex]], whose [[Store.commit]] drops the
+    * filing only once the new generation is live.
     *
     * Contract, ENFORCED via the `_sdocs` ledger (VERDICT r14 #3 —
     * previously a scaladoc sentence the caller had to trust): `docs`
@@ -1227,9 +1220,7 @@ object Dedup {
     */
   def deleteFromSubstringIndex(docs: DataFrame, table: String): Unit = {
     val spark = docs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val minLen = spark.table(s"${table}_smeta").head().getAs[Int]("min_len")
+    val minLen = gramMeta(spark, table).getAs[Int]("min_len")
     val sdT = s"${table}_sdocs"
     if (spark.catalog.tableExists(sdT)) {
       val unknown = docs.select(col("doc_id")).distinct()
@@ -1243,10 +1234,12 @@ object Dedup {
     }
     // per-doc distinct grams in-row (docGrams) — zero-exchange filing;
     // the mask's countDistinct(doc_id) reads it dup-tolerantly anyway
-    docGrams(docs, minLen)
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_stombstones")
+    Store.file(docGrams(docs, minLen), s"${table}_stombstones")
   }
+
+  /** A gram index's `_smeta` row (see [[Store.meta]]). */
+  private[graft] def gramMeta(spark: SparkSession, table: String): Row =
+    Store.meta(spark, table, "smeta", "substring index", "writeSubstringIndex")
 
   /** The gram scan with the tombstone mask applied — the ONLY way
     * probe consumers read `<table>_grams` (a consumer reading it raw
@@ -1273,19 +1266,18 @@ object Dedup {
     }
   }
 
-  /** Fold accumulated tombstones into the gram index: rewrite the
-    * bucketed table as a NEW generation of net refcounts (write-then-
-    * swap, one linear bucketed pass — never read-and-overwrite in
-    * place; the [[compactBandIndex]] dance), drop the tombstones.
-    * Probes answer identically before and after (the compaction
-    * parity the gate pins), and the per-gram generations collapse to
-    * one row each.
+  /** Fold accumulated tombstones into the gram index: the bucketed
+    * table is rewritten as a staged generation of net refcounts (one
+    * linear bucketed pass — never read-and-overwrite in place) and
+    * swapped in, with the `_sdocs` ledger, by [[Store.commit]], which
+    * drops the tombstones last (a failed commit leaves the previous
+    * generation live with its tombstones pending). Probes answer
+    * identically before and after (the compaction parity the gate
+    * pins), and the per-gram generations collapse to one row each.
     */
   def compactSubstringIndex(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val nBuckets = spark.table(s"${table}_smeta").head().getAs[Int]("n_buckets")
+    val spark = SparkSession.active
+    val nBuckets = gramMeta(spark, table).getAs[Int]("n_buckets")
     val tsT = s"${table}_stombstones"
     if (spark.catalog.tableExists(tsT)) {
       val del = spark.table(tsT)
@@ -1299,23 +1291,17 @@ object Dedup {
         .where(col("n_refs") > 0)
       graft.sources.Formats.writeBucketedKeys(
         net, s"${table}_grams_compacting", Seq("gram"), nBuckets)
-      spark.sql(s"DROP TABLE ${table}_grams")
-      spark.sql(s"ALTER TABLE ${table}_grams_compacting RENAME TO ${table}_grams")
       // folded docs leave the membership ledger: their grams are
       // physically gone, so a later re-delete must be rejected as
       // not-indexed (the refcount-never-negative half of the r14 #3
-      // contract); the tombstone set is takedown-cadence-bounded —
-      // broadcast anti-join
-      if (spark.catalog.tableExists(s"${table}_sdocs")) {
-        val delDocs = spark.table(tsT).select(col("doc_id")).distinct()
+      // contract)
+      val ledger = spark.catalog.tableExists(s"${table}_sdocs")
+      if (ledger)
         graft.sources.Formats.writeBucketedKeys(
-          spark.table(s"${table}_sdocs")
-            .join(broadcast(delDocs), Seq("doc_id"), "left_anti"),
+          Store.mask(spark.table(s"${table}_sdocs"), Store.pending(spark, tsT, "doc_id"), "doc_id"),
           s"${table}_sdocs_compacting", Seq("doc_id"), nBuckets)
-        spark.sql(s"DROP TABLE ${table}_sdocs")
-        spark.sql(s"ALTER TABLE ${table}_sdocs_compacting RENAME TO ${table}_sdocs")
-      }
-      spark.sql(s"DROP TABLE $tsT")
+      Store.commit(spark, (Seq("grams") ++ (if (ledger) Seq("sdocs") else Nil))
+        .map(t => s"${table}_$t" -> s"${table}_${t}_compacting"), tsT)
     }
   }
 
@@ -1330,9 +1316,7 @@ object Dedup {
     */
   def substringSpansAgainstIndex(docs: DataFrame, table: String): DataFrame = {
     val spark = docs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val minLen = spark.table(s"${table}_smeta").head().getAs[Int]("min_len")
+    val minLen = gramMeta(spark, table).getAs[Int]("min_len")
     mergeSpanStarts(
       tokenWindows(docs, minLen)
         .join(maskedGramTable(spark, table), Seq("gram"), "left_semi")

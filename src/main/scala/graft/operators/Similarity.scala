@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExprs
+import graft.sources.Store
 
 /** Embedding similarity search over `Array[Float]` columns.
   *
@@ -320,8 +321,6 @@ object Similarity {
   def cosineTopKStored(spark: org.apache.spark.sql.SparkSession, table: String,
                        nQueries: Int, k: Int): DataFrame = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_nodes"),
-      s"kNN graph '$table' has no ${table}_nodes table — build it with writeKnnGraph")
     val (mNodes, _) = maskedGraphStore(spark, table)
     val e = mNodes.select(col("vec_id"), col("v"))
       .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
@@ -519,9 +518,7 @@ object Similarity {
                                   threshold: Double,
                                   benchMod: Long = 50L): DataFrame = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_nodes"),
-      s"kNN graph '$table' has no ${table}_nodes table — build it with writeKnnGraph")
-    val enc = spark.table(s"${table}_meta").collect().head.getAs[String]("enc")
+    val enc = graphMeta(spark, table).getAs[String]("enc")
     val (mNodes, _) = maskedGraphStore(spark, table)
     // stored nodes already carry the build-time cell — no re-assignment
     val base = mNodes.select(col("vec_id"), col("v"), col("cell"))
@@ -598,8 +595,14 @@ object Similarity {
     */
   private def knnEdges(left: DataFrame, right: DataFrame, k: Int,
                        enc: String, nprobe: Int): DataFrame =
-    knnEdgesProbed(left.select(col("vec_id"), col("v"), col("norm"),
-      explode(expr(s"graft_ivf_cells(v, '$enc', $nprobe)")).as("pcell")), right, k)
+    knnEdgesProbed(ivfProbed(left, enc, nprobe), right, k)
+
+  /** `(vec_id, v, norm)` rows exploded to their `nprobe` nearest cells
+    * under the quantizer `enc` — the flat builds' probe rows.
+    */
+  private def ivfProbed(left: DataFrame, enc: String, nprobe: Int): DataFrame =
+    left.select(col("vec_id"), col("v"), col("norm"),
+      explode(expr(s"graft_ivf_cells(v, '$enc', $nprobe)")).as("pcell"))
 
   /** [[knnEdges]] with the LEFT probe cells supplied as rows
     * `(vec_id, v, norm, pcell)` instead of the flat [[IvfCells]]
@@ -608,17 +611,23 @@ object Similarity {
     * `_probes` table on the append path).
     */
   private def knnEdgesProbed(probed: DataFrame, right: DataFrame,
-                             k: Int): DataFrame = {
+                             k: Int): DataFrame =
+    knnPairs(probed, right)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("nbr")))
+        .cast("long"))
+      .where(col("rank") <= k)
+
+  /** [[knnEdgesProbed]]'s scored pairs `(vec_id, nbr, cos)` before the
+    * top-k window — every probe-cell pair, self-pairs excluded.
+    */
+  private def knnPairs(probed: DataFrame, right: DataFrame): DataFrame = {
     val other = right.select(col("vec_id").as("nbr"),
       col("cell").as("cell_b"), col("v").as("vb"), col("norm").as("nb"))
     val cos = r3(expr("graft_vec_dot(v, vb)") / (col("norm") * col("nb")))
     probed.join(other,
         col("pcell") === col("cell_b") && col("nbr") =!= col("vec_id"))
       .select(col("vec_id"), col("nbr"), cos.as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("nbr")))
-        .cast("long"))
-      .where(col("rank") <= k)
   }
 
   /** Every vector's centroid-graph ROUTED cell candidates: beam-walk
@@ -873,16 +882,15 @@ object Similarity {
     * where the one-shot build's would; old nodes' probe cells come
     * from `_probes` (never re-walked), and the edge merge is the
     * [[appendKnnGraph]] identity: top-k(stored top-k ∪ old-probe ×
-    * delta-cell pairs) = top-k(all old ∪ new candidates).
+    * delta-cell pairs) = top-k(all old ∪ new candidates). As there,
+    * `_edges` swaps through [[Store.commit]] before `_nodes` and
+    * `_probes` append.
     */
   def appendKnnGraphRouted(newVecs: DataFrame, table: String): Unit = {
     val spark = newVecs.sparkSession
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"kNN graph '$table' has no ${table}_meta table — build it with writeKnnGraphRouted")
-    val meta = spark.table(s"${table}_meta").collect().head
-    require(metaIntOr(meta, "k_cent_graph", -1) >= 0 &&
-        meta.schema.fieldNames.contains("routed") && meta.getAs[Boolean]("routed"),
+    val meta = graphMeta(spark, table, "writeKnnGraphRouted")
+    require(metaIntOr(meta, "k_cent_graph", -1) >= 0 && isRouted(meta),
       s"kNN graph '$table' is a FLAT store — append with appendKnnGraph " +
         "(routed append would re-route a flat-assigned graph)")
     val kGraph = meta.getAs[Int]("k_graph")
@@ -908,25 +916,9 @@ object Similarity {
       .select(col("vec_id"), col("cid").as("cell")).join(deltaE, "vec_id")
     val newProbed = asgD.select(col("vec_id"), col("cid").as("pcell"))
       .join(deltaE, "vec_id")
-    val newEdges = knnEdgesProbed(newProbed,
-      oldNodes.unionByName(newAssigned.select(col("vec_id"), col("cell"),
-        col("v"), col("norm"))), kGraph)
     val oldProbed = spark.table(s"${table}_probes")
       .join(oldNodes.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-    val oldNew = knnEdgesProbed(oldProbed, newAssigned, Int.MaxValue)
-      .select(col("vec_id").as("src"), col("nbr"), col("cos"))
-    val merged = spark.table(s"${table}_edges")
-      .select(col("src"), col("nbr"), col("cos"))
-      .unionByName(oldNew)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr"))))
-      .where(col("rank") <= kGraph)
-      .select(col("src"), col("nbr"), col("cos"))
-      .unionByName(newEdges.select(col("vec_id").as("src"), col("nbr"), col("cos")))
-    graft.sources.Formats.writeBucketedKeys(
-      merged, s"${table}_edges_appending", Seq("src"), nBuckets)
-    spark.sql(s"DROP TABLE ${table}_edges")
-    spark.sql(s"ALTER TABLE ${table}_edges_appending RENAME TO ${table}_edges")
+    appendEdges(spark, table, oldProbed, newProbed, oldNodes, newAssigned, kGraph, nBuckets)
     // the nodes/probes appends are independent of each other (and of
     // the finished edge swap) — overlap them; they stay AFTER the
     // staging write, which scans the PRE-append _nodes/_probes
@@ -949,16 +941,15 @@ object Similarity {
     * [[compactKnnGraphRouted]] / [[compactKnnGraphHier]]) re-ranks
     * its candidates among survivors (stored edge lists are
     * k-truncated — the dropped candidate that would back-fill is not
-    * in the store, which is exactly what compaction recomputes).
+    * in the store, which is exactly what compaction recomputes). The
+    * compaction's [[Store.commit]] drops the filing only once the new
+    * generation is live.
     */
   def deleteFromKnnGraph(ids: DataFrame, table: String): Unit = {
     val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_meta") ||
-        spark.catalog.tableExists(s"${table}_hmeta"),
-      s"kNN graph '$table' has no ${table}_meta/_hmeta table — build it first")
-    ids.select(col("vec_id")).distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_gtombstones")
+    if (!spark.catalog.tableExists(s"${table}_hmeta"))
+      graphGuard(spark, table, "meta", "writeKnnGraph or writeKnnGraphHier")
+    Store.file(ids.select(col("vec_id")).distinct(), s"${table}_gtombstones")
   }
 
   /** The stored node/edge frames with the tombstone mask applied —
@@ -966,174 +957,146 @@ object Similarity {
     * and filtered walks, the exact and audit reads) see a graph store
     * (a consumer reading raw would serve taken-down vectors); the
     * in-task walk of [[annGraphSearchStored]] masks the collected
-    * [[graphStore]] rows on the driver instead. `extraTs` folds in
+    * [[graphStore]] rows on the driver instead. A node is masked by its
+    * id, an edge by either end ([[Store.mask]]). `extraTs` folds in
     * tombstones filed at a DIFFERENT table — the hier walk passes its
     * root `_gtombstones` so one filing masks every level (and a filing
     * made directly against a level table, e.g. `t_l0`, masks through
     * the level's own table — ADVICE r14).
     */
-  private def maskedGraphStore(spark: org.apache.spark.sql.SparkSession,
-                               table: String,
+  private def maskedGraphStore(spark: SparkSession, table: String,
                                extraTs: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val (nodes, edges, ts) = graphStore(spark, table, extraTs)
-    ts.fold((nodes, edges))(tombstoned(nodes, edges, _))
+    (Store.mask(nodes, ts, "vec_id"), Store.mask(edges, ts, "vec_id", "src", "nbr"))
   }
 
   /** A graph store's raw `_nodes` and `_edges` frames and its pending
     * tombstone ids (`_gtombstones` ∪ `extraTs`), if any.
     */
-  private def graphStore(spark: org.apache.spark.sql.SparkSession, table: String,
+  private def graphStore(spark: SparkSession, table: String,
                          extraTs: Option[DataFrame] = None)
       : (DataFrame, DataFrame, Option[DataFrame]) = {
-    val tsT = s"${table}_gtombstones"
-    val own = if (spark.catalog.tableExists(tsT))
-      Some(spark.table(tsT).select(col("vec_id"))) else None
+    graphGuard(spark, table, "edges")
     (spark.table(s"${table}_nodes"), spark.table(s"${table}_edges"),
-      (own ++ extraTs).reduceOption(_ unionByName _))
+      (Store.pending(spark, s"${table}_gtombstones", "vec_id") ++ extraTs)
+        .reduceOption(_ unionByName _))
   }
 
-  /** `nodes` (vec_id, …) and `edges` (src, nbr, …, no vec_id) without
-    * the rows tombstoned in `ts` (vec_id): a node by its id, an edge by
-    * either end. Tombstones are takedown-cadence-bounded: ONE broadcast
-    * of the ids serves all three anti-joins (an anti-join ignores
-    * duplicate right rows, so no `distinct`).
+  /** A kNN-graph store's guard ([[Store.guard]]): `<table>_<suffix>`. */
+  private def graphGuard(spark: SparkSession, table: String, suffix: String,
+                         builder: String = "writeKnnGraph"): String =
+    Store.guard(spark, table, suffix, "kNN graph", builder)
+
+  /** A kNN-graph store's `_meta` row. */
+  private def graphMeta(spark: SparkSession, table: String,
+                        builder: String = "writeKnnGraph"): Row =
+    Store.meta(spark, table, "meta", "kNN graph", builder)
+
+  /** Whether a graph `_meta` (or hier `_hmeta`) row pins routing state. */
+  private def isRouted(meta: Row): Boolean =
+    meta.schema.fieldNames.contains("routed") && meta.getAs[Boolean]("routed")
+
+  /** The edge merge of [[appendKnnGraph]] and [[appendKnnGraphRouted]]
+    * — the incremental-maintenance identity. The stored lists, the old
+    * nodes' pairs with the new nodes in their probe cells and the new
+    * nodes' pairs with every node in theirs enter ONE top-`kGraph` rank
+    * per src, unranked: a stored src keeps top-k(stored top-k ∪ its new
+    * candidates), a new src gets the list the one-shot build would
+    * give it. The result commits as the next `_edges` generation
+    * ([[Store.commit]]). Probe rows are (vec_id, v, norm, pcell); node
+    * rows (vec_id, cell, v, norm).
     */
-  private def tombstoned(nodes: DataFrame, edges: DataFrame,
-                         ts: DataFrame): (DataFrame, DataFrame) = {
-    val t = broadcast(ts.select(col("vec_id")))
-    (nodes.join(t, Seq("vec_id"), "left_anti"),
-      edges.join(t, col("src") === col("vec_id"), "left_anti")
-        .join(t, col("nbr") === col("vec_id"), "left_anti"))
+  private def appendEdges(spark: SparkSession, table: String,
+                          oldProbed: DataFrame, newProbed: DataFrame,
+                          oldNodes: DataFrame, newNodes: DataFrame,
+                          kGraph: Int, nBuckets: Int): Unit = {
+    val node = Seq(col("vec_id"), col("cell"), col("v"), col("norm"))
+    val pairs = knnPairs(oldProbed, newNodes).unionByName(knnPairs(newProbed,
+      oldNodes.select(node: _*).unionByName(newNodes.select(node: _*))))
+    val merged = spark.table(s"${table}_edges")
+      .select(col("src"), col("nbr"), col("cos"))
+      .unionByName(pairs.select(col("vec_id").as("src"), col("nbr"), col("cos")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr"))))
+      .where(col("rank") <= kGraph)
+      .select(col("src"), col("nbr"), col("cos"))
+    graft.sources.Formats.writeBucketedKeys(
+      merged, s"${table}_edges_appending", Seq("src"), nBuckets)
+    Store.commit(spark, Seq(s"${table}_edges" -> s"${table}_edges_appending"))
   }
 
-  /** Fold accumulated tombstones into a FLAT graph store — the
-    * [[compactKnnGraphRouted]] discipline without a `_probes` table:
-    * an affected src's probe cells recompute from the PINNED
-    * quantizer in `_meta` (`graft_ivf_cells`, exactly the build's
-    * assignment rule), so the re-ranked candidate set IS the one the
-    * survivor one-shot [[writeKnnGraph]] would score. Unaffected
-    * srcs' stored lists are provably unchanged (removing a non-top-k
-    * candidate can never promote one); nodes drop the removed rows
-    * via the write-then-swap dance; tombstones drop. Result ≡ the
-    * one-shot build over the survivors whenever the removal spares
-    * the codebook ids (the quantizer is pinned — a rebuild would
-    * otherwise seed different centroids; the spec pins the
-    * spared-codebook identity).
+  /** Fold accumulated tombstones into a FLAT graph store: survivors
+    * whose stored edges pointed at a removed node get their edge lists
+    * RE-RANKED among survivors; an affected src's probe cells recompute
+    * from the PINNED quantizer in `_meta` (`graft_ivf_cells`, exactly
+    * the build's assignment rule), so the re-ranked candidate set IS
+    * the one the survivor one-shot [[writeKnnGraph]] would score.
+    * Unaffected srcs' stored lists are provably unchanged (removing a
+    * non-top-k candidate can never promote one). `_edges` and `_nodes`
+    * are written as staged tables and swapped in by [[Store.commit]];
+    * a failed commit leaves the previous generation live with its
+    * tombstones pending. Result ≡ the one-shot build over the survivors
+    * whenever the removal spares the codebook ids (the quantizer is
+    * pinned — a rebuild would otherwise seed different centroids; the
+    * spec pins the spared-codebook identity).
     */
-  def compactKnnGraph(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
+  def compactKnnGraph(table: String): Unit = compactGraph(table, routed = false)
+
+  /** [[compactKnnGraph]] for a ROUTED graph store: an affected src's
+    * probe cells come from its `_probes` rows (the exact candidate set
+    * the one-shot [[writeKnnGraphRouted]] would score), and `_probes`
+    * drops the removed rows in the same [[Store.commit]]. The codebook
+    * is PINNED in `_cvecs` — removing a centroid's node row keeps
+    * routing identical, but a one-shot REBUILD would then seed
+    * different centroids; the spec pins the spared-codebook identity.
+    */
+  def compactKnnGraphRouted(table: String): Unit = compactGraph(table, routed = true)
+
+  private def compactGraph(table: String, routed: Boolean): Unit = {
+    val spark = SparkSession.active
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"kNN graph '$table' has no ${table}_meta table — build it with writeKnnGraph")
-    val meta = spark.table(s"${table}_meta").collect().head
-    require(!meta.schema.fieldNames.contains("routed") || !meta.getAs[Boolean]("routed"),
-      s"kNN graph '$table' is a ROUTED store — compact with compactKnnGraphRouted")
+    val meta = graphMeta(spark, table, if (routed) "writeKnnGraphRouted" else "writeKnnGraph")
+    require(isRouted(meta) == routed,
+      if (routed) s"kNN graph '$table' is a FLAT store — compactKnnGraphRouted needs the " +
+        "_probes table"
+      else s"kNN graph '$table' is a ROUTED store — compact with compactKnnGraphRouted")
     val tsT = s"${table}_gtombstones"
     if (!spark.catalog.tableExists(tsT)) return
     val kGraph = meta.getAs[Int]("k_graph")
     val nBuckets = meta.getAs[Int]("n_buckets")
-    val nprobe = metaIntOr(meta, "nprobe", 1)
-    val enc = meta.getAs[String]("enc")
-    val ts = spark.table(tsT).select(col("vec_id")).localCheckpoint()
-    val nodes = spark.table(s"${table}_nodes")
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
+    val tsIds = spark.table(tsT).select(col("vec_id")).localCheckpoint()
+    val ts = Some(tsIds)
+    val nodes = Store.mask(spark.table(s"${table}_nodes"), ts, "vec_id")
       .select(col("vec_id"), col("cell"), col("v"))
       .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
       .localCheckpoint()
+    val probes = if (!routed) None
+      else Some(Store.mask(spark.table(s"${table}_probes"), ts, "vec_id").localCheckpoint())
     // affected = surviving srcs with >= 1 stored edge into the removed
     // set: only THEIR candidate rankings could change
-    val edges = spark.table(s"${table}_edges")
-      .join(broadcast(ts.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-    val affected = edges
-      .join(broadcast(ts.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
+    val edges = Store.mask(spark.table(s"${table}_edges"), ts, "vec_id", "src")
+    val affected = edges.join(broadcast(tsIds), col("nbr") === col("vec_id"), "left_semi")
       .select(col("src")).distinct()
-    val rebuilt = knnEdgesProbed(
-      nodes.join(affected.select(col("src").as("vec_id")), "vec_id")
-        .select(col("vec_id"), col("v"), col("norm"),
-          explode(expr(s"graft_ivf_cells(v, '$enc', $nprobe)")).as("pcell")),
-      nodes, kGraph)
+    val affectedIds = affected.select(col("src").as("vec_id"))
+    val probed = probes match {
+      case Some(p) => p.join(affectedIds, "vec_id").select(col("vec_id"), col("pcell"))
+        .join(nodes.select(col("vec_id"), col("v"), col("norm")), "vec_id")
+      case None => ivfProbed(nodes.join(affectedIds, "vec_id"),
+        meta.getAs[String]("enc"), metaIntOr(meta, "nprobe", 1))
+    }
+    val rebuilt = knnEdgesProbed(probed, nodes, kGraph)
       .select(col("vec_id").as("src"), col("nbr"), col("cos"))
-    val kept = edges
-      .join(broadcast(ts.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_anti")
+    val kept = Store.mask(edges, ts, "vec_id", "nbr")
       .join(affected, Seq("src"), "left_anti")
       .select(col("src"), col("nbr"), col("cos"))
-    inParallel(
-      () => graft.sources.Formats.writeBucketedKeys(
-        kept.unionByName(rebuilt), s"${table}_edges_compacting", Seq("src"), nBuckets),
-      () => graft.sources.Formats.writeBucketedKeys(
-        nodes.select(col("vec_id"), col("cell"), col("v")),
-        s"${table}_nodes_compacting", Seq("cell"), nBuckets))
-    for (t <- Seq("edges", "nodes")) {
-      spark.sql(s"DROP TABLE ${table}_$t")
-      spark.sql(s"ALTER TABLE ${table}_${t}_compacting RENAME TO ${table}_$t")
-    }
-    spark.sql(s"DROP TABLE $tsT")
-  }
-
-  /** Fold accumulated tombstones into a ROUTED graph store: survivors
-    * whose stored edges pointed at a removed node get their edge
-    * lists RE-RANKED among survivors (their `_probes` cells joined to
-    * surviving assigned nodes — the exact candidate set the one-shot
-    * build would score; unaffected srcs' lists are provably unchanged
-    * because removing a non-top-k candidate can never promote one),
-    * nodes/probes drop the removed rows via the write-then-swap
-    * dance, tombstones drop. Result ≡ the one-shot
-    * [[writeKnnGraphRouted]] over the survivors whenever the removal
-    * spares the codebook ids (the codebook is PINNED in `_cvecs` —
-    * removing a centroid's node row keeps routing identical, but a
-    * one-shot REBUILD would then seed different centroids; the spec
-    * pins the spared-codebook identity).
-    */
-  def compactKnnGraphRouted(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"kNN graph '$table' has no ${table}_meta table — build it with writeKnnGraphRouted")
-    val meta = spark.table(s"${table}_meta").collect().head
-    require(meta.schema.fieldNames.contains("routed") && meta.getAs[Boolean]("routed"),
-      s"kNN graph '$table' is a FLAT store — compactKnnGraphRouted needs the _probes table")
-    val tsT = s"${table}_gtombstones"
-    if (!spark.catalog.tableExists(tsT)) return
-    val kGraph = meta.getAs[Int]("k_graph")
-    val nBuckets = meta.getAs[Int]("n_buckets")
-    val ts = spark.table(tsT).select(col("vec_id")).localCheckpoint()
-    val nodes = spark.table(s"${table}_nodes")
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cell"), col("v"))
-      .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
-      .localCheckpoint()
-    val probes = spark.table(s"${table}_probes")
-      .join(broadcast(ts), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    // affected = surviving srcs with >= 1 stored edge into the removed
-    // set: only THEIR candidate rankings could change
-    val edges = spark.table(s"${table}_edges")
-      .join(broadcast(ts.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-    val affected = edges
-      .join(broadcast(ts.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-      .select(col("src")).distinct()
-    val rebuilt = knnEdgesProbed(
-      probes.join(affected.select(col("src").as("vec_id")), "vec_id")
-        .select(col("vec_id"), col("pcell"))
-        .join(nodes.select(col("vec_id"), col("v"), col("norm")), "vec_id"),
-      nodes, kGraph)
-      .select(col("vec_id").as("src"), col("nbr"), col("cos"))
-    val kept = edges
-      .join(broadcast(ts.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_anti")
-      .join(affected, Seq("src"), "left_anti")
-      .select(col("src"), col("nbr"), col("cos"))
-    inParallel(
-      () => graft.sources.Formats.writeBucketedKeys(
-        kept.unionByName(rebuilt), s"${table}_edges_compacting", Seq("src"), nBuckets),
-      () => graft.sources.Formats.writeBucketedKeys(
-        nodes.select(col("vec_id"), col("cell"), col("v")),
-        s"${table}_nodes_compacting", Seq("cell"), nBuckets),
-      () => graft.sources.Formats.writeBucketedKeys(
-        probes, s"${table}_probes_compacting", Seq("pcell"), nBuckets))
-    for (t <- Seq("edges", "nodes", "probes")) {
-      spark.sql(s"DROP TABLE ${table}_$t")
-      spark.sql(s"ALTER TABLE ${table}_${t}_compacting RENAME TO ${table}_$t")
-    }
-    spark.sql(s"DROP TABLE $tsT")
+    def staged(t: String) = s"${table}_${t}_compacting"
+    def write(df: DataFrame, t: String, key: String) = () =>
+      graft.sources.Formats.writeBucketedKeys(df, staged(t), Seq(key), nBuckets)
+    inParallel(Seq(write(kept.unionByName(rebuilt), "edges", "src"),
+      write(nodes.select(col("vec_id"), col("cell"), col("v")), "nodes", "cell")) ++
+      probes.map(write(_, "probes", "pcell")): _*)
+    Store.commit(spark, (Seq("edges", "nodes") ++ probes.map(_ => "probes"))
+      .map(t => s"${table}_$t" -> staged(t)), tsT)
   }
 
   /** Graph-expansion beam search over the [[knnGraph]] (the NSW/HNSW
@@ -1192,11 +1155,12 @@ object Similarity {
     *     job — two jobs with the consumer's, whatever `rounds` is and
     *     whether tombstones are pending or not.
     *   - **Round loop** above the budget, over the anti-join-masked
-    *     frames ([[tombstoned]]).
+    *     frames ([[Store.mask]]).
     */
   private def graphWalk(e: DataFrame, graph: DataFrame,
                         nQueries: Int, beam: Int, rounds: Int, k: Int,
                         tombs: Option[DataFrame] = None): DataFrame = {
+    checkWalk(beam, rounds, k)
     def seeds(e: DataFrame) = e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"),
         col("vec_id").as("vid"))
@@ -1208,7 +1172,8 @@ object Similarity {
         BroadcastWalk.ofQueries(e, graph, tombs, nQueries, walkCos,
           walkRounds(e, graph, seeds(e), beam, 1, k).schema, beam, rounds, k)
       else {
-        val (me, mg) = tombs.fold((e, graph))(tombstoned(e, graph, _))
+        val (me, mg) = (Store.mask(e, tombs, "vec_id"),
+          Store.mask(graph, tombs, "vec_id", "src", "nbr"))
         walkRounds(me, mg, seeds(me), beam, rounds, k)
       }
     walked.select(col("qid"), col("vid"), col("cos"), col("rank"))
@@ -1243,6 +1208,7 @@ object Similarity {
   private def graphWalkScored(e: DataFrame, adj: DataFrame,
                               seeds: DataFrame, beam: Int,
                               rounds: Int, k: Int): DataFrame = {
+    checkWalk(beam, rounds, k)
     // the lazy one-round loop (analysed, never run) carries the loop's
     // exact output schema: later rounds union frames of the same types
     // and nullability
@@ -1250,6 +1216,15 @@ object Similarity {
       BroadcastWalk(e, adj, seeds, walkCos,
         walkRounds(e, adj, seeds, beam, 1, k).schema, beam, rounds, k)
     else walkRounds(e, adj, seeds, beam, rounds, k)
+  }
+
+  /** The walk arguments both paths require, checked before a path is
+    * picked: the in-task path would otherwise walk `rounds = 0` as one
+    * round where the loop refuses it.
+    */
+  private def checkWalk(beam: Int, rounds: Int, k: Int): Unit = {
+    require(k <= beam, s"annGraphSearch: k=$k must be <= beam=$beam")
+    require(rounds >= 1, s"annGraphSearch: rounds must be >= 1, got $rounds")
   }
 
   /** A walk's pair score from node columns (v, norm) and query columns
@@ -1292,8 +1267,6 @@ object Similarity {
   private def walkRounds(e: DataFrame, adj: DataFrame,
                          seeds: DataFrame, beam: Int,
                          rounds: Int, k: Int): DataFrame = {
-    require(k <= beam, s"annGraphSearch: k=$k must be <= beam=$beam")
-    require(rounds >= 1, s"annGraphSearch: rounds must be >= 1, got $rounds")
     // every frontier/expansion frame is WALK-BUDGET-bounded at any
     // corpus scale (the serving-path contract) — broadcast it
     // EXPLICITLY so the corpus-sized node/edge scans are never
@@ -1411,9 +1384,7 @@ object Similarity {
     */
   def writeGraphNodeLabels(embeddings: DataFrame, table: String): Unit = {
     val spark = embeddings.sparkSession
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"kNN graph '$table' has no ${table}_meta table — build it with writeKnnGraph")
-    val nBuckets = spark.table(s"${table}_meta").head().getAs[Int]("n_buckets")
+    val nBuckets = graphMeta(spark, table).getAs[Int]("n_buckets")
     graft.sources.Formats.writeBucketedKeys(
       embeddings.where(col("embedding").isNotNull)
         .select(col("vec_id"), col("label")),
@@ -1430,9 +1401,7 @@ object Similarity {
     */
   def appendGraphNodeLabels(newVecs: DataFrame, table: String): Unit = {
     val spark = newVecs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_nlabels"),
-      s"graph store '$table' has no ${table}_nlabels table — persist node " +
-        "labels with writeGraphNodeLabels before appending to them")
+    Store.guard(spark, table, "nlabels", "graph store", "writeGraphNodeLabels")
     val nBuckets = spark.table(s"${table}_meta").head().getAs[Int]("n_buckets")
     val fresh = newVecs.where(col("embedding").isNotNull)
       .select(col("vec_id"), col("label"))
@@ -1474,11 +1443,8 @@ object Similarity {
                                    rounds: Int, k: Int,
                                    nLabels: Int): DataFrame = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_edges"),
-      s"kNN graph '$table' has no ${table}_edges table — build it with writeKnnGraph")
-    require(spark.catalog.tableExists(s"${table}_nlabels"),
-      s"graph store '$table' has no ${table}_nlabels table — persist node " +
-        "labels with writeGraphNodeLabels before filtered serving")
+    graphGuard(spark, table, "edges")
+    Store.guard(spark, table, "nlabels", "graph store", "writeGraphNodeLabels")
     require(nLabels >= 1, s"annGraphSearchFilteredStored: need nLabels >= 1, got $nLabels")
     require(k <= beam, s"annGraphSearchFilteredStored: k=$k must be <= beam=$beam")
     require(rounds >= 1, s"annGraphSearchFilteredStored: rounds must be >= 1, got $rounds")
@@ -1630,8 +1596,6 @@ object Similarity {
   def annGraphReachabilityStored(spark: org.apache.spark.sql.SparkSession,
                                  table: String): DataFrame = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_edges"),
-      s"kNN graph '$table' has no ${table}_edges table — build it with writeKnnGraph")
     val (mNodes, mEdges) = maskedGraphStore(spark, table)
     reachabilityReport(spark, mNodes.select(col("vec_id")),
       mEdges.select(col("src"), col("nbr")))
@@ -1903,9 +1867,11 @@ object Similarity {
     * candidates can never promote them. New vectors rank against
     * (stored ∪ delta) same-cell nodes; both sides assign cells with
     * the STORED quantizer (meta), so a delta can't silently re-cluster
-    * the graph. Edges rewrite via the staging + RENAME dance (the
-    * [[compactAnnIndex]] convention — Spark refuses an in-place
-    * overwrite of a table the plan reads); nodes append in place.
+    * the graph. Edges are written as a staged table and swapped in by
+    * [[Store.commit]] (Spark refuses an in-place overwrite of a table
+    * the plan reads); a failed commit leaves the previous `_edges`
+    * live. Nodes append in place AFTER the swap, so a failure between
+    * the two leaves edges that point at nodes the store lacks.
     *
     * Cost: |stored edges| (k-bounded per node) + nprobe·Σ_cell
     * old_c·new_c + nprobe·new_c² — the delta's share of the pair
@@ -1914,12 +1880,10 @@ object Similarity {
   def appendKnnGraph(newVecs: DataFrame, table: String): Unit = {
     val spark = newVecs.sparkSession
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"kNN graph '$table' has no ${table}_meta table — build it with writeKnnGraph")
-    val meta = spark.table(s"${table}_meta").collect().head
+    val meta = graphMeta(spark, table)
     // a ROUTED store's cells came from the centroid-graph walk; a flat
     // IvfCells append would silently re-cluster it
-    require(!meta.schema.fieldNames.contains("routed") || !meta.getAs[Boolean]("routed"),
+    require(!isRouted(meta),
       s"kNN graph '$table' is a ROUTED store — append with appendKnnGraphRouted")
     val kGraph = meta.getAs[Int]("k_graph")
     val nBuckets = meta.getAs[Int]("n_buckets")
@@ -1936,26 +1900,8 @@ object Similarity {
     val oldNodes = spark.table(s"${table}_nodes")
       .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
       .select(col("vec_id"), col("cell"), col("v"), col("norm"))
-    // new nodes rank against everything in their probe cells (old
-    // and new alike)
-    val newEdges = knnEdges(newAssigned,
-      oldNodes.unionByName(newAssigned), kGraph, enc, nprobe)
-    // old nodes: stored top-k merged with their probe-cell new pairs,
-    // re-ranked — the incremental-maintenance identity
-    val oldNew = knnEdges(oldNodes, newAssigned, Int.MaxValue, enc, nprobe)
-      .select(col("vec_id").as("src"), col("nbr"), col("cos"))
-    val merged = spark.table(s"${table}_edges")
-      .select(col("src"), col("nbr"), col("cos"))
-      .unionByName(oldNew)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr"))))
-      .where(col("rank") <= kGraph)
-      .select(col("src"), col("nbr"), col("cos"))
-      .unionByName(newEdges.select(col("vec_id").as("src"), col("nbr"), col("cos")))
-    graft.sources.Formats.writeBucketedKeys(
-      merged, s"${table}_edges_appending", Seq("src"), nBuckets)
-    spark.sql(s"DROP TABLE ${table}_edges")
-    spark.sql(s"ALTER TABLE ${table}_edges_appending RENAME TO ${table}_edges")
+    appendEdges(spark, table, ivfProbed(oldNodes, enc, nprobe),
+      ivfProbed(newAssigned, enc, nprobe), oldNodes, newAssigned, kGraph, nBuckets)
     graft.sources.Formats.writeBucketedKeys(
       newAssigned.select(col("vec_id"), col("cell"), col("v")),
       s"${table}_nodes", Seq("cell"), nBuckets, mode = "append")
@@ -1985,8 +1931,6 @@ object Similarity {
                            nQueries: Int, beam: Int, rounds: Int,
                            k: Int): DataFrame = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_edges"),
-      s"kNN graph '$table' has no ${table}_edges table — build it with writeKnnGraph")
     val (nodes, edges, tombs) = graphStore(spark, table)
     graphWalk(nodes.select(col("vec_id"), col("v"))
         .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)"))),
@@ -2124,11 +2068,15 @@ object Similarity {
     }
   }
 
+  /** A hier graph store's `_hmeta` row. */
+  private def hierMeta(spark: SparkSession, table: String): Row =
+    Store.meta(spark, table, "hmeta", "hier graph", "writeKnnGraphHier")
+
   /** The routed budget a hier store was built with, if any — read
     * defensively so pre-routing stores stay flat.
     */
-  private def hmetaRoute(hm: org.apache.spark.sql.Row): Option[(Int, Int, Int)] =
-    if (hm.schema.fieldNames.contains("routed") && hm.getAs[Boolean]("routed"))
+  private def hmetaRoute(hm: Row): Option[(Int, Int, Int)] =
+    if (isRouted(hm))
       Some((hm.getAs[Int]("k_cent_graph"), hm.getAs[Int]("beam_route"),
         hm.getAs[Int]("rounds_route")))
     else None
@@ -2144,13 +2092,12 @@ object Similarity {
     * hier build because each level's append is and the entry is a
     * pure min. Deltas with NO sampled member at a level leave that
     * level untouched (an append must not be able to empty-handedly
-    * rewrite a layer).
+    * rewrite a layer). Each level's `_edges` swaps through
+    * [[Store.commit]] as in [[appendKnnGraph]].
     */
   def appendKnnGraphHier(newVecs: DataFrame, table: String): Unit = {
     val spark = newVecs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_hmeta"),
-      s"hier graph '$table' has no ${table}_hmeta table — build it with writeKnnGraphHier")
-    val hm = spark.table(s"${table}_hmeta").collect().head
+    val hm = hierMeta(spark, table)
     val (keep, nSample, entry) = (hm.getAs[Int]("keep"),
       hm.getAs[Int]("n_sample"), hm.getAs[Long]("entry"))
     // a two-layer store written before the n_layers column existed
@@ -2225,13 +2172,10 @@ object Similarity {
                            table: String, nQueries: Int, beam: Int,
                            rounds: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     VectorExprs.register(spark)
-    require(spark.catalog.tableExists(s"${table}_hmeta"),
-      s"hier graph '$table' has no ${table}_hmeta table — build it with writeKnnGraphHier")
-    val hm = spark.table(s"${table}_hmeta").head()
+    val hm = hierMeta(spark, table)
     val pinnedEntry = hm.getAs[Long]("entry")
     val nLayers = metaIntOr(hm, "n_layers", 2)
-    val rootTs = if (spark.catalog.tableExists(s"${table}_gtombstones"))
-      Some(spark.table(s"${table}_gtombstones").select(col("vec_id"))) else None
+    val rootTs = Store.pending(spark, s"${table}_gtombstones", "vec_id")
     def masked(lvl: Int): (DataFrame, DataFrame) = {
       val (n, e) = maskedGraphStore(spark, s"${table}_l$lvl", rootTs)
       (n.select(col("vec_id"), col("v"))
@@ -2286,10 +2230,8 @@ object Similarity {
                                        table: String, nQueries: Int,
                                        beam: Int, rounds: Int, k: Int,
                                        nLabels: Int): DataFrame = {
-    require(spark.catalog.tableExists(s"${table}_l0_nlabels"),
-      s"hier graph '$table' has no ${table}_l0_nlabels table — persist node " +
-        "labels with writeGraphNodeLabels against the level-0 table " +
-        s"('${table}_l0') before filtered serving")
+    Store.guard(spark, table, "l0_nlabels", "hier graph",
+      s"writeGraphNodeLabels against the level-0 table '${table}_l0'")
     require(nLabels >= 1,
       s"annGraphSearchHierFilteredStored: need nLabels >= 1, got $nLabels")
     val (e0, g0, _, seeds) = hierNavigate(spark, table, nQueries, beam, rounds)
@@ -2332,31 +2274,26 @@ object Similarity {
     * and the entry recomputes as the min surviving top-level node —
     * exactly the one-shot [[writeKnnGraphHier]] entry rule. Result ≡
     * the one-shot hier build over the survivors whenever the removal
-    * spares each level's codebook ids (spec-pinned).
+    * spares each level's codebook ids (spec-pinned). Each level commits
+    * through [[Store.commit]]; a level whose commit fails keeps its
+    * previous generation, and the root filing stays pending, so a
+    * retry folds it again.
     */
   def compactKnnGraphHier(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_hmeta"),
-      s"hier graph '$table' has no ${table}_hmeta table — build it with writeKnnGraphHier")
-    val hm = spark.table(s"${table}_hmeta").head()
+    val spark = SparkSession.active
+    val hm = hierMeta(spark, table)
     val (keep, nSample) = (hm.getAs[Int]("keep"), hm.getAs[Int]("n_sample"))
     val nLayers = metaIntOr(hm, "n_layers", 2)
     val rootTsT = s"${table}_gtombstones"
-    val rootTs = if (spark.catalog.tableExists(rootTsT))
-      Some(spark.table(rootTsT).select(col("vec_id")).localCheckpoint())
-    else None
+    val rootTs = Store.pending(spark, rootTsT, "vec_id").map(_.localCheckpoint())
     // per-level fold + compaction touches DISJOINT table families —
     // run the levels concurrently (the hier build/append discipline)
     inParallel((0 until nLayers).map { lvl => () =>
       val lt = s"${table}_l$lvl"
-      rootTs.foreach(_.write.mode("append").format("parquet")
-        .saveAsTable(s"${lt}_gtombstones"))
-      val lm = spark.table(s"${lt}_meta").head()
-      if (lm.schema.fieldNames.contains("routed") && lm.getAs[Boolean]("routed"))
-        compactKnnGraphRouted(lt)
-      else compactKnnGraph(lt)
+      rootTs.foreach(Store.file(_, s"${lt}_gtombstones"))
+      compactGraph(lt, isRouted(spark.table(s"${lt}_meta").head()))
     }: _*)
-    if (spark.catalog.tableExists(rootTsT)) spark.sql(s"DROP TABLE $rootTsT")
+    spark.sql(s"DROP TABLE IF EXISTS $rootTsT")
     val entryRow = spark.table(s"${table}_l${nLayers - 1}_nodes")
       .agg(min(col("vec_id"))).head()
     require(!entryRow.isNullAt(0),
@@ -4355,12 +4292,9 @@ object Similarity {
     * meta table must exist; returns (m, nBuckets, encIvf, encPq,
     * sqMins, sqScales).
     */
-  private def annIndexMeta(spark: org.apache.spark.sql.SparkSession, table: String)
+  private def annIndexMeta(spark: SparkSession, table: String)
       : (Int, Int, String, String, Array[Double], Array[Double]) = {
-    val metaT = s"${table}_meta"
-    require(spark.catalog.tableExists(metaT),
-      s"ANN index '$table' has no $metaT table — (re)build it with writeAnnIndex")
-    val r = spark.table(metaT).collect().head
+    val r = Store.meta(spark, table, "meta", "ANN index", "writeAnnIndex")
     (r.getAs[Int]("m"), r.getAs[Int]("n_buckets"),
       r.getAs[String]("enc_ivf"), r.getAs[String]("enc_pq"),
       r.getAs[scala.collection.Seq[Double]]("sq_mins").toArray,
@@ -4424,7 +4358,8 @@ object Similarity {
     * the ids land in `<table>_tombstones` (append-mode, so deletes
     * accumulate across calls) and every probe/reconstruction path
     * anti-joins them out until [[compactAnnIndex]] folds them into
-    * the data. At 100 TB this is the only viable delete: rewriting
+    * the data (its [[Store.commit]] drops them only once the new
+    * generation is live). At 100 TB this is the only viable delete: rewriting
     * the bucketed codes table per takedown request re-shuffles the
     * corpus; a broadcast anti-join on the (small, bounded by
     * compaction cadence) tombstone set costs one map-side pass.
@@ -4433,50 +4368,38 @@ object Similarity {
   def deleteFromAnnIndex(ids: DataFrame, table: String): Unit = {
     val spark = ids.sparkSession
     annIndexMeta(spark, table) // eager guard: no tombstones for a non-index
-    ids.select(col("vec_id")).write.mode("append")
-      .format("parquet").saveAsTable(s"${table}_tombstones")
+    Store.file(ids.select(col("vec_id")), s"${table}_tombstones")
   }
 
-  /** Anti-join the tombstone set out of an index scan (no-op — and a
-    * byte-identical plan — when the index has never seen a delete).
-    * Broadcast by contract: tombstones are bounded by the compaction
-    * cadence, not the corpus.
+  /** The index's `_codes` scan with the tombstone mask applied
+    * ([[Store.mask]]; the plain scan — a byte-identical plan — when
+    * the index has never seen a delete).
     */
-  private def maskTombstones(codes: DataFrame, table: String): DataFrame = {
-    val spark = codes.sparkSession
-    val tsT = s"${table}_tombstones"
-    // no distinct on the tombstone side: an anti-join is indifferent
-    // to duplicate keys, and the distinct would cost a shuffle INSIDE
-    // the broadcast subtree (the census spec counts it)
-    if (spark.catalog.tableExists(tsT))
-      codes.join(broadcast(spark.table(tsT).select(col("vec_id"))),
-        Seq("vec_id"), "left_anti")
-    else codes
-  }
+  private def maskedCodes(spark: SparkSession, table: String): DataFrame =
+    Store.mask(spark.table(s"${table}_codes"),
+      Store.pending(spark, s"${table}_tombstones", "vec_id"), "vec_id")
 
   /** Fold accumulated tombstones into the stored index: rewrite the
-    * surviving rows as a NEW generation of the bucketed codes table,
-    * swap it in, drop the tombstones. Write-to-new-then-swap (never
-    * read-and-overwrite in place): the survivors scan streams from the
-    * old generation while the new one is written, so the rewrite is
-    * one bucketed pass with no intermediate materialization — the
-    * shape that still works when the codes table is itself TB-scale.
+    * surviving rows as a staged generation of the bucketed codes table
+    * and swap it in with [[Store.commit]], which drops the tombstones
+    * last (a failed commit leaves the previous generation live with
+    * its tombstones pending). The survivors scan streams from the old
+    * generation while the new one is written, so the rewrite is one
+    * bucketed pass with no intermediate materialization — the shape
+    * that still works when the codes table is itself TB-scale.
     * Codebooks/meta are untouched (removing vectors never retrains —
     * the FAISS convention), so a compacted index answers probes
     * bit-identically to one built on the survivor set with the same
     * train block.
     */
   def compactAnnIndex(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val (_, nBuckets, _, _, _, _) = annIndexMeta(spark, table)
     val tsT = s"${table}_tombstones"
     if (spark.catalog.tableExists(tsT)) {
       graft.sources.Formats.writeBucketedKeys(
-        maskTombstones(spark.table(s"${table}_codes"), table),
-        s"${table}_codes_compacting", Seq("cell"), nBuckets)
-      spark.sql(s"DROP TABLE ${table}_codes")
-      spark.sql(s"ALTER TABLE ${table}_codes_compacting RENAME TO ${table}_codes")
-      spark.sql(s"DROP TABLE $tsT")
+        maskedCodes(spark, table), s"${table}_codes_compacting", Seq("cell"), nBuckets)
+      Store.commit(spark, Seq(s"${table}_codes" -> s"${table}_codes_compacting"), tsT)
     }
   }
 
@@ -4523,14 +4446,14 @@ object Similarity {
     // (census spec unaffected).
     val codeRows = labelMod match {
       case Some(n) =>
-        maskTombstones(spark.table(s"${table}_codes"), table)
+        maskedCodes(spark, table)
           .select(col("vec_id").as("vid"), col("cell"), col("label"), col("codes"))
           .join(broadcast(qcells), Seq("cell"))
           .where(col("label") === pmod(col("qid"), lit(n.toLong)).cast("int"))
           .select(col("qid"), col("vid"),
             posexplode(col("codes")).as(Seq("s", "code")))
       case None =>
-        maskTombstones(spark.table(s"${table}_codes"), table)
+        maskedCodes(spark, table)
           .select(col("vec_id").as("vid"), col("cell"),
             posexplode(col("codes")).as(Seq("s", "code")))
           .join(broadcast(qcells), Seq("cell"))
@@ -4555,7 +4478,7 @@ object Similarity {
     */
   def annIndexRecon(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
     val (_, _, _, _, sqMins, sqScales) = annIndexMeta(spark, table)
-    maskTombstones(spark.table(s"${table}_codes"), table)
+    maskedCodes(spark, table)
       .select(col("vec_id").as("vec_b"), col("cell"),
         expr(sqReconSql("sq", sqMins, sqScales)).as("rv"))
   }
@@ -4737,7 +4660,7 @@ object Similarity {
     val qcells = queries.where(col("embedding").isNotNull)
       .select(col("vec_id").as("qid"),
         expr(s"coalesce(graft_ivf_cell(embedding, '$encIvf'), -1L)").as("cell"))
-    val scored = maskTombstones(spark.table(s"${table}_codes"), table)
+    val scored = maskedCodes(spark, table)
       .select(col("vec_id").as("vid"), col("cell"),
         posexplode(col("sq")).as(Seq("d", "code")))
       .join(broadcast(qcells), Seq("cell"))

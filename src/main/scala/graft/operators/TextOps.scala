@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.Store
 
 /** Text-analysis operators for LLM training-data pipelines: token
   * counting, quality scoring, language ID, fingerprinting.
@@ -860,9 +862,7 @@ object TextOps {
     */
   def appendTextIndex(newDocs: DataFrame, table: String): Unit = {
     val spark = newDocs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
-    val nBuckets = spark.table(s"${table}_tmeta").head().getAs[Int]("n_buckets")
+    val nBuckets = textMeta(spark, table).getAs[Int]("n_buckets")
     val overlap = newDocs.select(col("doc_id")).distinct()
       .join(spark.table(s"${table}_dlens"), Seq("doc_id"), "left_semi")
       .limit(5).collect().map(_.getLong(0))
@@ -891,14 +891,15 @@ object TextOps {
     * relative, so a takedown that only hid the rows would keep biasing
     * idf toward the removed corpus slice). Postings carry doc
     * attribution, so the filing is doc ids only; re-deleting while
-    * tombstones live is idempotent (the mask distincts). Never-indexed
-    * (or already-compacted) ids are a directed error via the `_dlens`
-    * ledger — same contract as the gram index.
+    * tombstones live is idempotent (the anti-join mask ignores
+    * duplicate ids). Never-indexed (or already-compacted) ids are a
+    * directed error via the `_dlens` ledger — same contract as the
+    * gram index. [[compactTextIndex]]'s [[Store.commit]] drops the
+    * filing only once the new generation is live.
     */
   def deleteFromTextIndex(docs: DataFrame, table: String): Unit = {
     val spark = docs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
+    Store.guard(spark, table, "tmeta", "text index", "writeTextIndex")
     val ids = docs.select(col("doc_id")).distinct()
     val unknown = ids.join(spark.table(s"${table}_dlens"), Seq("doc_id"), "left_anti")
       .limit(5).collect().map(_.getLong(0))
@@ -906,53 +907,49 @@ object TextOps {
       s"deleteFromTextIndex: doc ids not indexed in '$table' " +
         s"(e.g. ${unknown.mkString(", ")}) — never indexed, or already " +
         "compacted away")
-    ids.write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_ttombstones")
+    Store.file(ids, s"${table}_ttombstones")
   }
+
+  /** A text index's `_tmeta` row (see [[Store.meta]]). */
+  private def textMeta(spark: SparkSession, table: String): Row =
+    Store.meta(spark, table, "tmeta", "text index", "writeTextIndex")
 
   /** The postings/dlens scans with the tombstone mask applied — the
     * ONLY way query consumers read the index (raw reads would
-    * resurrect taken-down docs AND mis-weight every idf). The mask is
-    * one BROADCAST anti-join on the takedown-cadence-bounded id set;
-    * the bucketed scan's partitioning survives it.
+    * resurrect taken-down docs AND mis-weight every idf), behind the
+    * `_tmeta` guard. The mask is one BROADCAST anti-join on the
+    * takedown-cadence-bounded id set ([[Store.mask]]); the bucketed
+    * scan's partitioning survives it.
     */
-  private[graft] def maskedTextIndex(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def maskedTextIndex(spark: SparkSession,
                                      table: String): (DataFrame, DataFrame) = {
-    val p = spark.table(s"${table}_postings")
-    val dl = spark.table(s"${table}_dlens")
-    val tsT = s"${table}_ttombstones"
-    if (!spark.catalog.tableExists(tsT)) (p, dl)
-    else {
-      val del = spark.table(tsT).select(col("doc_id")).distinct()
-      (p.join(broadcast(del), Seq("doc_id"), "left_anti"),
-        dl.join(broadcast(del), Seq("doc_id"), "left_anti"))
-    }
+    Store.guard(spark, table, "tmeta", "text index", "writeTextIndex")
+    val ts = Store.pending(spark, s"${table}_ttombstones", "doc_id")
+    (Store.mask(spark.table(s"${table}_postings"), ts, "doc_id"),
+      Store.mask(spark.table(s"${table}_dlens"), ts, "doc_id"))
   }
 
-  /** Fold accumulated tombstones into the inverted index: rewrite
-    * postings and dlens minus the removed docs as NEW bucketed
-    * generations (write-then-swap — the compactBandIndex dance), drop
-    * the tombstones. Queries answer identically before and after (the
-    * compaction-parity contract every stored family pins), and folded
-    * docs leave the `_dlens` ledger so a re-delete is rejected.
+  /** Fold accumulated tombstones into the inverted index: postings and
+    * dlens minus the removed docs are written as staged bucketed
+    * tables and swapped in by [[Store.commit]], which drops the
+    * tombstones last (a failed commit leaves the previous generation
+    * live with its tombstones pending). Queries answer identically
+    * before and after (the compaction-parity contract every stored
+    * family pins), and folded docs leave the `_dlens` ledger so a
+    * re-delete is rejected.
     */
   def compactTextIndex(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
-    val nBuckets = spark.table(s"${table}_tmeta").head().getAs[Int]("n_buckets")
+    val spark = SparkSession.active
+    val nBuckets = textMeta(spark, table).getAs[Int]("n_buckets")
     val tsT = s"${table}_ttombstones"
     if (spark.catalog.tableExists(tsT)) {
       val (p, dl) = maskedTextIndex(spark, table)
       graft.sources.Formats.writeBucketedKeys(
         p, s"${table}_postings_compacting", Seq("term"), nBuckets)
-      spark.sql(s"DROP TABLE ${table}_postings")
-      spark.sql(s"ALTER TABLE ${table}_postings_compacting RENAME TO ${table}_postings")
       graft.sources.Formats.writeBucketedKeys(
         dl, s"${table}_dlens_compacting", Seq("doc_id"), nBuckets)
-      spark.sql(s"DROP TABLE ${table}_dlens")
-      spark.sql(s"ALTER TABLE ${table}_dlens_compacting RENAME TO ${table}_dlens")
-      spark.sql(s"DROP TABLE $tsT")
+      Store.commit(spark, Seq("postings", "dlens")
+        .map(t => s"${table}_$t" -> s"${table}_${t}_compacting"), tsT)
     }
   }
 
@@ -983,8 +980,6 @@ object TextOps {
       s"bm25AgainstIndex: duplicate query terms " +
         s"(${terms.diff(terms.distinct).distinct.mkString(", ")}) — " +
         "dedupe the term set; a repeat would double-count its postings")
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
     val (postAll, dlens) = maskedTextIndex(spark, table)
     val post = postAll.where(col("term").isin(terms: _*))
     val stats = dlens.agg(count(lit(1)).cast("double").as("n_docs"),
@@ -1527,8 +1522,6 @@ object TextOps {
         s"(${terms.diff(terms.distinct).distinct.mkString(", ")}) — " +
         "a repeated term sums its per-index score term twice while the " +
         "stored path counts it once; dedupe the term set")
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
     val (postAll, dlens) = maskedTextIndex(spark, table)
     val stats = dlens.agg(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl").cast("double")).as("avgdl"))

@@ -1702,8 +1702,10 @@ object TimeSeries {
   /** Store compaction: appended buckets accumulate one file per
     * append (losing the reported sort order, costing a per-partition
     * sort on every read) — fold them into a fresh one-file-per-bucket
-    * generation, write-new-then-swap like the index compactions.
-    * Serving results are bit-unchanged; only the read plan improves.
+    * generation, written as `<table>_compacting` and swapped in by
+    * [[graft.sources.Store.commit]]; a failed commit leaves the
+    * previous generation live. Serving results are bit-unchanged; only
+    * the read plan improves.
     */
   def compactDailyStore(spark: org.apache.spark.sql.SparkSession,
                         table: String, buckets: Int): Unit = {
@@ -1711,8 +1713,7 @@ object TimeSeries {
     spark.sql(s"DROP TABLE IF EXISTS $next")
     graft.sources.Formats.writeBucketedSorted(
       spark.table(table), next, Seq(KEY), Seq(KEY, DAY), buckets)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $next RENAME TO $table")
+    graft.sources.Store.commit(spark, Seq(table -> next))
   }
 
   /** [[lagFeatures]] served from the daily store — byte-equal to the

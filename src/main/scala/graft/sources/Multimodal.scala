@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -307,9 +307,7 @@ object Multimodal {
     */
   def appendMediaIndex(media: DataFrame, table: String): Unit = {
     val spark = media.sparkSession
-    require(spark.catalog.tableExists(s"${table}_mmeta"),
-      s"media index '$table' has no ${table}_mmeta table — build it with writeMediaIndex")
-    val nBuckets = spark.table(s"${table}_mmeta").head().getAs[Int]("n_buckets")
+    val nBuckets = mediaMeta(spark, table).getAs[Int]("n_buckets")
     val overlap = media.select(col("media_id"))
       .join(spark.table(s"${table}_media").select(col("media_id")), Seq("media_id"),
         "left_semi")
@@ -327,56 +325,46 @@ object Multimodal {
 
   /** Tombstone takedown — licensed/withdrawn media: the ids land in
     * `<table>_mtombstones` (append-mode) and every serve path masks
-    * them immediately; [[compactMediaIndex]] folds them.
+    * them immediately; [[compactMediaIndex]] folds them, and its
+    * [[Store.commit]] drops the filing only once the new generation
+    * is live.
     */
   def deleteFromMediaIndex(ids: DataFrame, table: String): Unit = {
     val spark = ids.sparkSession
-    require(spark.catalog.tableExists(s"${table}_mmeta"),
-      s"media index '$table' has no ${table}_mmeta table — build it with writeMediaIndex")
-    ids.select(col("media_id")).distinct()
-      .write.mode("append").format("parquet")
-      .saveAsTable(s"${table}_mtombstones")
+    Store.guard(spark, table, "mmeta", "media index", "writeMediaIndex")
+    Store.file(ids.select(col("media_id")).distinct(), s"${table}_mtombstones")
   }
 
-  /** The index scan with the tombstone mask applied — the only way
-    * serve paths read `<table>_media`. Tombstones are
-    * takedown-cadence-bounded → broadcast anti-join; the bucketed
+  /** A media index's `_mmeta` row (see [[Store.meta]]). */
+  private def mediaMeta(spark: SparkSession, table: String): Row =
+    Store.meta(spark, table, "mmeta", "media index", "writeMediaIndex")
+
+  /** The index scan with the tombstone mask applied ([[Store.mask]]) —
+    * the only way serve paths read `<table>_media`; the bucketed
     * scan's digest partitioning survives the mask.
     */
-  private def maskedMediaIndex(spark: org.apache.spark.sql.SparkSession,
-                               table: String): DataFrame = {
-    require(spark.catalog.tableExists(s"${table}_media"),
-      s"media index '$table' has no ${table}_media table — build it with writeMediaIndex")
-    val rows = spark.table(s"${table}_media")
-    val tsT = s"${table}_mtombstones"
-    if (!spark.catalog.tableExists(tsT)) rows
-    else rows.join(
-      // no distinct: anti-join is multiplicity-safe, and a distinct
-      // here would put a tombstone-volume exchange in front of the
-      // broadcast (the census spec pins ZERO exchanges on this path)
-      broadcast(spark.table(tsT).select(col("media_id"))),
-      Seq("media_id"), "left_anti")
-  }
+  private def maskedMediaIndex(spark: SparkSession, table: String): DataFrame =
+    Store.mask(spark.table(Store.guard(spark, table, "media", "media index", "writeMediaIndex")),
+      Store.pending(spark, s"${table}_mtombstones", "media_id"), "media_id")
 
-  /** Fold accumulated tombstones into the index: survivors rewrite via
-    * write-then-swap (never overwrite-in-place — a failed overwrite
-    * would torch the store), tombstones drop. Result ≡ the one-shot
-    * build over the survivors (digest rows are independent — nothing
-    * trained, nothing pinned).
+  /** Fold accumulated tombstones into the index: survivors are written
+    * as a staged table (never overwrite-in-place — a failed overwrite
+    * would torch the store) and swapped in by [[Store.commit]], which
+    * drops the tombstones last (a failed commit leaves the previous
+    * generation live with its tombstones pending). Result ≡ the
+    * one-shot build over the survivors (digest rows are independent —
+    * nothing trained, nothing pinned).
     */
   def compactMediaIndex(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.tableExists(s"${table}_mmeta"),
-      s"media index '$table' has no ${table}_mmeta table — build it with writeMediaIndex")
+    val spark = SparkSession.active
+    Store.guard(spark, table, "mmeta", "media index", "writeMediaIndex")
     val tsT = s"${table}_mtombstones"
     if (!spark.catalog.tableExists(tsT)) return
-    val nBuckets = spark.table(s"${table}_mmeta").head().getAs[Int]("n_buckets")
+    val nBuckets = mediaMeta(spark, table).getAs[Int]("n_buckets")
     val survivors = maskedMediaIndex(spark, table).localCheckpoint()
     graft.sources.Formats.writeBucketedKeys(
       survivors, s"${table}_media_compacting", Seq("digest"), nBuckets)
-    spark.sql(s"DROP TABLE ${table}_media")
-    spark.sql(s"ALTER TABLE ${table}_media_compacting RENAME TO ${table}_media")
-    spark.sql(s"DROP TABLE $tsT")
+    Store.commit(spark, Seq(s"${table}_media" -> s"${table}_media_compacting"), tsT)
   }
 
   /** [[dedupPayload]]'s verdicts served from the STORED index: per

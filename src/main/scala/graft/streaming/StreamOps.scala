@@ -30,8 +30,6 @@ object StreamOps {
       s"bm25TriageStream: duplicate query terms " +
         s"(${terms.diff(terms.distinct).distinct.mkString(", ")}) — " +
         "a repeated term would double its score contribution; dedupe")
-    require(spark.catalog.tableExists(s"${table}_tmeta"),
-      s"text index '$table' has no ${table}_tmeta table — build it with writeTextIndex")
     val (postAll, dlens) = graft.operators.TextOps.maskedTextIndex(spark, table)
     val st = dlens.agg(count(lit(1)).cast("double"),
       avg(col("dl").cast("double"))).head()
@@ -508,9 +506,7 @@ object StreamOps {
   def substrDupStream(docs: DataFrame, table: String,
                       watermark: String): DataFrame = {
     val spark = docs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val minLen = spark.table(s"${table}_smeta").head().getAs[Int]("min_len")
+    val minLen = graft.operators.Dedup.gramMeta(spark, table).getAs[Int]("min_len")
     docs
       .withWatermark("ts", watermark)
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
@@ -534,9 +530,7 @@ object StreamOps {
     */
   def substrDupStreamBatch(docs: DataFrame, table: String): DataFrame = {
     val spark = docs.sparkSession
-    require(spark.catalog.tableExists(s"${table}_smeta"),
-      s"substring index '$table' has no ${table}_smeta table — build it with writeSubstringIndex")
-    val minLen = spark.table(s"${table}_smeta").head().getAs[Int]("min_len")
+    val minLen = graft.operators.Dedup.gramMeta(spark, table).getAs[Int]("min_len")
     docs
       .select(col("doc_id"), unix_micros(col("ts")).as("ts_us"),
         split(col("text"), " ").as("toks"))

@@ -977,6 +977,26 @@ class GraphSearchSpec extends AnyFunSuite {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("walk arguments are checked before a path is picked: rounds = 0 and k > beam fail on both paths") {
+    val t = "graft_walk_args"
+    handStore(t, Seq(0L -> unit(0), 1L -> unit(30), 2L -> unit(60)), Seq(0L -> 1L, 1L -> 2L, 2L -> 0L))
+    def walk(beam: Int, rounds: Int, k: Int) =
+      Similarity.annGraphSearchStored(spark, t, 3, beam, rounds, k)
+    // the store walks on both paths with valid arguments
+    bothPaths(walk(4, 1, 2))
+    def errors() = Seq(() => walk(4, 0, 2), () => walk(2, 1, 3)).map(w =>
+      intercept[IllegalArgumentException](w()).getMessage)
+    val inTask = errors()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val loop = try errors() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    for (msgs <- Seq(inTask, loop)) {
+      assert(msgs(0).contains("rounds must be >= 1"), msgs)
+      assert(msgs(1).contains("k=3 must be <= beam=2"), msgs)
+    }
+  }
+
   /** 400 deterministic 8-d vectors for the store-scale walk specs. */
   private def corpus() = spark.range(400).select(col("id").as("vec_id"),
     org.apache.spark.sql.functions.array((0 until 8).map(d =>

@@ -403,7 +403,7 @@ class PlanCensusSpec extends AnyFunSuite {
     assert(shuf.size <= 3, s"unexpected extra shuffles: ${shuf.size}")
   }
 
-  test("bm25 stored query: only query-term-sized frames shuffle; the mask costs one tombstone-side distinct") {
+  test("bm25 stored query: only query-term-sized frames shuffle; the mask adds no exchange, duplicate filings change nothing") {
     val docs = Tables.documents(spark, dir)
     TextOps.writeTextIndex(docs, "graft_bm25idx_census", 4)
     val q = TextOps.bm25AgainstIndex(spark, "graft_bm25idx_census",
@@ -415,16 +415,24 @@ class PlanCensusSpec extends AnyFunSuite {
     // tail's two rank exchanges — nothing corpus-volume beyond the
     // skinny _dlens stats scan
     assert(plain === 4, s"bm25 stored query: got $plain shuffles")
-    // the mask adds exactly ONE exchange and it is TOMBSTONE-side
-    // (the filing table's distinct — takedown-cadence-bounded, the
-    // substring-census precedent); both anti-joins ride broadcasts,
-    // so the postings/dlens side gains nothing
+    // the mask is one broadcast anti-join per scan with no distinct on
+    // the tombstone side (an anti-join is duplicate-safe), so it adds
+    // no exchange at all — one fewer than the earlier distinct mask
     TextOps.deleteFromTextIndex(docs.where(col("doc_id") % 4 === 1),
       "graft_bm25idx_census")
-    val masked = shuffles(TextOps.bm25AgainstIndex(spark, "graft_bm25idx_census",
-      Seq("scan", "merge", "key"), 10)).size
-    assert(masked === plain + 1,
-      s"the mask must cost one tombstone-side distinct only, got $masked vs $plain")
+    def query() = TextOps.bm25AgainstIndex(spark, "graft_bm25idx_census",
+      Seq("scan", "merge", "key"), 10)
+    val masked = shuffles(query()).size
+    assert(masked === plain,
+      s"the mask must add no exchange, got $masked vs $plain")
+    // filing the same docs again leaves every answer as it was
+    def answers() = query().collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val once = answers()
+    TextOps.deleteFromTextIndex(docs.where(col("doc_id") % 4 === 1),
+      "graft_bm25idx_census")
+    assert(spark.table("graft_bm25idx_census_ttombstones").count() >
+      spark.table("graft_bm25idx_census_ttombstones").distinct().count())
+    assert(answers() === once)
   }
 
   test("wordpiece_encode is a ZERO-exchange map-side projection") {
