@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query JOB-LEVEL profiler (optimization-round §1 tooling): runs
   * named queries through the bench's noop sink with a SparkListener
@@ -17,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "ann_graph_hier_routed_inc", "ann_graph_hier_routed_stored",
@@ -74,8 +68,7 @@ object JobProfile {
 
     println(f"${"query"}%-36s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskT_s"}%8s top-job-ms")
     names.foreach { n =>
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Similarity.clearTrainedMemo()
+      Session.resetCaches(spark)
       L.reset()
       val t0 = System.nanoTime()
       sink(SparkEntry.queries(n)(spark, sfDir))

@@ -34,10 +34,18 @@ object Session {
     dir.getPath
   }
 
-  private def deleteTree(f: java.io.File): Unit = {
+  private[graft] def deleteTree(f: java.io.File): Unit = {
     if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).foreach(_.foreach(deleteTree))
     f.delete()
+  }
+
+  /** Drops what one measured run could leave for the next: cached
+    * frames and the trained artifacts `Similarity` memoises.
+    */
+  def resetCaches(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    graft.operators.Similarity.clearTrainedMemo()
   }
 
   def local(cores: Int = 32): SparkSession = {

@@ -1,1223 +1,200 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Eval, Generate, Relational, Similarity, TextOps}
-
-/** Scale soak: runs the shuffle-heavy operators on inputs scaled
-  * `SPARK_GRAFT_SOAK_FACTOR`× (default 10×) IN MEMORY — an
-  * sf1-equivalent drive from the read-only sf0.1 testdata, sized so a
-  * wrong plan (all-pairs stage, unbounded per-key state, quadratic
-  * candidate explosion) actually hurts instead of hiding inside noise.
+/** Scale soak by data: writes scaled replicas of the test tables once,
+  * then runs every requested gate of [[SparkEntry.queries]] unchanged
+  * on each of them and fits how its time grows with the data.
   *
-  * Scaling shape (watch what each replica does to the JOIN structure,
-  * not just the row count):
-  *   - events: `factor` disjoint replicas of every user (user_id/
-  *     event_id offset per replica) — more KEYS, same per-key series
-  *     length, the way a bigger corpus actually grows;
-  *   - documents: replicas get their tokens prefixed with a replica
-  *     tag, so shingle/minhash structure WITHIN a replica is identical
-  *     to the base corpus but DISJOINT across replicas — near-dup
-  *     candidate pairs grow linearly (factor×), not quadratically
-  *     (plain copies would put every doc in a `factor`-sized exact-dup
-  *     cluster and grow pairs `factor²`×, measuring the data not the
-  *     plan);
-  *   - embeddings: plain replicas (vec_id offset); queries/centroids
-  *     stay the base ids, so bucket/cell populations grow factor× and
-  *     search cost must grow linearly if the plan is right.
+  * `runMain graft.Soak [gate ...]` (default: every gate). The base
+  * tables come from `SPARK_GRAFT_SF_DIR` (default sf0.1), the session
+  * is `local[SPARK_GRAFT_CPUS]` (default 4), and the ladder's top
+  * factor F is `SPARK_GRAFT_SOAK_FACTOR` (default 10).
   *
-  * Emits one JSON line: {"metric":"soak","factor":N,"queries":{...}}.
-  * Pass = each query's time grows ~linearly vs its graft.Bench sf0.1
-  * value (judged manually; recorded in SURVEY §6).
+  * Rungs: the distinct values of {1, round(√F), F} (1, 3, 10 for the
+  * default). Rung f is `<run>/x<f>/<table>.parquet`, in the [[Tables]]
+  * layout, so a gate reads it exactly as it reads the base directory:
+  *   - fact tables hold f replicas of the base rows, replica `rep`
+  *     offsetting its ids by rep · 10⁹ ([[offsets]]) — more keys with
+  *     the same per-key shape, the way a bigger corpus grows. Documents
+  *     of replica rep ≥ 1 also rewrite every space to ` s<rep>_`, so
+  *     shingles and minhash bands are disjoint across replicas: near-dup
+  *     pairs grow f×, not f²×;
+  *   - dimension tables (region, nation, supplier, part) are the base
+  *     rows unchanged, which is why the gates broadcast them.
+  * Two skew fixtures at factor F, `x<F>-hot20` and `x<F>-hot80`, differ
+  * from `x<F>` only in `events.parquet`, where one user owns ~20% or
+  * ~80% of the events. They run the gates that read `events.parquet`,
+  * even under a checkpoint: the gates that fail on `x1-noevents`, a
+  * copy of `x1` without it.
+  *
+  * Each sample starts from [[Session.resetCaches]] and sinks the gate
+  * through a noop write. A gate gets one warm run at rung 1 (on
+  * `x1-noevents` unless it reads events), then the min of two runs per
+  * rung. A gate that throws is timed -1 and listed
+  * in `errors`, and the ladder goes on. The growth exponent is the
+  * least-squares slope of log t against log f. One JSON line is printed
+  * per gate as it finishes, then one summary line. The replicas live
+  * in a per-JVM directory under `java.io.tmpdir`, deleted at exit.
   */
 object Soak {
 
-  private def rep(spark: SparkSession, factor: Int): DataFrame = {
-    import spark.implicits._
-    (0 until factor).toDF("_rep")
+  type Gate = (SparkSession, String) => DataFrame
+
+  /** The fact tables and the id columns each replica offsets.
+    * `o_custkey`/`c_custkey` and `o_orderkey`/`l_orderkey` move
+    * together, so every join key stays inside its replica.
+    */
+  val offsets: Map[String, Seq[String]] = Map(
+    "customer" -> Seq("c_custkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey"),
+    "events" -> Seq("event_id", "user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** The hot-key fixtures: which events the one hot user takes. An
+    * event id's offset is a multiple of 5, so the share holds per
+    * replica.
+    */
+  private val hotUser = 424242L
+  private val hotShares: Seq[(String, Column)] = Seq(
+    "hot20" -> (col("event_id") % 5 === 0),
+    "hot80" -> (col("event_id") % 5 < 4))
+
+  private def rungs(factor: Int): Seq[Int] =
+    Seq(1, math.round(math.sqrt(factor.toDouble)).toInt, factor).distinct.sorted
+
+  /** Table `name` of `base` replicated `f`×, in the base column order. */
+  private def replicate(spark: SparkSession, base: String, name: String, f: Int): DataFrame = {
+    val raw = Tables(spark, base, name)
+    offsets.get(name).fold(raw) { ids =>
+      val rep = col("_rep")
+      val shifted = ids.foldLeft(raw.crossJoin(spark.range(f).toDF("_rep"))) { (df, c) =>
+        df.withColumn(c, col(c) + rep * 1000000000L)
+      }
+      val tagged = if (name != "documents") shifted
+        else shifted.withColumn("text", when(rep === 0, col("text"))
+          .otherwise(regexp_replace(col("text"), lit(" "),
+            concat(lit(" s"), rep.cast("string"), lit("_")))))
+      tagged.select(raw.columns.map(col): _*)
+    }
   }
 
-  /** Disjoint-id replication: ids offset by rep · 10⁹. */
-  private def scaleEvents(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.events(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("user_id", col("user_id") + col("_rep") * 1000000000L)
-      .withColumn("event_id", col("event_id") + col("_rep") * 1000000000L)
-      .drop("_rep")
+  /** Writes every [[Tables.names]] table of `base`, `f`×, under `dir`. */
+  def writeReplicas(spark: SparkSession, base: String, dir: String, f: Int): Unit =
+    Tables.names.foreach(n => replicate(spark, base, n, f).write.parquet(s"$dir/$n.parquet"))
 
-  /** [[scaleEvents]] with a HOT KEY: every 5th event (~20% of the
-    * whole factor× stream) is remapped to one user. Drives the skew
-    * regime: per-key WINDOW chains (sessionize) are inherently
-    * sequential per key — AQE cannot split a window partition, so the
-    * hot task IS the wall-clock and the mitigation is operator-shape
-    * (skewSafeAgg's salting for agg consumers; bounded-gap split-merge
-    * for sessionization) — while map-side-combined aggregates
-    * (funnel's per-stage min-ts) absorb the hot key before the
-    * exchange and should stay ~flat vs the uniform twin. JOIN-shaped
-    * skew is AQE-splittable — SkewSpec pins that the split fires.
+  /** Hard-links every table of `from` but `events` into `to`. */
+  private def linkAllButEvents(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.filter(!_.startsWith(src.resolve("events.parquet"))).forEach { p =>
+      val t = Paths.get(to).resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.createLink(t, p)
+    } finally walk.close()
+  }
+
+  /** `from` with its events rewritten so the hot user takes the events
+    * `share` selects; every other table is hard-linked from `from`.
     */
-  private def scaleEventsSkewed(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    scaleEvents(spark, dir, factor)
-      .withColumn("user_id",
-        when(col("event_id") % 5 === 0, lit(424242L)).otherwise(col("user_id")))
+  private def writeHot(spark: SparkSession, from: String, to: String, share: Column): Unit = {
+    linkAllButEvents(from, to)
+    val ev = Tables(spark, from, "events")
+    ev.withColumn("user_id", when(share, lit(hotUser)).otherwise(col("user_id")))
+      .select(ev.columns.map(col): _*)
+      .write.parquet(s"$to/events.parquet")
+  }
 
-  /** EXTREME hot key: ~80% of the stream on one user. The 20% fixture
-    * above never cliffs on this host — with hot share ≈ 1/cores the
-    * hot window task finishes with the average task; the cliff regime
-    * needs hot share ≫ 1/cores, which this fixture provides (the
-    * honest record of WHEN per-key window skew is the bottleneck).
+  /** One gate's ladder: seconds per rung and per hot fixture (-1 when a
+    * run threw or was skipped after a throw).
     */
-  private def scaleEventsHot(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    scaleEvents(spark, dir, factor)
-      .withColumn("user_id",
-        when(col("event_id") % 5 < 4, lit(424242L)).otherwise(col("user_id")))
+  final case class Growth(gate: String, secs: Seq[(Int, Double)], hot: Seq[(String, Double)]) {
+    def failed: Boolean = (secs ++ hot).exists(_._2 < 0)
 
-  /** Token-prefixed replication: replica r ≠ 0 rewrites every token
-    * separator to ` sr_`, making shingles disjoint across replicas
-    * while preserving the base corpus's within-replica dup structure.
+    /** Least-squares slope of log t against log f over the rungs that ran. */
+    def exponent: Option[Double] = {
+      val pts = secs.collect { case (f, t) if t > 0 => (math.log(f), math.log(t)) }
+      val (mx, my) = (pts.map(_._1).sum / pts.size, pts.map(_._2).sum / pts.size)
+      val sxx = pts.map { case (x, _) => (x - mx) * (x - mx) }.sum
+      if (pts.size < 2 || sxx == 0) None
+      else Some(pts.map { case (x, y) => (x - mx) * (y - my) }.sum / sxx)
+    }
+
+    def json: String = {
+      def obj(kv: Seq[(Any, Double)]) = kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      val e = exponent.fold("null")(x => f"$x%.3f")
+      s"""{"gate":"$gate","secs":${obj(secs)},"exponent":$e,"hot":${obj(hot)}}"""
+    }
+  }
+
+  /** Writes the rungs and the hot fixtures of `base` under `dir`, then
+    * runs `names` on them, emitting each gate's line as it finishes.
+    * An unknown name fails before anything is written.
     */
-  private def scaleDocs(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.documents(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("doc_id", col("doc_id") + col("_rep") * 1000000000L)
-      .withColumn("text",
-        when(col("_rep") === 0, col("text"))
-          .otherwise(regexp_replace(col("text"), lit(" "),
-            concat(lit(" s"), col("_rep").cast("string"), lit("_")))))
-      .drop("_rep")
-
-  private def scaleEmbeddings(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.embeddings(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("vec_id", col("vec_id") + col("_rep") * 1000000000L)
-      .drop("_rep")
-
-  /** TPC-H fact scaling: lineitem/orders/customer replicate with
-    * disjoint order/customer keys; part/supplier/nation stay fixed —
-    * they are dimensions, which is exactly why the gates broadcast
-    * them.
-    */
-  private def scaleLineitem(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.lineitem(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("l_orderkey", col("l_orderkey") + col("_rep") * 1000000000L)
-      .drop("_rep")
-
-  private def scaleOrders(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.orders(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("o_orderkey", col("o_orderkey") + col("_rep") * 1000000000L)
-      .withColumn("o_custkey", col("o_custkey") + col("_rep") * 1000000000L)
-      .drop("_rep")
-
-  private def scaleCustomer(spark: SparkSession, dir: String, factor: Int): DataFrame =
-    Tables.customer(spark, dir).crossJoin(rep(spark, factor))
-      .withColumn("c_custkey", col("c_custkey") + col("_rep") * 1000000000L)
-      .drop("_rep")
+  def ladder(spark: SparkSession, base: String, dir: String, factor: Int,
+             names: Seq[String], gates: Map[String, Gate] = SparkEntry.queries,
+             emit: String => Unit = println): Seq[Growth] = {
+    val unknown = names.filterNot(gates.contains)
+    require(unknown.isEmpty, s"Soak: unknown gate(s) ${unknown.mkString(", ")}")
+    val rs = rungs(factor)
+    rs.foreach(f => writeReplicas(spark, base, s"$dir/x$f", f))
+    linkAllButEvents(s"$dir/x1", s"$dir/x1-noevents")
+    val hotDirs = hotShares.map { case (tag, share) =>
+      writeHot(spark, s"$dir/x$factor", s"$dir/x$factor-$tag", share)
+      tag -> s"$dir/x$factor-$tag"
+    }
+    names.map { name =>
+      def run(d: String): Either[Throwable, Double] = {
+        Session.resetCaches(spark)
+        val t0 = System.nanoTime()
+        try {
+          gates(name)(spark, d).write.format("noop").mode("overwrite").save()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(e) => Left(e) }
+      }
+      def report(r: Either[Throwable, Double], d: String): Option[Double] = {
+        r.left.foreach(e => System.err.println(s"SOAK FAIL $name on $d: $e"))
+        r.toOption
+      }
+      def best(d: String): Double = {
+        def sample() = report(run(d), d)
+        sample().flatMap(a => sample().map(math.min(a, _))).getOrElse(-1.0)
+      }
+      // the warm run goes to x1 without its events table: a gate that
+      // reads events, even under a checkpoint, fails to find them there
+      // and warms on x1 instead
+      val probe = run(s"$dir/x1-noevents")
+      val readsEvents = probe.left.exists(e => Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("x1-noevents/events.parquet")))
+      val warm = if (readsEvents) report(run(s"$dir/x1"), s"$dir/x1") else report(probe, s"$dir/x1")
+      val secs = rs.map(f => f -> warm.fold(-1.0)(_ => best(s"$dir/x$f")))
+      val hot = if (readsEvents && warm.isDefined) hotDirs.map { case (tag, d) => tag -> best(d) } else Nil
+      val g = Growth(name, secs, hot)
+      emit(g.json)
+      g
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SOAK_FACTOR", "10").toInt
-    val spark = Session.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    def sink(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    val ev = scaleEvents(spark, sfDir, factor)
-    val evSkew = scaleEventsSkewed(spark, sfDir, factor)
-    lazy val evHot = scaleEventsHot(spark, sfDir, factor)
-    val docs = scaleDocs(spark, sfDir, factor)
-    val emb = scaleEmbeddings(spark, sfDir, factor)
-    // hot-modality media frame: ~90% of items land in 'video' — the
-    // skew fixture for the budget-fill entries (payload column
-    // omitted; the fill reads only id/modality/bytes). MATERIALIZED:
-    // the measured subject is the fill operator over a lake table
-    // (where the split path's second pass is a column-pruned scan of
-    // three scalars), not the synthetic corpus generator's per-row
-    // token rewriting, which a plain lazy frame would re-run per pass
-    lazy val mediaHot = docs.select(
-      col("doc_id").as("media_id"),
-      struct(
-        when(col("doc_id") % 10 === 0, lit("image")).otherwise(lit("video"))
-          .as("modality"),
-        length(col("text")).cast("long").as("n_bytes")).as("meta"))
-      .localCheckpoint()
-
-    val queries: Seq[(String, () => DataFrame)] = Seq(
-      "dedup_minhash_lsh" -> (() =>
-        Dedup.lshCandidatesFast(Dedup.minhashSigs(docs, 16), 2, 16)),
-      "dedup_cc" -> (() =>
-        Dedup.connectedComponents(
-          Dedup.lshCandidatesFast(Dedup.minhashSigs(docs, 16), 2, 16))),
-      "dedup_pipeline" -> (() => Dedup.pipeline(docs, 16, 2, 0.5)),
-      // ExactSubstr: window volume linear in tokens, ONE gram count +
-      // broadcast probe — replicas are token-disjoint so the repeated
-      // set stays per-replica and the law is linear
-      "dedup_substring" -> (() => Dedup.substringDupSpans(docs, 8)),
-      // stored gram index at factor×-both-sides: build (one window
-      // pass + refcount agg + bucketed write) + delta probe (windows
-      // semi-joined against the bucketed scan) — both linear
-      "dedup_substring_stored" -> (() => {
-        Dedup.writeSubstringIndex(docs.where(col("doc_id") % 2 === 1), 8,
-          "graft_soak_subidx", 8)
-        Dedup.substringSpansAgainstIndex(docs.where(col("doc_id") % 2 === 0),
-          "graft_soak_subidx")
-      }),
-      // probe-only against the index the previous entry built — the
-      // nightly recurring cost (run together with
-      // dedup_substring_stored so the catalog table exists)
-      "dedup_substring_probe" -> (() =>
-        Dedup.substringSpansAgainstIndex(docs.where(col("doc_id") % 2 === 0),
-          "graft_soak_subidx")),
-      // gram-index takedown lifecycle at factor×: build + tombstone a
-      // tenth of the reference + compact (one linear bucketed rewrite)
-      // — the band_index_compact law on the substring side
-      "substr_index_compact" -> (() => {
-        Dedup.writeSubstringIndex(docs.where(col("doc_id") % 2 === 1), 8,
-          "graft_soak_subcmp", 8)
-        Dedup.deleteFromSubstringIndex(
-          docs.where(col("doc_id") % 10 === 1), "graft_soak_subcmp")
-        Dedup.compactSubstringIndex("graft_soak_subcmp")
-        spark.table("graft_soak_subcmp_grams")
-      }),
-      "decontaminate_spans" -> (() =>
-        TextOps.decontaminateSpans(docs, docs.where(col("doc_id") % 50 === 0), 4)),
-      // fixed rounds over the candidate graph: disjoint replica
-      // shingles keep edges linear, so each round's join is linear
-      "dedup_pagerank" -> (() => Dedup.pageRank(
-        Dedup.lshCandidatesFast(Dedup.minhashSigs(docs, 16), 2, 16))),
-      "range_join" -> (() => {
-        val iv = ev.groupBy(col("user_id"), to_date(col("ts")).as("day"))
-          .agg(min(unix_micros(col("ts"))).as("t0"), max(unix_micros(col("ts"))).as("t1"))
-        val pt = ev.where(col("event_type") === "error")
-          .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-        Relational.rangeJoin(pt, "ts_us", iv, "t0", "t1",
-          width = 3600000000L, keys = Seq("user_id"))
-      }),
-      "sessionize" -> (() => Relational.sessionize(ev, 1800000000L)),
-      // ---- hot-key regime (one user owns ~20% of the stream) ----
-      // window chain: the hot partition is ONE sequential task — the
-      // measured gap vs `sessionize` is the cost of key skew a window
-      // op cannot shed (mitigation is operator shape, not AQE)
-      "sessionize_skew" -> (() => Relational.sessionize(evSkew, 1800000000L)),
-      // the bounded-gap split-merge mitigation under the SAME hot key:
-      // the event window keys on (user, 6h-bucket), the stitch on a
-      // buckets-sized frame — expected ~flat where sessionize_skew
-      // cliffs (result-identical; the gate shares sessionize's oracle)
-      "sessionize_skew_splitmerge" -> (() =>
-        Relational.sessionizeSplitMerge(evSkew, 1800000000L, 21600000000L)),
-      // the CLIFF regime (hot share ≫ 1/cores): plain sessionize's hot
-      // window task is the wall-clock; split-merge spreads it over
-      // timespan/width tasks and should win here — and only here (at
-      // balanced skew its extra session exchanges cost ~2-3×: deploy
-      // on diagnosis, not by default)
-      "sessionize_hot80" -> (() => Relational.sessionize(evHot, 1800000000L)),
-      "sessionize_hot80_splitmerge" -> (() =>
-        Relational.sessionizeSplitMerge(evHot, 1800000000L, 21600000000L)),
-      // map-side-combined per-stage aggregates absorb the hot key
-      // before the exchange — expected ~flat vs funnel_conversion
-      "funnel_skew" -> (() =>
-        Relational.funnel(evSkew, Seq("signup", "click", "purchase"))),
-      // salted two-phase agg under the same hot key — the skewSafeAgg
-      // claim measured in its target regime
-      "skew_safe_agg_hot" -> (() =>
-        Relational.skewSafeAgg(evSkew, "user_id", "value", 32)),
-      // per-key lag window feeding a types²-bounded agg — the window
-      // twin of sessionize_skew on a cheaper chain
-      "path_transitions_skew" -> (() => Relational.pathTransitions(evSkew)),
-      // purchase×touch equi-join bounded by the lookback window — the
-      // rangeJoin volume law on the attribution shape
-      "attribution_linear" -> (() =>
-        Relational.attributionLinear(ev, 86400000000L)),
-      "ann_lsh" -> (() => Similarity.annLshTopK(emb, 8, 5, 5)),
-      "ann_ivf" -> (() => Similarity.annIvfTopK(emb, 16, 5, 5)),
-      "ann_ivf_probe" -> (() => Similarity.annIvfTopKProbe(emb, 16, 5, 5, 2)),
-      "ann_pq" -> (() => Similarity.annPqTopK(emb, 16, 4, 5, 5)),
-      "ann_ivfpq" -> (() => Similarity.annIvfPqTopK(emb, 16, 16, 4, 5, 5)),
-      // SemDeDup's cost law is Σ cell² — at scale the quantizer grows
-      // with the corpus to hold cell size constant (the paper's ~√n
-      // clusters), so the soak scales nCentroids with the factor; a
-      // FIXED 16-cell codebook over factor× plain-replica data would
-      // measure factor²× pair evaluations — the dataset's choice, not
-      // the plan's
-      "dedup_semantic" -> (() => Similarity.semanticDedup(emb, 16 * factor, 0.3)),
-      // the routed face under the SAME √n-centroids codebook: the
-      // walk prices assignment at n·rounds·beam·kCentGraph·d
-      // (independent of k) vs the flat face's n·k·d — the pair of
-      // entries IS the Θ(n^1.5) vs Θ(n) comparison at matched k
-      // the walk budget must cover the centroid graph's DIAMETER:
-      // every vector walks from the shared entry, so only the
-      // entry's rounds-hop ball (≤ deg^rounds cells) is reachable AT
-      // ALL — at fixed rounds=3/deg=4 that is ≤ 85 cells no matter
-      // how large k grows, Σcell² degenerates toward n²/85 and the
-      // verdict join goes quadratic (measured: the verdict delta read
-      // 18.0→77.9s for a 100→200 doubling while the assignment stage
-      // stayed linear 8.1→15.8s — the r16 reachability finding's
-      // class, at the cell level). rounds = ceil(log_deg k) restores
-      // full-codebook reachability at log cost — HNSW's own regime.
-      "dedup_semantic_routed" -> (() => {
-        val k = 16 * factor
-        val rounds = math.max(3,
-          math.ceil(math.log(k.toDouble) / math.log(4.0)).toInt)
-        Similarity.semanticDedupRouted(emb, k, 4, 4, rounds, 0.3)
-      }),
-      // the ef-scaled variant the diameter fix's residual points at:
-      // a degree-4 navigation graph is THIN at thousands of cells
-      // (greedy walks funnel into popular hubs and the verdict join
-      // inherits the skew) — deg/beam 8 with rounds = ceil(log_8 k)+1
-      // keeps the same reachability ball at a denser graph; its
-      // verdict-delta slope vs dedup_semantic_routed measures what
-      // the ef density buys
-      "dedup_semantic_routed_ef" -> (() => {
-        val k = 16 * factor
-        val rounds = math.max(3,
-          math.ceil(math.log(k.toDouble) / math.log(8.0)).toInt + 1)
-        Similarity.semanticDedupRouted(emb, k, 8, 8, rounds, 0.3)
-      }),
-      // attribution probe for the routed face's growth terms: the
-      // assignment stage alone (centroid k² graph + beam walk, no
-      // verdict join) — its delta vs dedup_semantic_routed separates
-      // the centroid-graph build and walk from the Σcell² verdict join
-      "routed_cells_assign" -> (() => {
-        val k = 16 * factor
-        val rounds = math.max(3,
-          math.ceil(math.log(k.toDouble) / math.log(4.0)).toInt)
-        Similarity.routedCells(emb, k, 4, 4, rounds)
-          .where(col("crank") === 1).select(col("vec_id"), col("cid"))
-      }),
-      // corpus grows, benchmark stays eval-suite-sized (benchMod
-      // scales with factor so |bench| is constant — the production
-      // shape: the eval suite does not grow with the crawl). TWO
-      // fixture traps this entry documents:
-      //  - the codebook stays FIXED, deliberately NOT dedup_semantic's
-      //    √n-centroids law: decon's pair volume is n·|bench|·nprobe/k
-      //    — linear in n at ANY fixed k because the benchmark side
-      //    never grows — while k ∝ factor makes the flat cell
-      //    assignment the Θ(n^1.5·d) wall (measured: 90× for 10×,
-      //    tracking the n·k·d assignment term exactly);
-      //  - ids must be DENSE for `benchMod ∝ factor` to mean "fixed
-      //    benchmark": scaleEmbeddings' 1e9 replica offset is ≡ 0 mod
-      //    50·factor, so under it the benchmark was every replica of
-      //    vector 0 — |bench| ∝ factor, pair volume quadratic
-      //    (measured 3.07× for the 100→200 doubling; dense ids 2×)
-      "decontaminate_semantic" -> (() => {
-        val nBase = Tables.embeddings(spark, sfDir).count()
-        // MATERIALIZED (the mediaHot rule): the operator scans its
-        // input three times (quantizer collect, corpus side, bench
-        // side) — unmaterialized, the crossJoin generator re-runs per
-        // scan and ITS wall is what the soak reads at the tail
-        val embDense = Tables.embeddings(spark, sfDir)
-          .crossJoin(rep(spark, factor))
-          .withColumn("vec_id", col("vec_id") + col("_rep") * nBase)
-          .drop("_rep").localCheckpoint()
-        Similarity.semanticDecontaminate(embDense, 16, 2, 0.3, 50L * factor)
-      }),
-      "text_tfidf" -> (() => TextOps.tfidf(docs, 3)),
-      // the vocab-count exchange + doc-keyed agg (the only r7-added
-      // operator without a recorded soak ratio — VERDICT r7 #3);
-      // replica-prefixed tokens grow the vocab ~factor×, the honest
-      // worst case for the broadcast-counts path
-      "text_lm_score" -> (() => TextOps.lmScore(docs)),
-      "text_entropy" -> (() => TextOps.entropy(docs)),
-      // the bigram vocab grows ~factor× (disjoint replica tokens) —
-      // the worst case for the broadcast-counts path
-      "text_lm_bigram" -> (() => TextOps.lmScoreBigram(docs)),
-      // replica tokens are prefixed, so only replica 0 matches the
-      // query terms — df/hits stay base-sized while the scan and the
-      // per-row tf loops grow factor×, which IS bm25's dominant cost
-      "text_bm25" -> (() => TextOps.bm25(docs, Seq("hash", "join", "vector"), 10)),
-      // replica tokens are prefixed → replica substrings differ → the
-      // fp bucket join grows linearly, the same disjointness argument
-      // as the shingle family
-      "dedup_winnow" -> (() => TextOps.winnowPairs(docs, 8, 8, 30, 50L)),
-      // both sides grow factor× (new crawl AND training set are big);
-      // disjoint replica tokens keep cross collisions linear
-      "dedup_cross" -> (() => graft.operators.Dedup.crossDup(
-        docs.where(col("doc_id") % 2 === 1), docs.where(col("doc_id") % 2 === 0),
-        16, 2, 0.5)),
-      // the stored-index path at the same factor×-both-sides growth:
-      // index write (one sig pass + two bucketed writes) + probe
-      "dedup_cross_stored" -> (() => {
-        Dedup.writeBandIndex(docs.where(col("doc_id") % 2 === 0),
-          16, 2, "graft_soak_xidx", 8)
-        Dedup.crossDupAgainstIndex(docs.where(col("doc_id") % 2 === 1),
-          "graft_soak_xidx", 16, 2, 0.5)
-      }),
-      // probe-only against an index built in the PREVIOUS entry's run
-      // — the recurring (nightly) cost of the stored path, the number
-      // that beats recompute-both-sides dedup_cross. Run it together
-      // with dedup_cross_stored (or after any writeBandIndex) so the
-      // catalog table exists.
-      "dedup_cross_probe" -> (() =>
-        Dedup.crossDupAgainstIndex(docs.where(col("doc_id") % 2 === 1),
-          "graft_soak_xidx", 16, 2, 0.5)),
-      // AXIS 2 of the two-axis stored-index soak: crawl FIXED at the
-      // BASE corpus' odd ids, band index grown factor× (built by the
-      // dedup_cross_stored entry). Cost law: the crawl's signature
-      // pass is constant; band-bucket collisions against the disjoint
-      // replica corpus stay ≈ base-level (replica shingles can't match
-      // the base crawl) — probe cost should be ~FLAT in index growth,
-      // the "probe cost is crawl-dominated" claim, measured.
-      "dedup_cross_probe_fixed" -> (() =>
-        Dedup.crossDupAgainstIndex(
-          Tables.documents(spark, sfDir).where(col("doc_id") % 2 === 1),
-          "graft_soak_xidx", 16, 2, 0.5)),
-      // the factor×-crawl probe with the Bloom semi-join reduction:
-      // same verdicts (no false negatives), but band keys that can't
-      // match die BEFORE the probe exchange — compare directly to
-      // dedup_cross_probe at the same factor
-      "dedup_cross_probe_bloom" -> (() =>
-        Dedup.crossDupAgainstIndexBloom(docs.where(col("doc_id") % 2 === 1),
-          "graft_soak_xidx", 16, 2, 0.5)),
-      // one-time crawl signature materialization (the cost the two
-      // entries below amortize away)
-      "dedup_cross_write_sigs" -> (() => {
-        Dedup.writeCrawlSigs(docs.where(col("doc_id") % 2 === 1),
-          16, "graft_soak_csigs", 8)
-        spark.table("graft_soak_csigs")
-      }),
-      // stored-signatures probe (no md5 recompute): the exchange IS
-      // the cost — compare bloom on/off at the same factor
-      "dedup_cross_probe_sigs" -> (() =>
-        Dedup.crossDupStoredSigs(spark, "graft_soak_csigs", "graft_soak_xidx",
-          16, 2, 0.5)),
-      "dedup_cross_probe_sigs_bloom" -> (() =>
-        Dedup.crossDupStoredSigs(spark, "graft_soak_csigs", "graft_soak_xidx",
-          16, 2, 0.5, bloom = true)),
-      // band-index takedown lifecycle at factor×: build (one sig pass
-      // + two bucketed writes) + tombstones + compaction (one linear
-      // bucketed rewrite per table) — same two-linear-passes law as
-      // ann_index_compact, on the text side
-      "band_index_compact" -> (() => {
-        Dedup.writeBandIndex(docs.where(col("doc_id") % 2 === 0),
-          16, 2, "graft_soak_xcmp", 8)
-        Dedup.deleteFromBandIndex(
-          docs.where(col("doc_id") % 10 === 0).select(col("doc_id")), "graft_soak_xcmp")
-        Dedup.compactBandIndex("graft_soak_xcmp")
-        spark.table("graft_soak_xcmp_sigs")
-      }),
-      // ---- stored ANN index, two-axis ----
-      // build+probe at the factor× corpus, FIXED 16-cell codebook:
-      // one zero-exchange encode scan + bucketed write (linear), then
-      // a probe whose cell holds factor× codes
-      "ann_ivfpq_stored" -> (() => {
-        Similarity.writeAnnIndex(emb, 16, 16, 4, "graft_soak_annidx", 8)
-        Similarity.annIvfPqAgainstIndex(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") < 5),
-          "graft_soak_annidx", 5)
-      }),
-      // AXIS 2: probe-only, crawl FIXED (5 base queries), index grown
-      // factor×. Declared cost law: at a FIXED codebook the probed
-      // cell's population grows factor×, so the ADC scan is LINEAR in
-      // index size — this entry MEASURES that law (it is not a flat
-      // claim); the production regime bounds the cell by scaling the
-      // codebook ~√n, the next entry.
-      "ann_index_probe" -> (() =>
-        Similarity.annIvfPqAgainstIndex(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") < 5),
-          "graft_soak_annidx", 5)),
-      // filtered probe against the SAME grown index: the label
-      // predicate is evaluated on UNEXPLODED candidates (join → filter
-      // → explode), so failing candidates never produce their m ADC
-      // rows — law: (cell population / |labels|) ADC work; measured
-      // parity with ann_index_probe at factor 1 (fixed overhead
-      // dominates) and at/below it as the cell grows
-      "ann_filtered_probe" -> (() =>
-        Similarity.annIvfPqAgainstIndexFiltered(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") < 5),
-          "graft_soak_annidx", 5, 10)),
-      // range search against the grown index: recon join over the
-      // probed cell — linear in cell population at the fixed codebook,
-      // like ann_index_probe but through the SQ8 reconstruction
-      "ann_range_probe" -> (() =>
-        Similarity.annRangeAgainstIndex(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") < 5),
-          "graft_soak_annidx", 0.3)),
-      // full delete/compact lifecycle at factor×: build (linear encode
-      // + bucketed write) + tombstone write + compaction rewrite
-      // (linear bucketed pass over survivors) — law: two linear passes
-      // over the index, NEVER quadratic in deletes
-      "ann_index_compact" -> (() => {
-        Similarity.writeAnnIndex(emb, 16, 16, 4, "graft_soak_anncmp", 8)
-        Similarity.deleteFromAnnIndex(
-          emb.where(col("vec_id") % 5 === 3).select(col("vec_id")), "graft_soak_anncmp")
-        Similarity.compactAnnIndex("graft_soak_anncmp")
-        spark.table("graft_soak_anncmp_codes")
-      }),
-      // the production regime: codebook scaled √factor (the SemDeDup
-      // ~√n sizing) → cell occupancy ~√n → per-query probe work grows
-      // ~√factor while the build stays one linear pass
-      "ann_ivfpq_stored_scaled" -> (() => {
-        val nC = math.max(16, (16 * math.sqrt(factor.toDouble)).round.toInt)
-        Similarity.writeAnnIndex(emb, nC, 16, 4, "graft_soak_annidx_s", 8)
-        Similarity.annIvfPqAgainstIndex(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") < 5),
-          "graft_soak_annidx_s", 5)
-      }),
-      // SQ8 full-scan tier: law = linear corpus scan (fixed 5-query
-      // broadcast term table); the per-pair sum partial-aggs map-side
-      "ann_sq" -> (() => Similarity.annSqTopK(emb, 5, 5)),
-      // IVF+SQ8 composed: cell-pruned candidates, same linear-in-cell
-      // law as the other fixed-codebook IVF tiers
-      "ann_ivfsq" -> (() => Similarity.annIvfSqTopK(emb, 16, 5, 5)),
-      // semantic dedup at ingest: nightly batch FIXED (base odd ids),
-      // stored reference grown factor× — declared law: batch size ×
-      // cell occupancy, so LINEAR in index growth at the fixed
-      // codebook (same argument as ann_index_probe)
-      "stream_semdedup_batch" -> (() =>
-        graft.streaming.StreamOps.semanticDedupStreamBatch(
-          Tables.embeddings(spark, sfDir).where(col("vec_id") % 2 === 1)
-            .withColumn("ts",
-              timestamp_micros(lit(1704067200000000L) + col("vec_id") * 1000000L)),
-          "graft_soak_annidx", 0.9)),
-      // k-means cost law is n·k per round; production sizes the
-      // codebook ~√n (the SemDeDup argument), so the soak scales k
-      // with √factor rather than holding it flat
-      "kmeans_fit" -> (() => Similarity.kmeansFit(emb,
-        math.max(8, (8 * math.sqrt(factor.toDouble)).round.toInt), 3)),
-      // PQ codebooks stay small at any corpus size (FAISS uses 256
-      // codewords per subspace at billion scale) — k is fixed, the
-      // per-round cost is the n·m·k·subDim assignment scan
-      "pq_fit" -> (() => Similarity.pqFit(emb, 16, 4, 2)),
-      // trained SemDeDup: same Σ cell² law as dedup_semantic, same
-      // scaled-codebook regime, plus the training rounds themselves
-      "dedup_semantic_trained" -> (() =>
-        Similarity.semanticDedupTrained(emb, 16 * factor, 2, 0.3)),
-      // the full trained IVFPQ recipe (both quantizers learned) —
-      // coarse codebook scaled √factor like kmeans_fit
-      "ann_ivfpq_trained" -> (() => Similarity.annIvfPqTopKTrained(emb,
-        math.max(8, (8 * math.sqrt(factor.toDouble)).round.toInt), 16, 4, 2, 5, 5)),
-      // fixed benchmark (the BASE corpus' every-50th doc) against the
-      // factor×-grown corpus — the real decontamination shape: the
-      // broadcast side stays eval-set-sized while probe work grows
-      // linearly (replica tokens are disjoint, so hit count stays ≈
-      // the base corpus')
-      "decontaminate" -> (() => TextOps.decontaminate(docs,
-        Tables.documents(spark, sfDir).where(col("doc_id") % 50 === 0), 4)),
-      // a real (fine-grained) shard key, the documented 100-TB usage —
-      // shard count grows with the corpus, partition size stays bounded
-      "pack_sequences" -> (() => TextOps.packSequences(
-        docs.withColumn("shard_key",
-          concat_ws("_", col("source"), (col("doc_id") / 1000).cast("long"))),
-        512, "shard_key")),
-      "pack_shuffled" -> (() => TextOps.packSequencesShuffled(
-        docs.withColumn("shard_key",
-          concat_ws("_", col("source"), (col("doc_id") / 1000).cast("long"))),
-        512, "shard_key")),
-      // the packed CONTENT pass: token explode + (shard, seq) agg with
-      // per-group state bounded by the budget — linear in tokens
-      "pack_token_stream" -> (() => TextOps.packTokenStream(
-        docs.withColumn("shard_key",
-          concat_ws("_", col("source"), (col("doc_id") / 1000).cast("long"))),
-        512, "shard_key")),
-      "corpus_pipeline" -> (() => graft.operators.Corpus.pipeline(
-        docs, Tables.documents(spark, sfDir).where(col("doc_id") % 50 === 0))),
-      "corpus_pipeline_lm" -> (() => graft.operators.Corpus.pipeline(
-        docs, Tables.documents(spark, sfDir).where(col("doc_id") % 50 === 0),
-        lmScoreBand = Some((-3.41, -3.39)))),
-      // mixture target grows with the corpus; the stage itself is a
-      // scalar-only selection over the survivors frame
-      "corpus_pipeline_mix" -> (() => graft.operators.Corpus.pipeline(
-        docs, Tables.documents(spark, sfDir).where(col("doc_id") % 50 === 0),
-        mixture = Some((Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
-          1500L * factor)))),
-      "token_topk" -> (() => TextOps.topTokens(docs, 20)),
-      "corpus_stats" -> (() => TextOps.corpusStats(docs)),
-      "sample_token_budget" -> (() => TextOps.sampleTokenBudget(
-        docs.withColumn("shard_key",
-          concat_ws("_", col("source"), (col("doc_id") / 1000).cast("long"))),
-        1000L, "shard_key")),
-      // the multimodal budget fill under a HOT MODALITY (~90% of all
-      // items in one modality — the real shape of a video-heavy
-      // corpus), at the REAL sampling ratio (budget ≈ 10% of corpus
-      // bytes — a budget fill with budget ≥ corpus is a no-op
-      // sample): the SEQUENTIAL fill must sort the hot modality's
-      // ENTIRE stream through ONE reducer regardless of the budget
-      // (windows can't prune — wall ∝ items, the r16 verdict's
-      // scale-killer), while the shipped split-merge (a) prunes
-      // buckets past the budget BEFORE the corpus shuffle (~90% of
-      // the stream never exchanges) and (b) spreads the survivors
-      // over 256 md5-prefix buckets — wall ∝ budget/parallelism,
-      // item-count-independent.
-      "multimodal_budget_seq_hot" -> (() =>
-        graft.sources.Multimodal.budgetSampleSeq(mediaHot, 150000L * factor)),
-      "multimodal_budget_hot" -> (() =>
-        graft.sources.Multimodal.budgetSample(mediaHot, 150000L * factor)),
-      // budget grows with the corpus (a factor× corpus gets a factor×
-      // mixture target); sources stay the base 20, so each source's
-      // window partition grows factor× — the running sum must stay
-      // linear in partition size
-      "sample_mixture" -> (() => TextOps.sampleMixture(docs,
-        Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
-        2000L * factor)),
-      // map-only regex scrub: pure projection, law = linear scan
-      "text_pii_mask" -> (() => TextOps.maskPii(TextOps.withInjectedPii(docs))),
-      // hybrid retrieval: bm25's linear scan + the dense linear scan;
-      // the fusion itself is candidate-bounded (≤ 2·nCand rows)
-      "search_hybrid_rrf" -> (() =>
-        TextOps.hybridRrf(docs, emb, Seq("hash", "join", "vector"), 20, 10)),
-      // filtered brute tier: same linear broadcast-join scan as
-      // ann_topk with the predicate discarding ~9/10 candidates inline
-      "ann_filtered" -> (() => Similarity.cosineTopKFiltered(emb, 5, 5, 10)),
-      // per-stage filter+agg passes joining per-user scalars — keys
-      // grow factor×, every stage linear
-      "funnel_conversion" -> (() =>
-        Relational.funnel(ev, Seq("signup", "click", "purchase"))),
-      "retention_cohorts" -> (() => Relational.retention(ev)),
-      // per-type daily aggs + |lags| shifted copies joining on
-      // (key, day) — linear in keys at fixed lag count
-      "ts_cross_corr" -> (() =>
-        graft.operators.TimeSeries.crossCorr(ev, "click", "purchase", 3)),
-      // one fold pass per key over the day-ordered series — the
-      // HoltFold law with m extra state slots
-      "ts_holt_winters" -> (() => graft.operators.TimeSeries.holtWinters(
-        graft.operators.TimeSeries.resampleDaily(ev), 0.5, 0.3, 0.4, 7, 5)),
-      // generator at factor×10K keys (100K at the default factor 10):
-      // validates that the 45 per-KEY md5 draws — not per-row — keep
-      // generation linear at realistic key cardinality
-      "ts_generate" -> (() => Generate.series(spark, factor * 10000, 200, 30)),
-      // one lag window on user + a |types|²-bounded matrix agg — the
-      // window shuffle is the only event-volume stage
-      "path_transitions" -> (() => Relational.pathTransitions(ev)),
-      // DISTINCT (day,user) collapse then broadcast day-dim fan-out
-      // (≤ windowDays per active day) — distinct keys grow factor×,
-      // days stay fixed, so both stages must scale linearly
-      "active_users_rolling" -> (() => Relational.activeUsersRolling(ev, 7)),
-      // sketch tier next to the exact: distinct keys grow factor× but
-      // per-(day, window) HLL state is a FLAT 64 registers — the
-      // window combine never touches ids (the exact side's user sets
-      // grow factor×); includes the exact side for the error column
-      "active_users_rolling_approx" -> (() =>
-        Relational.activeUsersRollingApprox(ev, 7)),
-      // sampled-bounds quantiles: the exact side sorts everything on
-      // one reducer per agg, the sample side keep/nBuckets of it
-      "feature_bins_approx" -> (() => graft.operators.Eval.featureBinsApprox(
-        graft.operators.TimeSeries.resampleDaily(ev))),
-      // the routed forecaster: strengths + density + four candidate
-      // folds + AR windows, all off one persisted daily frame
-      "ts_forecast_auto" -> (() => graft.operators.TimeSeries.forecastAuto(
-        ev, 3, 7, 5, 0.5, 0.3, 0.4,
-        crostonAlpha = 0.3, tauSparse = 0.8, tauSeason = 0.4, tauTrend = 0.25)),
-      // trainer rounds over the replica-grown vocabulary (~factor×
-      // words): per-round state stays vocab-sized; 1-row argmaxes
-      "bpe_train" -> (() => TextOps.bpeTrain(docs, 8)),
-      // zero-exchange encode replay over the factor× corpus
-      "bpe_encode" -> (() => TextOps.bpeEncode(docs,
-        TextOps.bpeTrainMerges(Tables.documents(spark, sfDir), 8)
-          .map(t => (t._2, t._3)))),
-      // span explode → (doc,span) distinct → span-df join; replica-
-      // prefixed tokens keep spans disjoint across replicas, so df
-      // stays base-shaped and the join grows linearly (the shingle-
-      // family disjointness argument)
-      "text_dup_spans" -> (() => TextOps.dupSpanRatio(docs, 5)),
-      // pure projection + constant-size agg frame: bin/interleave
-      // arithmetic is map-only; the audit groupBy has `files` groups
-      "layout_zorder" -> (() => graft.operators.Layout.zorderSummary(
-        ev.select(col("event_id").as("x"), col("user_id").as("y")),
-        "x", "y", 8, 32)),
-      // acf aggregate (3 lag windows over the key exchange) + a pure
-      // DL projection — cost law = the acf pass itself
-      "ts_pacf" -> (() => graft.operators.TimeSeries.pacf(
-        graft.operators.TimeSeries.resampleDaily(ev))),
-      // the ordered-replay hop emission: one lag window on user
-      "stream_transitions_batch" -> (() =>
-        graft.streaming.StreamOps.transitionsStreamBatch(ev)),
-      // GROUPING SETS: one Expand (×3 rows map-side) + one shuffle
-      "ts_rollup" -> (() => graft.operators.TimeSeries.rollup(ev)),
-      // index window + fit agg + residual join (exchange reuse) +
-      // coefficient agg — the whole chain under one key partitioning
-      "ts_forecast_harmonics" -> (() =>
-        graft.operators.TimeSeries.harmonicsForecast(
-          graft.operators.TimeSeries.resampleDaily(ev), 3, 5)),
-      // five windows over one key exchange
-      "ts_impute_outliers" -> (() =>
-        graft.operators.TimeSeries.imputeOutliers(
-          graft.operators.TimeSeries.resampleDaily(ev), 3.0)),
-      // map-side pair generation; replica-prefixed tokens grow the
-      // pair vocab ~factor× — the honest worst case for the two
-      // vocab-sized count frames
-      "text_pmi" -> (() => TextOps.pmiPairs(docs, 2, 5L, 50)),
-      // per-user lateness windows under the md5 arrival permutation
-      "stream_late_audit" -> (() =>
-        graft.streaming.StreamOps.lateEventsAudit(ev,
-          conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10).cast("bigint"),
-          3600000000L)),
-      // wide pivot: one map-side-combined groupBy
-      "events_pivot_daily" -> (() => Relational.pivotDaily(ev,
-        Seq("click", "error", "purchase", "signup", "view"))),
-      // codegen'd from_json projection + |types| groups
-      "events_json_agg" -> (() => Relational.jsonAgg(ev)),
-      // pure map-side chunking: split + bounded sequence explode +
-      // slice — law = linear in corpus bytes, zero shuffle
-      "chunk_documents" -> (() => TextOps.chunkDocs(docs, 64, 48)),
-      // candidate generation (the cosineTopK linear scan) grows
-      // factor×; the N² pair sims + k-step integer fold stay
-      // candidate-list-sized — law: the scan dominates
-      "mmr_rerank" -> (() => Similarity.mmrRerank(emb, 5, 10, 5)),
-      // one linear d²-explode scan; the power iteration itself is
-      // driver-side on the d×d aggregate — law: the scan dominates
-      "pca_power" -> (() => Similarity.pcaPower(emb)),
-      // mean/σ windows + native fold over one key exchange — the
-      // ewma/holt per-key law with alarm state
-      "ts_cusum" -> (() => graft.operators.TimeSeries.cusum(
-        graft.operators.TimeSeries.resampleDaily(ev), 0.25, 3.0)),
-      // spine explode (map-only off per-key bounds) + co-partitioned
-      // demand join + two EwmaFold recursions
-      "ts_croston" -> (() => graft.operators.TimeSeries.croston(ev, 0.3)),
-      // the forecast-chain cost + one extra lag window on the same
-      // key partitioning
-      "ts_mase" -> (() => graft.operators.TimeSeries.mase(ev, 3, 10, 5)),
-      // corpus collapses to ≤1001 per-score rows BEFORE the cumulative
-      // window — the window must stay constant-cost as the corpus grows
-      "eval_auc" -> (() => graft.operators.Eval.auc(
-        graft.operators.Eval.stopRatioScored(docs))),
-      // per-category scalars broadcast back onto the stream: map-only
-      // encode after one |types|-group agg
-      "target_encode" -> (() => graft.operators.Eval.targetEncode(ev)),
-      // TPC-H shapes at factor× facts (dimensions fixed → broadcast):
-      // q7: both key→nation maps broadcast; lineitem ⋈ orders is the
-      // one event-volume shuffle — law: linear in facts
-      "q7_volume" -> (() => {
-        val nation = Tables(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
-        val sn = Tables(spark, sfDir, "supplier")
-          .join(nation, col("s_nationkey") === col("n_nationkey"))
-          .where(col("n_name").isin("NATION_18", "NATION_19"))
-          .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-        val cn = scaleCustomer(spark, sfDir, factor)
-          .join(nation, col("c_nationkey") === col("n_nationkey"))
-          .where(col("n_name").isin("NATION_18", "NATION_19"))
-          .select(col("c_custkey"), col("n_name").as("cust_nation"))
-        val l = scaleLineitem(spark, sfDir, factor)
-          .join(broadcast(sn), col("s_suppkey") === col("l_suppkey"))
-        val o = scaleOrders(spark, sfDir, factor).select(col("o_orderkey"), col("o_custkey"))
-          .join(cn, col("c_custkey") === col("o_custkey"))
-        l.join(o, col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("supp_nation"), col("cust_nation"),
-            year(col("l_shipdate")).as("l_year"))
-          .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      }),
-      // q13: orders collapse to per-customer counts before the outer
-      // join — both sides grow factor×, law: linear
-      "q13_custdist" -> (() => {
-        val ocnt = scaleOrders(spark, sfDir, factor)
-          .where(col("o_orderpriority") =!= "1-URGENT")
-          .groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
-        scaleCustomer(spark, sfDir, factor).select(col("c_custkey"))
-          .join(ocnt, col("c_custkey") === col("o_custkey"), "left_outer")
-          .select(coalesce(col("n"), lit(0L)).as("c_count"))
-          .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-      }),
-      // the distinct-word collapse is the load-bearing stage: replica-
-      // prefixed tokens grow the vocab ~factor×, so BOTH the collapse
-      // input and the char explode grow linearly — never corpus ×
-      // word-length superlinear
-      "bpe_merge_step" -> (() => TextOps.bpePairCounts(docs, 30)),
-      // per-user sequential fold, parallel across users — the HOF twin
-      // of the streaming token bucket; state is two scalars + the
-      // per-user verdict list (bounded by events/user, which the
-      // disjoint-replica scaling holds constant)
-      "stream_ratelimit_batch" -> (() =>
-        graft.streaming.StreamOps.rateLimitStreamBatch(ev, 2.0, 21600000000L)),
-      // hwm-advancing CDC emissions: two windows on the user keying
-      "stream_cdc_batch" -> (() =>
-        graft.streaming.StreamOps.cdcStreamBatch(ev,
-          conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10).cast("bigint"))),
-      // collapsed-frame KS: the cumulative window must stay ≤1001 rows
-      // while the corpus grows
-      "eval_ks" -> (() => graft.operators.Eval.ks(
-        graft.operators.Eval.stopRatioScored(docs))),
-      // sessionize's exchange + one more compact aggregate
-      "session_stats" -> (() =>
-        Relational.sessionStats(ev, 1800000000L)),
-      // WindowGroupLimit prunes to k per partition BEFORE the exchange:
-      // the shuffle must carry ~k·partitions rows at any corpus size
-      "sample_fixed_k" -> (() =>
-        Relational.sampleFixedPerStratum(docs, 5, "panel")),
-      // the acf aggregate's single key exchange + scalar projection
-      "ts_ljung_box" -> (() => graft.operators.TimeSeries.ljungBox(
-        graft.operators.TimeSeries.resampleDaily(ev))),
-      // per-key O(n·m) fold bounded by series LENGTH (constant under
-      // the more-keys scaling) — cost must grow with keys only
-      "ts_dtw_profile" -> (() => graft.operators.TimeSeries.dtwToProfile(
-        graft.operators.TimeSeries.resampleDaily(ev), 10)),
-      // one-pass acf/rank/moments aggregate + map-only explode
-      "ts_ar_forecast" -> (() => graft.operators.TimeSeries.arForecast(
-        graft.operators.TimeSeries.resampleDaily(ev), 5)),
-      // stats collect (d rows) + zero-exchange transform + re-audit
-      "embedding_whiten" -> (() => Similarity.whitenAudit(emb)),
-      // rotation projection + the PQ scan — the annPq law plus one
-      // codegen dot per row
-      "ann_pq_rotated" -> (() => Similarity.annPqRotated(emb, 16, 4, 5, 5)),
-      // one sign projection + an integer popcount scan: the cheapest
-      // linear law in the ANN family
-      "ann_hamming" -> (() => Similarity.annHammingTopK(emb, 32, 5, 5)),
-      // q8: broadcast dims, one lineitem-orders shuffle — linear
-      "q8_market_share" -> (() => {
-        val part = Tables(spark, sfDir, "part")
-          .where(col("p_type") === "ECONOMY").select(col("p_partkey"))
-        val mkt = scaleLineitem(spark, sfDir, factor)
-          .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("l_suppkey"),
-            (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-        val nation = Tables(spark, sfDir, "nation")
-        val cust = scaleCustomer(spark, sfDir, factor)
-          .join(broadcast(nation
-            .join(Tables(spark, sfDir, "region"), col("n_regionkey") === col("r_regionkey"))
-            .where(col("r_name") === "ASIA").select(col("n_nationkey"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"))
-        val ords = scaleOrders(spark, sfDir, factor)
-          .join(cust, col("c_custkey") === col("o_custkey"))
-          .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
-        val sn = Tables(spark, sfDir, "supplier")
-          .join(nation, col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name"))
-        mkt.join(ords, col("o_orderkey") === col("l_orderkey"))
-          .join(broadcast(sn), col("s_suppkey") === col("l_suppkey"))
-          .groupBy(col("o_year"))
-          .agg(sum(when(col("n_name") === "NATION_18", col("rev")).otherwise(0.0)).as("nat"),
-            sum(col("rev")).as("tot"))
-      }),
-      // fixed LPA rounds over the linear edge list — the pagerank law
-      // with a (dst,label) count + top-1 window per round
-      "dedup_labelprop" -> (() => Dedup.labelProp(
-        Dedup.lshCandidatesFast(Dedup.minhashSigs(docs, 16), 2, 16))),
-      // CMS: token volume grows factor×, sketch state stays d·w flat;
-      // law = the token scan dominates, the cell agg is map-side
-      "token_topk_cms" -> (() => TextOps.topTokensCms(docs, 20)),
-      // per-key DFT sums on the collapsed daily frame: static ×13
-      // explode of |keys|·|days|, never event volume — more-keys law
-      "ts_periodogram" -> (() => graft.operators.TimeSeries.periodogram(
-        graft.operators.TimeSeries.resampleDaily(ev), 14)),
-      // EwmaFold over squared diffs: the ewma per-key law
-      "ts_vol_ewma" -> (() => graft.operators.TimeSeries.volEwma(
-        graft.operators.TimeSeries.resampleDaily(ev), 0.06)),
-      // Expand ×4 then ONE map-side-combined agg: 4×|groups| cells
-      // per partition at any fact volume
-      "revenue_cube" -> (() =>
-        Relational.revenueCube(scaleOrders(spark, sfDir, factor))),
-      // KN: the bigram-type table grows ~factor× (prefixed replicas),
-      // every stat derives from the ONE checkpointed type table
-      "text_lm_kn" -> (() => TextOps.lmScoreKneserNey(docs)),
-      // register collapse over factor× events into the SAME flat
-      // m=64/day sketch — cost = the scan, state flat
-      "stream_hll_batch" -> (() => Relational.hllDailyUsers(ev)),
-      // per-part agg reused by the 1-row scalar (single fact scan)
-      "q11_revenue_share" -> (() => {
-        val per = scaleLineitem(spark, sfDir, factor)
-          .groupBy(col("l_partkey"))
-          .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1) - col("l_discount").cast("decimal(4,2)"))).as("rev"))
-        val tot = per.agg(sum(col("rev")).as("tot"), count(lit(1)).as("cnt"))
-        per.crossJoin(broadcast(tot))
-          .where(col("rev").cast("double") >
-            col("tot").cast("double") / col("cnt") * lit(1.5))
-      }),
-      // sessionize's exchange + per-session bounded collect + the
-      // salted top-k (path vocabulary never globally sorted)
-      "path_topk" -> (() => Relational.pathTopK(ev, 1800000000L, 20)),
-      // running last-struct window on the user keying + |channels| agg
-      "attribution_last_touch" -> (() =>
-        Relational.attributionLastTouch(ev, 86400000000L)),
-      // lead window + |types| agg with exact per-type percentiles
-      "dwell_time" -> (() => Relational.dwellStats(ev)),
-      // cell equi-join pair volume = Σcell²; nCentroids scales like
-      // dedup_semantic's so the law stays linear
-      "ann_knn_graph" -> (() => Similarity.knnGraph(emb, 16 * factor, 3)),
-      // forecast chain + per-key sigma scalar join
-      "ts_forecast_intervals" -> (() =>
-        graft.operators.TimeSeries.forecastIntervals(ev, 3, 10, 5)),
-      // the holt fold law with the damped recursion
-      "ts_holt_damped" -> (() => graft.operators.TimeSeries.holtDamped(
-        graft.operators.TimeSeries.resampleDaily(ev), 0.5, 0.3, 0.9, 5)),
-      // pipeline labels + quality projection + per-cluster top-1
-      "dedup_keep_best" -> (() => Dedup.keepBest(
-        Dedup.pipeline(docs, 16, 2, 0.5), TextOps.quality(docs))),
-      // anomaly chain + island window on the same keying
-      "ts_anomaly_runs" -> (() =>
-        graft.operators.TimeSeries.anomalyRuns(ev, 3, 2.0)),
-      // candidate-bounded shingle equi-join (the jaccard law)
-      "dedup_containment" -> (() => {
-        val pairs = docs.select(col("doc_id").as("doc_a"),
-          (col("doc_id") + 1).as("doc_b"))
-        Dedup.containment(Dedup.shingles(docs), pairs)
-      }),
-      // two lag windows on one key exchange
-      "ts_growth_rates" -> (() => graft.operators.TimeSeries.growthRates(
-        graft.operators.TimeSeries.resampleDaily(ev))),
-      // wedge volume Σdeg² over the candidate graph — linear while
-      // the LSH document-frequency cap bounds degrees (disjoint
-      // replica shingles keep per-replica graphs identical)
-      "dedup_triangles" -> (() => Dedup.triangles(
-        Dedup.lshCandidatesFast(Dedup.minhashSigs(docs, 16), 2, 16))),
-      // nFolds× fold fan-out over the one resample — the rolling law
-      // is folds × the baseline chain's law
-      "ts_backtest_rolling" -> (() =>
-        graft.operators.TimeSeries.backtestRolling(ev, 3, 10, 5, 3)),
-      // sessionize exchange + shrinking ladder rungs on the
-      // (user, session) keying
-      "funnel_session" -> (() => Relational.funnelSession(
-        ev, 1800000000L, Seq("view", "click", "purchase"))),
-      // q21: the line volume collapses to per-(order,supplier) flags
-      // map-side; replicas add disjoint orders so the collapsed frame
-      // and the window both grow linearly, never quadratically
-      "q21_waiting" -> (() => {
-        import org.apache.spark.sql.expressions.Window
-        val perOrder = Window.partitionBy(col("l_orderkey"))
-        val flagged = scaleLineitem(spark, sfDir, factor)
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-          .join(scaleOrders(spark, sfDir, factor)
-              .where(col("o_orderstatus") === "F")
-              .select(col("o_orderkey"), col("o_orderdate")),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("l_orderkey"), col("l_suppkey"))
-          .agg(max((col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-            .cast("int")).as("late"))
-          .withColumn("n_supp", count(lit(1)).over(perOrder))
-          .withColumn("n_late", sum(col("late")).over(perOrder))
-        val eu = Tables(spark, sfDir, "supplier")
-          .join(broadcast(Tables(spark, sfDir, "nation")
-              .join(broadcast(Tables(spark, sfDir, "region")
-                  .where(col("r_name") === "EUROPE")),
-                col("n_regionkey") === col("r_regionkey"))
-              .select(col("n_nationkey"))),
-            col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("s_name"))
-        flagged.where(col("late") === 1 && col("n_supp") >= 2 && col("n_late") === 1)
-          .join(broadcast(eu), col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("s_name")).agg(count(lit(1)).as("numwait"))
-      }),
-      // q9: cost rides the broadcast part dim; the only event shuffle
-      // is lineitem ⋈ orders — both sides replicate with disjoint
-      // orderkeys, so the join stays linear
-      "q9_profit" -> (() => {
-        val p = Tables(spark, sfDir, "part").where(col("p_name").contains("red"))
-          .select(col("p_partkey"), col("p_retailprice"))
-        val sn = Tables(spark, sfDir, "supplier")
-          .join(broadcast(Tables(spark, sfDir, "nation")),
-            col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("n_name"))
-        scaleLineitem(spark, sfDir, factor)
-          .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-          .join(broadcast(sn), col("l_suppkey") === col("s_suppkey"))
-          .join(scaleOrders(spark, sfDir, factor)
-              .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year")),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("n_name"), col("o_year"))
-          .agg(sum(col("l_extendedprice").cast("decimal(12,2)")).as("rev"),
-            count(lit(1)).as("n_lines"))
-      }),
-      // q2: replicas duplicate the same (part, supplier) associations,
-      // so the cost aggregate collapses map-side to a base-sized frame
-      // and the per-part min broadcast-back is scale-invariant
-      "q2_min_cost" -> (() => {
-        val eu = Tables(spark, sfDir, "supplier")
-          .join(broadcast(Tables(spark, sfDir, "nation")
-              .join(broadcast(Tables(spark, sfDir, "region")
-                  .where(col("r_name") === "EUROPE")),
-                col("n_regionkey") === col("r_regionkey"))
-              .select(col("n_nationkey"), col("n_name"))),
-            col("s_nationkey") === col("n_nationkey"))
-          .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-        val p = Tables(spark, sfDir, "part").where(col("p_size") === 15)
-          .select(col("p_partkey"))
-        val cost = scaleLineitem(spark, sfDir, factor)
-          .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-          .join(broadcast(eu.select(col("s_suppkey"))),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("l_partkey"), col("l_suppkey"))
-          .agg(min(floor(col("l_extendedprice") / col("l_quantity") * 100.0 + 0.5001) / 100.0)
-            .as("unit_cost"))
-        val minCost = cost.groupBy(col("l_partkey").as("mk"))
-          .agg(min(col("unit_cost")).as("min_cost"))
-        cost.join(broadcast(minCost),
-            col("l_partkey") === col("mk") && col("unit_cost") === col("min_cost"))
-          .join(broadcast(eu), col("l_suppkey") === eu("s_suppkey"))
-      }),
-      // q16: the (partkey, suppkey) distinct must collapse MAP-SIDE —
-      // replicas duplicate the same associations, so the post-distinct
-      // frame stays base-sized while the scan grows factor×
-      "q16_supplier_cnt" -> (() => {
-        val assoc = scaleLineitem(spark, sfDir, factor)
-          .select(col("l_partkey"), col("l_suppkey")).distinct()
-        val p = Tables(spark, sfDir, "part")
-          .where(col("p_brand") =!= "Brand#45" &&
-            col("p_size").isin(1, 9, 17, 25, 33, 41, 49))
-          .select(col("p_partkey"), col("p_brand"), col("p_size"))
-        val bad = Tables(spark, sfDir, "supplier")
-          .where(col("s_acctbal") < 0).select(col("s_suppkey"))
-        assoc.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-          .join(broadcast(bad), col("l_suppkey") === col("s_suppkey"), "left_anti")
-          .groupBy(col("p_brand"), col("p_size"))
-          .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      }),
-      // gram df table grows linearly (replica-prefixed tokens keep
-      // gram vocabularies DISJOINT across replicas); both gram
-      // exchanges map-side combine
-      "text_boilerplate" -> (() => TextOps.boilerplate(docs, 3, 5)),
-      // graph build is the knn-graph Σcell² law (√n centroids keep it
-      // linear); the walk itself is nQueries·beam·rounds — flat
-      "ann_graph_search" -> (() =>
-        Similarity.annGraphSearch(emb, 16 * factor, 4, 5, 8, 2, 5)),
-      // two-layer hierarchy: layer-1 sample is corpus/4, both layers'
-      // builds follow the same √n-centroids law
-      "ann_graph_hier" -> (() =>
-        Similarity.annGraphSearchHier(emb, 16 * factor, 4, 5, 8, 2, 5)),
-      // the hierarchy with ROUTED per-level assignment (r15 — the r14
-      // diagnosis composed into the flagship tier): the slope should
-      // track the pair-volume law where the flat hier above carries
-      // the Θ(n^1.5·d) assignment term
-      "ann_graph_hier_routed" -> (() =>
-        Similarity.annGraphSearchHier(emb, 16 * factor, 4, 5, 8, 2, 5,
-          route = Some((8, 8, 4)))),
-      // three geometric levels (r14's flagship): slices shrink
-      // geometrically so the extra layer rides the convergent series,
-      // but the flat per-level assignment still carries the n^1.5 term
-      // — the routed twin below is the 100-TB path
-      "ann_graph_hier3" -> (() =>
-        Similarity.annGraphSearchHier(emb, 16 * factor, 4, 5, 8, 2, 5,
-          nLayers = 3)),
-      "ann_graph_hier3_routed" -> (() =>
-        Similarity.annGraphSearchHier(emb, 16 * factor, 4, 5, 8, 2, 5,
-          nLayers = 3, route = Some((8, 8, 4)))),
-      // routed store BUILD + stored probe at factor× — the serving
-      // path end-to-end (write every routing input, walk from the
-      // bucketed store)
-      "ann_graph_routed_stored" -> (() => {
-        Similarity.writeKnnGraphRouted(emb, 16 * factor, 4, 8, 8, 4,
-          "graft_soak_grs", 8, 2)
-        Similarity.annGraphSearchStored(spark, "graft_soak_grs", 5, 8, 2, 5)
-      }),
-      // hier-store takedown lifecycle at factor× (r15 lifecycle-parity
-      // close): routed per-level build + tombstone a tenth (sparing
-      // the codebook ids) + fold every level + re-pin the entry — the
-      // per-level compaction is scoped to affected srcs
-      "graph_hier_compact" -> (() => {
-        Similarity.writeKnnGraphHier(emb, 16 * factor, 4, "graft_soak_hcmp",
-          8, 2, 8, 2, nLayers = 2, route = Some((8, 8, 4)))
-        Similarity.deleteFromKnnGraph(
-          emb.where(col("vec_id") % 10 === 7 && col("vec_id") >= 16L * factor)
-            .select(col("vec_id")), "graft_soak_hcmp")
-        Similarity.compactKnnGraphHier("graft_soak_hcmp")
-        spark.table("graft_soak_hcmp_l0_edges")
-      }),
-      // the routed build: cell assignment via the centroid-graph walk
-      // (n·rounds·beam·deg·d, independent of k) instead of the flat
-      // n·k·d scan — the fix for the Θ(n^1.5) term the r14 factor-100
-      // soak diagnosed; expect ~pair-volume-linear where the flat
-      // builds above grow n^1.5
-      "ann_graph_routed" -> (() =>
-        Similarity.knnGraphRouted(emb, 16 * factor, 4, 8, 8, 4, 2)),
-      // graph-store takedown lifecycle at factor×: routed build +
-      // tombstone a tenth (sparing the codebook ids) + compact — the
-      // rebuild is scoped to AFFECTED srcs only (those with a stored
-      // edge into the removed set), the band/gram/ANN compaction law
-      // on the graph side
-      "graph_store_compact" -> (() => {
-        Similarity.writeKnnGraphRouted(emb, 16 * factor, 4, 8, 8, 4,
-          "graft_soak_gcmp", 8, 2)
-        Similarity.deleteFromKnnGraph(
-          emb.where(col("vec_id") % 10 === 7 && col("vec_id") >= 16L * factor)
-            .select(col("vec_id")), "graft_soak_gcmp")
-        Similarity.compactKnnGraphRouted("graft_soak_gcmp")
-        spark.table("graft_soak_gcmp_edges")
-      }),
-      // stage 1 truncated scan grows linearly; shortlist broadcast-back
-      // rerank is query-bounded
-      "ann_matryoshka" -> (() => Similarity.annMatryoshka(emb, 16, 5, 25, 5)),
-      // one key exchange + w-bounded block groups (w <= 16)
-      "ts_hurst" -> (() => graft.operators.TimeSeries.hurst(
-        graft.operators.TimeSeries.resampleDaily(ev), Seq(4, 8, 16))),
-      // one (user, bucket) map-side-combined sum over the x2 explode
-      "feature_hash" -> (() => Eval.featureHash(ev, 16)),
-      // everything past the per-user flag is 2-row/1-row frames
-      "ab_lift" -> (() => Eval.abLift(ev, "purchase", 14)),
-      "ab_cuped" -> (() => Eval.abCuped(ev, "2024-01-16")),
-      // k-1 maximin scans + the Lloyd rounds — the kmeans_fit cost
-      // class with a k-bounded driver state
-      "kmeans_fit_pp" -> (() => Similarity.kmeansFitMaximin(emb, 8, 2)),
-      // union + one window carry (the asof law), scanned descending
-      "ts_asof_forward" -> (() => {
-        val daily = graft.operators.TimeSeries.resampleDaily(ev)
-        val err = ev.where(col("event_type") === "error")
-          .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-          .agg((floor(max(col("value")) * 1000.0 + 0.5001) / 1000.0).as("err_v"))
-          .withColumn("err_day", col("day"))
-        Relational.asofJoinForward(daily, err, "user_id", "day",
-          Seq("err_v", "err_day"))
-      }),
-      // ladder joins + |stages| latency aggregate
-      "funnel_latency" -> (() => Relational.funnelLatency(
-        ev, Seq("signup", "click", "purchase"))),
-      // (user, week) distinct + co-partitioned self-join
-      "churn_weekly" -> (() => Relational.churnWeekly(ev)),
-      // ONE corpus pass into (grp, bin) counts; bins-sized after
-      "eval_psi" -> (() => Eval.psi(docs, 10)),
-      // five running sums on one key exchange
-      "ts_rolling_corr" -> (() =>
-        graft.operators.TimeSeries.rollingCorr(ev, 7)),
-      // rounds x collapsed-frame passes (the iterative convention)
-      "ts_outliers_esd" -> (() => graft.operators.TimeSeries.outliersEsd(
-        graft.operators.TimeSeries.resampleDaily(ev), 3, 2.0)),
-      // vocab-sized conditional aggregate + 1-row broadcast + TakeOrdered
-      "token_trending" -> (() => TextOps.tokenTrending(docs, 20)),
-      // per-TYPE BPE replay over the distinct-word frame
-      "bpe_token_freq" -> (() => TextOps.bpeTokenFreq(docs, 8, 20)),
-      // unigram-LM trainer: replica-prefixed tokens grow the WORD
-      // vocabulary factor× (the law under test — every EM round's
-      // state is vocab-sized; nSeed scales with the corpus so the
-      // kept piece set tracks vocabulary growth); note the replica
-      // prefix caps at factor ≤ 100 (word length ≤ the trainer's 12)
-      "ulm_train" -> (() => {
-        val v = TextOps.ulmTrainVocab(docs, 40 * factor, 2)
-        import spark.implicits._
-        v.map(x => (x._1, x._2, x._3)).toDF("piece", "n", "lnp")
-      }),
-      // encode under a trained vocab: zero-exchange map-side DP — the
-      // law is one linear corpus scan
-      "ulm_encode" -> (() => {
-        val v = TextOps.ulmTrainVocab(docs, 40 * factor, 2).map(x => (x._1, x._3))
-        TextOps.ulmEncode(docs, v)
-      }),
-      // WordPiece trainer: word types grow factor× (prefixed replica
-      // tokens), rounds fixed — per round one type-volume pair/symbol
-      // aggregate pair + a 1-row argmax, so the law is linear
-      "wordpiece_train" -> (() => TextOps.wordpieceTrain(docs, 8)),
-      // greedy longest-match encode: zero-exchange map-side projection
-      // — one linear corpus scan
-      "wordpiece_encode" -> (() =>
-        TextOps.wordpieceEncode(docs, TextOps.wordpieceVocab(docs, 8))),
-      // stored inverted index: build (one tokenize pass + two bucketed
-      // writes, linear) + query (query-term postings stay base-sized —
-      // replica tokens are prefixed — so the query cost is the skinny
-      // _dlens stats scan over factor× rows)
-      "bm25_stored" -> (() => {
-        TextOps.writeTextIndex(docs, "graft_soak_bm25", 8)
-        TextOps.bm25AgainstIndex(spark, "graft_soak_bm25",
-          Seq("hash", "join", "vector"), 10)
-      }),
-      // query-only against the index the previous entry built — the
-      // per-query serving cost (run together with bm25_stored)
-      "bm25_probe" -> (() =>
-        TextOps.bm25AgainstIndex(spark, "graft_soak_bm25",
-          Seq("hash", "join", "vector"), 10)),
-      // the write-path LAW pair: the r15 soak read the build ~4× for
-      // 3× at FIXED nBuckets=8 and attributed it (unproven) to the
-      // within-bucket n·log(n/buckets) sort. A deployment scales
-      // buckets with the corpus — the `_buckets` twin pins the
-      // rebuild linear under nBuckets ∝ factor while `_fixed8` keeps
-      // the super-linear reading honest
-      "bm25_build_fixed8" -> (() => {
-        TextOps.writeTextIndex(docs, "graft_soak_bm25f", 8)
-        spark.table("graft_soak_bm25f_postings")
-      }),
-      "bm25_build_buckets" -> (() => {
-        TextOps.writeTextIndex(docs, "graft_soak_bm25sc",
-          math.max(8, (8L * factor / 10).toInt))
-        spark.table("graft_soak_bm25sc_postings")
-      }),
-      // inverted-index takedown lifecycle: build + tombstone a tenth
-      // + compact (two linear bucketed rewrites)
-      "bm25_index_compact" -> (() => {
-        TextOps.writeTextIndex(docs, "graft_soak_bm25c", 8)
-        TextOps.deleteFromTextIndex(docs.where(col("doc_id") % 10 === 1),
-          "graft_soak_bm25c")
-        TextOps.compactTextIndex("graft_soak_bm25c")
-        spark.table("graft_soak_bm25c_postings")
-      }),
-      // filtered serving from the graph store: build + label sidecar +
-      // the mixed-beam walk (build's pair volume dominates — the
-      // √n-centroids law; the label join stays candidate-sized)
-      "graph_filtered_stored" -> (() => {
-        val kc = (16 * math.sqrt(factor.toDouble)).toInt
-        Similarity.writeKnnGraph(emb, kc, 4, "graft_soak_gf", 8, 2)
-        Similarity.writeGraphNodeLabels(emb, "graft_soak_gf")
-        Similarity.annGraphSearchFilteredStored(spark, "graft_soak_gf",
-          5, 16, 6, 4, 4)
-      }),
-      // filtered serving on the HIERARCHY: per-level builds under the
-      // √n-centroids law + the level-0 mixed-beam walk from the
-      // navigation's seeds — the geometric-slice sum keeps the build
-      // a convergent multiple of the base graph
-      "hier_filtered" -> (() => {
-        val kc = (16 * math.sqrt(factor.toDouble)).toInt
-        Similarity.writeKnnGraphHier(emb, kc, 4, "graft_soak_hf", 8)
-        Similarity.writeGraphNodeLabels(emb, "graft_soak_hf_l0")
-        Similarity.annGraphSearchHierFilteredStored(spark, "graft_soak_hf",
-          5, 16, 4, 4, 4)
-      }),
-      // all-stores hybrid retrieval: inverted-index build + graph-store
-      // build + the fused query (the query itself touches query-term
-      // postings + one vector-store scan — the builds dominate)
-      "hybrid_rrf_stored" -> (() => {
-        val kc = (16 * math.sqrt(factor.toDouble)).toInt
-        TextOps.writeTextIndex(docs, "graft_soak_hyb", 8)
-        Similarity.writeKnnGraph(emb, kc, 4, "graft_soak_hybg", 8, 2)
-        TextOps.hybridRrfStored(spark, "graft_soak_hyb", "graft_soak_hybg",
-          Seq("hash", "join", "vector"), 20, 10)
-      }),
-      // nightly-crawl triage against the prebuilt index (run together
-      // with bm25_stored so the store exists): one map-side pass over
-      // the factor×-growing delta under pinned stats — linear in the
-      // DELTA only, the serving law of the 45e contract
-      "bm25_delta" -> (() =>
-        TextOps.bm25ScoreDelta(docs.where(col("doc_id") % 2 === 0),
-          "graft_soak_bm25", Seq("hash", "join", "vector"), 10)),
-      // ---- tokenizer-trainer wall-clock LAW (the variable is the
-      // MERGE COUNT, not data volume — run on the BASE corpus):
-      // sequential pays one pair-agg job + one argmax collect PER
-      // MERGE (scheduler latency ∝ merges); batched is the provably-
-      // exact non-interacting batch loop (measured batch ≈ 1.1 on
-      // natural text, so still ∝ merges); collected is ONE
-      // distributed type collapse + the in-memory greedy loop —
-      // wall-clock ~flat in the merge count, the production shape
-      "bpe_train_seq_m22" -> (() => {
-        TextOps.bpeTrainMergesSeq(Tables.documents(spark, sfDir), 22)
-        spark.range(1).toDF("ok") }),
-      "bpe_train_seq_m88" -> (() => {
-        TextOps.bpeTrainMergesSeq(Tables.documents(spark, sfDir), 88)
-        spark.range(1).toDF("ok") }),
-      "bpe_train_batched_m88" -> (() => {
-        TextOps.bpeTrainBatches(Tables.documents(spark, sfDir), 88)
-        spark.range(1).toDF("ok") }),
-      "bpe_train_collected_m22" -> (() => {
-        TextOps.bpeTrainMerges(Tables.documents(spark, sfDir), 22)
-        spark.range(1).toDF("ok") }),
-      "bpe_train_collected_m88" -> (() => {
-        TextOps.bpeTrainMerges(Tables.documents(spark, sfDir), 88)
-        spark.range(1).toDF("ok") }),
-      "wordpiece_train_seq_m25" -> (() => {
-        TextOps.wordpieceTrainMergesSeq(Tables.documents(spark, sfDir), 25)
-        spark.range(1).toDF("ok") }),
-      "wordpiece_train_seq_m100" -> (() => {
-        TextOps.wordpieceTrainMergesSeq(Tables.documents(spark, sfDir), 100)
-        spark.range(1).toDF("ok") }),
-      "wordpiece_train_collected_m100" -> (() => {
-        TextOps.wordpieceTrainMerges(Tables.documents(spark, sfDir), 100)
-        spark.range(1).toDF("ok") }))
-
-    // optional args name a subset — e.g. the dedup family at a higher
-    // SPARK_GRAFT_SOAK_FACTOR without paying for the whole suite
-    val only = args.toSet
-    val results = queries.filter { case (n, _) => only.isEmpty || only(n) }
-      .map { case (name, mk) =>
-      def once(): Double = {
-        spark.sharedState.cacheManager.clearCache()
-        // the soak measures the BUILD's scale law — the train-once
-        // memo (legitimate in Verify/Bench) would hide exactly it
-        graft.operators.Similarity.clearTrainedMemo()
-        val t0 = System.nanoTime()
-        sink(mk())
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm the code path
-      name -> math.min(once(), once())
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"soak","factor":$factor,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val run = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-soak-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(Session.deleteTree(run))
+    val t0 = System.nanoTime()
+    val growth = ladder(spark, sfDir, run.getPath, factor, names)
+    val errs = growth.filter(_.failed).map("\"" + _.gate + "\"").mkString("[", ",", "]")
+    val wall = (System.nanoTime() - t0) / 1e9
+    println(s"""{"metric":"soak","factor":$factor,"rungs":${rungs(factor).mkString("[", ",", "]")},""" +
+      s""""unit":"sec","n":${growth.size},"errors":$errs,"wall_s":$wall,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

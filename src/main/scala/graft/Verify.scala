@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,12 +8,7 @@ object Verify {
     // subset (local iteration); the driver always passes exactly two.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Session.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Subset mode wipes a pre-existing outDir first: writing a
     // filtered oracle_sql.json into a dir holding a previous full run
     // would silently truncate the shared json while stale parquet dirs

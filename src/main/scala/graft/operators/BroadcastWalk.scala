@@ -74,9 +74,9 @@ private[operators] object BroadcastWalk {
 
   /** The walk of every query `vec_id < nQueries` over nodes `e`
     * (vec_id, v, norm), edges `adj` (src, nbr) and tombstones `tombs`
-    * (vec_id): `cos` scores a pair from (v, norm, qv, qn); `schema` is
-    * the round loop's output schema. One query runs now (job
-    * description `graphWalk:collect`): the union of the three scans.
+    * (vec_id): `cos` scores a pair from (v, norm, qv, qn). One query
+    * runs now (job description `graphWalk:collect`): the union of the
+    * three scans.
     * The tombstone mask applies here, on the collected rows, and the
     * seeds are the surviving node rows below `nQueries`, one seed
     * (vec_id, v, norm, vec_id) per row, so a repeated id seeds with
@@ -85,37 +85,58 @@ private[operators] object BroadcastWalk {
     * in the consumer's job, as the loop's lazy last round does.
     */
   def ofQueries(e: DataFrame, adj: DataFrame, tombs: Option[DataFrame], nQueries: Int,
-                cos: Column, schema: StructType, beam: Int, rounds: Int, k: Int): DataFrame = {
+                cos: Column, beam: Int, rounds: Int, k: Int): DataFrame = {
     val spark = e.sparkSession
     val (graph, nodeRows) = collectGraph(e, adj, tombs)
     val groups = nodeRows.filter(_.getLong(1) < nQueries)
       .groupBy(_.getLong(1)).toSeq.sortBy(_._1)
       .map { case (qid, rs) => (qid: Any, rs.toSeq.map(r => Row(qid, r.get(2), r.get(3), qid))) }
-    val walker = walkerOf(e, graph, cos, e.schema("v").dataType, beam, rounds, k)
+    val vT = e.schema("v").dataType
+    val score = boundScore(e, cos, vT)
+    val walker = () => new Walker(graph.value, score, vT, beam, rounds, k)
     val walked = spark.sparkContext.parallelize(groups, spark.sparkContext.defaultParallelism)
       .mapPartitions(it => walker().walkGroups(it))
-    spark.createDataFrame(walked, schema)
+    val qid = e.schema("vec_id").nullable
+    spark.createDataFrame(walked, loopSchema(qid, vT, qid, adj, score))
   }
 
   /** The walk of `seeds` (qid, qv, qn, vid) over nodes `e` (vec_id, v,
-    * norm) and edges `adj` (src, nbr), both already masked: `cos` and
-    * `schema` as in [[ofQueries]]. The graph collect runs now (job
+    * norm) and edges `adj` (src, nbr), both already masked: `cos` as in
+    * [[ofQueries]]. The graph collect runs now (job
     * description `graphWalk:collect`), as does the seeds' exchange by
     * qid (`graphWalk:in-task`); the walk itself runs in the consumer's
     * job.
     */
   def apply(e: DataFrame, adj: DataFrame, seeds: DataFrame, cos: Column,
-            schema: StructType, beam: Int, rounds: Int, k: Int): DataFrame = {
+            beam: Int, rounds: Int, k: Int): DataFrame = {
     val spark = e.sparkSession
     val s = seeds.select(col("qid"), col("qv"), col("qn"), col("vid"))
     val (graph, _) = collectGraph(e, adj, None)
-    val walker = walkerOf(e, graph, cos, s.schema("qv").dataType, beam, rounds, k)
+    val qvT = s.schema("qv").dataType
+    val score = boundScore(e, cos, qvT)
+    val walker = () => new Walker(graph.value, score, qvT, beam, rounds, k)
     val walked = Par.labelled(spark, "graphWalk:in-task") {
       s.repartition(spark.sparkContext.defaultParallelism, col("qid")).rdd
         .mapPartitions(it => walker().walkAll(it))
     }
-    spark.createDataFrame(walked, schema)
+    spark.createDataFrame(walked,
+      loopSchema(s.schema("qid").nullable, qvT, s.schema("vid").nullable, adj, score))
   }
+
+  /** The round loop's output schema (qid, qv, qn, vid, cos, rank), read
+    * off its inputs rather than analysed from a loop: its dedup's
+    * max/min columns are nullable, a vid comes from a seed or an edge's
+    * nbr, and rank is a row number.
+    */
+  private def loopSchema(qidNull: Boolean, qvT: DataType, vidNull: Boolean,
+                         adj: DataFrame, score: Expression): StructType =
+    StructType(Seq(
+      StructField("qid", LongType, qidNull),
+      StructField("qv", qvT),
+      StructField("qn", DoubleType),
+      StructField("vid", LongType, vidNull || adj.schema("nbr").nullable),
+      StructField("cos", score.dataType),
+      StructField("rank", LongType, nullable = false)))
 
   /** Nodes, edges and tombstones in ONE query (job description
     * `graphWalk:collect`): a union of the three scans, with no join.
@@ -150,21 +171,13 @@ private[operators] object BroadcastWalk {
     (graph, nodeRows)
   }
 
-  /** A serializable factory of the per-task [[Walker]] over `graph`,
-    * scoring with `cos` for query vectors of type `qvT`.
+  /** `cos` analysed over (v, norm, qv, qn), for query vectors of type
+    * `qvT`, and bound to that row order — the expression the loop's
+    * scoring join evaluates, to be evaluated on a [[JoinedRow]] of a
+    * node row and a query row.
     */
-  private def walkerOf(e: DataFrame, graph: Broadcast[Graph], cos: Column, qvT: DataType,
-                       beam: Int, rounds: Int, k: Int): () => Walker = {
-    val score = boundScore(e, cos,
-      Seq("v" -> e.schema("v").dataType, "norm" -> DoubleType, "qv" -> qvT, "qn" -> DoubleType))
-    () => new Walker(graph.value, score, qvT, beam, rounds, k)
-  }
-
-  /** `cos` analysed over (v, norm, qv, qn) and bound to that row order
-    * — the expression the loop's scoring join evaluates, to be
-    * evaluated on a [[JoinedRow]] of a node row and a query row.
-    */
-  private def boundScore(e: DataFrame, cos: Column, cols: Seq[(String, DataType)]): Expression = {
+  private def boundScore(e: DataFrame, cos: Column, qvT: DataType): Expression = {
+    val cols = Seq("v" -> e.schema("v").dataType, "norm" -> DoubleType, "qv" -> qvT, "qn" -> DoubleType)
     val proto = e.sparkSession.createDataFrame(java.util.List.of[Row](),
         StructType(cols.map { case (n, t) => StructField(n, t) }))
       .select(cos.as("cos"))

@@ -1160,17 +1160,13 @@ object Similarity {
   private def graphWalk(e: DataFrame, graph: DataFrame,
                         nQueries: Int, beam: Int, rounds: Int, k: Int,
                         tombs: Option[DataFrame] = None): DataFrame = {
-    checkWalk(beam, rounds, k)
+    checkWalk("annGraphSearch", beam, rounds, k)
     def seeds(e: DataFrame) = e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"),
         col("vec_id").as("vid"))
-    // the in-task path takes the lazy one-round loop's schema over the
-    // UNMASKED frames: an anti-join keeps its left side's output, so
-    // the mask cannot change it
     val walked =
       if (BroadcastWalk.fits(e, graph, tombs))
-        BroadcastWalk.ofQueries(e, graph, tombs, nQueries, walkCos,
-          walkRounds(e, graph, seeds(e), beam, 1, k).schema, beam, rounds, k)
+        BroadcastWalk.ofQueries(e, graph, tombs, nQueries, walkCos, beam, rounds, k)
       else {
         val (me, mg) = (Store.mask(e, tombs, "vec_id"),
           Store.mask(graph, tombs, "vec_id", "src", "nbr"))
@@ -1208,23 +1204,20 @@ object Similarity {
   private def graphWalkScored(e: DataFrame, adj: DataFrame,
                               seeds: DataFrame, beam: Int,
                               rounds: Int, k: Int): DataFrame = {
-    checkWalk(beam, rounds, k)
-    // the lazy one-round loop (analysed, never run) carries the loop's
-    // exact output schema: later rounds union frames of the same types
-    // and nullability
+    checkWalk("annGraphSearch", beam, rounds, k)
     if (BroadcastWalk.fits(e, adj, seeds))
-      BroadcastWalk(e, adj, seeds, walkCos,
-        walkRounds(e, adj, seeds, beam, 1, k).schema, beam, rounds, k)
+      BroadcastWalk(e, adj, seeds, walkCos, beam, rounds, k)
     else walkRounds(e, adj, seeds, beam, rounds, k)
   }
 
-  /** The walk arguments both paths require, checked before a path is
-    * picked: the in-task path would otherwise walk `rounds = 0` as one
-    * round where the loop refuses it.
+  /** The walk arguments every walk requires, checked before a path is
+    * picked (the in-task path would otherwise walk `rounds = 0` as one
+    * round where the loop refuses it); `caller` names the walk in the
+    * message.
     */
-  private def checkWalk(beam: Int, rounds: Int, k: Int): Unit = {
-    require(k <= beam, s"annGraphSearch: k=$k must be <= beam=$beam")
-    require(rounds >= 1, s"annGraphSearch: rounds must be >= 1, got $rounds")
+  private def checkWalk(caller: String, beam: Int, rounds: Int, k: Int): Unit = {
+    require(k <= beam, s"$caller: k=$k must be <= beam=$beam")
+    require(rounds >= 1, s"$caller: rounds must be >= 1, got $rounds")
   }
 
   /** A walk's pair score from node columns (v, norm) and query columns
@@ -1342,8 +1335,6 @@ object Similarity {
                              rounds: Int, k: Int, nLabels: Int,
                              nprobe: Int = 2): DataFrame = {
     require(nLabels >= 1, s"annGraphSearchFiltered: need nLabels >= 1, got $nLabels")
-    require(k <= beam, s"annGraphSearchFiltered: k=$k must be <= beam=$beam")
-    require(rounds >= 1, s"annGraphSearchFiltered: rounds must be >= 1, got $rounds")
     VectorExprs.register(embeddings.sparkSession)
     val graph = knnGraphEdges(embeddings, nCentroids, kGraph, nprobe)
     // MIXED frontier per round: the navigation beam (top-beam by
@@ -1367,7 +1358,7 @@ object Similarity {
     val labels = eL.select(col("vec_id").as("vid"), col("label"))
     val q = eL.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-    filteredWalkScored(nodes, labels, graph,
+    filteredWalkScored("annGraphSearchFiltered", nodes, labels, graph,
       q.select(col("qid"), col("qv"), col("qn"), col("qid").as("vid")),
       beam, rounds, k, nLabels)
   }
@@ -1446,8 +1437,6 @@ object Similarity {
     graphGuard(spark, table, "edges")
     Store.guard(spark, table, "nlabels", "graph store", "writeGraphNodeLabels")
     require(nLabels >= 1, s"annGraphSearchFilteredStored: need nLabels >= 1, got $nLabels")
-    require(k <= beam, s"annGraphSearchFilteredStored: k=$k must be <= beam=$beam")
-    require(rounds >= 1, s"annGraphSearchFilteredStored: rounds must be >= 1, got $rounds")
     val (mNodes, mEdges) = maskedGraphStore(spark, table)
     val labels = spark.table(s"${table}_nlabels")
       .select(col("vec_id").as("vid"), col("label"))
@@ -1455,7 +1444,7 @@ object Similarity {
       .withColumn("norm", sqrt(expr("graft_vec_dot(v, v)")))
     val q = nodes.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qn"))
-    filteredWalkScored(nodes, labels, mEdges.select(col("src"), col("nbr")),
+    filteredWalkScored("annGraphSearchFilteredStored", nodes, labels, mEdges.select(col("src"), col("nbr")),
       q.select(col("qid"), col("qv"), col("qn"), col("qid").as("vid")),
       beam, rounds, k, nLabels)
   }
@@ -1470,11 +1459,13 @@ object Similarity {
     * join over hop1 ∪ hop2, one hash(qid) exchange feeding the dedup
     * agg and BOTH frontier windows (rk rides hash(qid); rkm's
     * (qid, match) clustering is satisfied by the same partitioning).
+    * `caller` names the walk in [[checkWalk]]'s message.
     */
-  private def filteredWalkScored(nodes: DataFrame, labels: DataFrame,
+  private def filteredWalkScored(caller: String, nodes: DataFrame, labels: DataFrame,
                                  graph: DataFrame, seeds: DataFrame,
                                  beam: Int, rounds: Int,
                                  k: Int, nLabels: Int): DataFrame = {
+    checkWalk(caller, beam, rounds, k)
     val isMatch = col("label") === pmod(col("qid"), lit(nLabels.toLong)).cast("int")
     // candidate-sized sides broadcast EXPLICITLY (see walkRounds:
     // the corpus-sized node/label scans must never shuffle, statically)
@@ -2237,7 +2228,8 @@ object Similarity {
     val (e0, g0, _, seeds) = hierNavigate(spark, table, nQueries, beam, rounds)
     val labels = spark.table(s"${table}_l0_nlabels")
       .select(col("vec_id").as("vid"), col("label"))
-    filteredWalkScored(e0, labels, g0, seeds, beam, rounds, k, nLabels)
+    filteredWalkScored("annGraphSearchHierFilteredStored", e0, labels, g0, seeds,
+      beam, rounds, k, nLabels)
   }
 
   /** Recall@k of the FILTERED hier walk vs the exact filtered top-k —

@@ -984,16 +984,26 @@ class GraphSearchSpec extends AnyFunSuite {
       Similarity.annGraphSearchStored(spark, t, 3, beam, rounds, k)
     // the store walks on both paths with valid arguments
     bothPaths(walk(4, 1, 2))
-    def errors() = Seq(() => walk(4, 0, 2), () => walk(2, 1, 3)).map(w =>
-      intercept[IllegalArgumentException](w()).getMessage)
+    // the filtered walks, flat and hier, over stores with label sidecars
+    val emb = corpus().withColumn("label", (col("vec_id") % 4).cast("int"))
+    Similarity.writeKnnGraph(emb, 16, 4, "graft_walk_args_f", 4)
+    Similarity.writeGraphNodeLabels(emb, "graft_walk_args_f")
+    Similarity.writeKnnGraphHier(emb, 16, 4, "graft_walk_args_h", 4)
+    Similarity.writeGraphNodeLabels(emb, "graft_walk_args_h_l0")
+    val filtered = Seq[(Int, Int, Int) => org.apache.spark.sql.DataFrame](
+      Similarity.annGraphSearchFilteredStored(spark, "graft_walk_args_f", 3, _, _, _, 4),
+      Similarity.annGraphSearchHierFilteredStored(spark, "graft_walk_args_h", 3, _, _, _, 4))
+    for (w <- filtered) assert(w(4, 1, 2).collect().nonEmpty)
+    def errors() = (walk _ +: filtered).flatMap(w => Seq(() => w(4, 0, 2), () => w(2, 1, 3)))
+      .map(w => intercept[IllegalArgumentException](w()).getMessage)
     val inTask = errors()
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
     val loop = try errors() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    for (msgs <- Seq(inTask, loop)) {
-      assert(msgs(0).contains("rounds must be >= 1"), msgs)
-      assert(msgs(1).contains("k=3 must be <= beam=2"), msgs)
+    for (msgs <- Seq(inTask, loop); Seq(rounds0, kOverBeam) <- msgs.grouped(2)) {
+      assert(rounds0.contains("rounds must be >= 1"), msgs)
+      assert(kOverBeam.contains("k=3 must be <= beam=2"), msgs)
     }
   }
 
