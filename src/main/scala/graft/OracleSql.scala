@@ -17,6 +17,28 @@ object OracleSql {
     s"FLOOR(($e) * $f + 0.5001) / $f"
   }
 
+  /** The recall@k tail of every recall oracle, the SQL twin of
+    * `Similarity.recallAt`: the `exact` CTE (qid, vid) LEFT JOIN the
+    * approximate rows `a` (qid, vid, hit = 1), one row per query with
+    * columns (`tags`…, qid, n_exact, n_hit, recall). Untagged
+    * ([[recallTail]]) it reads the `approx` CTE and orders by qid;
+    * tagged, it is one branch of a sweep's UNION ALL over an inline
+    * approx subquery, and the sweep orders the union.
+    */
+  private def recallBranch(tags: String, approx: String): String = {
+    val (head, on, order) =
+      if (tags.isEmpty) ("x.qid, COUNT(*) AS n_exact,", " ", " ORDER BY x.qid")
+      else (s"$tags, x.qid,\n       COUNT(*) AS n_exact,", "\n  ", "")
+    s"""SELECT $head
+       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
+       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
+       |FROM exact x LEFT JOIN $approx${on}ON x.qid = a.qid AND x.vid = a.vid
+       |GROUP BY x.qid$order""".stripMargin
+  }
+
+  /** [[recallBranch]] untagged, over the `approx` CTE. */
+  private def recallTail: String = recallBranch("", "approx a")
+
   /** Daily resample of events — the shared base of the series chain. */
   val daily: String =
     s"""daily AS (
@@ -2237,11 +2259,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** Recall@k of the FILTERED hier walk vs the exact filtered top-k —
     * the oversearch audit on the cold-start tier, next to 48g's flat
@@ -2264,11 +2282,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** Filtered-walk recall at each (beam, rounds) budget — one branch
     * per budget, each the standalone filtered-recall chain.
@@ -2283,7 +2297,6 @@ object OracleSql {
         .stripMargin
     }.mkString("", "\nUNION ALL\n", "\nORDER BY beam, rounds, qid")
 
-  /** Recall@k of the graph walk vs the exact cosine top-k. */
   /** Kendall tau-a + Jaccard between the full-dim exact top-k and the
     * pDims-prefix exact top-k (both cosines r3'd before rank).
     */
@@ -2560,11 +2573,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** Recall@k of the walk at each (beam, rounds) budget — one branch
     * per budget, each the standalone recall chain with its literals.
@@ -2578,6 +2587,7 @@ object OracleSql {
         .stripMargin
     }.mkString("", "\nUNION ALL\n", "\nORDER BY beam, rounds, qid")
 
+  /** Recall@k of the graph walk vs the exact cosine top-k. */
   def annGraphSearchRecall(nCentroids: Int, kGraph: Int, nQueries: Int,
                            beam: Int, rounds: Int, k: Int, nprobe: Int = 2): String =
     s"""WITH approx AS (
@@ -2593,11 +2603,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** [[graft.operators.Similarity.semanticDecontaminate]]'s mirror:
     * the shared IVF assignment CTEs (rounded cosine argmax, cid-asc
@@ -2713,15 +2719,8 @@ object OracleSql {
                        probes: Seq[Int],
                        pqCodewords: Int = 0, pqM: Int = 0): String = {
     def branch(tier: String, p: Int, inner: String): String =
-      s"""SELECT '$tier' AS tier, CAST($p AS BIGINT) AS nprobe, x.qid,
-         |       COUNT(*) AS n_exact,
-         |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-         |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-         |FROM exact x LEFT JOIN (
-         |  SELECT qid, vid, 1 AS hit FROM (
-         |$inner) ${tier}$p) a
-         |  ON x.qid = a.qid AND x.vid = a.vid
-         |GROUP BY x.qid""".stripMargin
+      recallBranch(s"'$tier' AS tier, CAST($p AS BIGINT) AS nprobe",
+        s"(\n  SELECT qid, vid, 1 AS hit FROM (\n$inner) $tier$p) a")
     val branches = (
       probes.map(p => branch("ivf", p, annIvfProbe(nCentroids, nQueries, k, p))) ++
       (if (pqCodewords > 0)
@@ -3940,11 +3939,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   def embeddingCovariance(dim: Int = 64): String =
@@ -4292,11 +4287,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** Residual IVF+PQ (FAISS proper): the annIvfPq CTE chain with every
     * PQ-facing vector replaced by its residual r = v − centroid(cell)
@@ -4416,11 +4407,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** Multi-probe IVF+PQ: the annIvfPq CTEs with the query side
@@ -4740,11 +4727,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM ar WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** Recall@k of the PQ tier vs the exact cosine top-k: the annPq
@@ -4803,11 +4786,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY hamming, vid) AS rank
        |  FROM s),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** The Householder-rotated `e` CTE chain (raw → dot → reflected,
@@ -4908,11 +4887,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   def annPqRecall(nCodewords: Int, m: Int, nQueries: Int, k: Int, dim: Int = 64): String = {
@@ -4954,11 +4929,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** Recall@k of the composed IVF+PQ tier vs the exact cosine top-k:
@@ -5026,11 +4997,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
        |approx AS (SELECT qid, vid, 1 AS hit FROM pr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** Two-stage IVFPQ rerank: the ADC top-`shortlist` (the full
@@ -5071,11 +5038,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   /** Matryoshka two-stage: prefix-dim cosine shortlist, full-dim
     * exact rerank (the annIvfPqRerank tail on a truncated stage 1).
@@ -5117,11 +5080,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM xs),
        |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
 
   def annTopK(nQueries: Int, k: Int): String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -5605,11 +5564,7 @@ object OracleSql {
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
        |  FROM ls),
        |approx AS (SELECT qid, vid, 1 AS hit FROM lr WHERE rank <= $k)
-       |SELECT x.qid, COUNT(*) AS n_exact,
-       |       CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |       ${R("SUM(COALESCE(a.hit, 0)) / COUNT(*)")} AS recall
-       |FROM exact x LEFT JOIN approx a ON x.qid = a.qid AND x.vid = a.vid
-       |GROUP BY x.qid ORDER BY x.qid""".stripMargin
+       |$recallTail""".stripMargin
   }
 
   /** Corpus-wide top-k tokens by frequency. */

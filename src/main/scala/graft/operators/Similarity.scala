@@ -42,12 +42,6 @@ object Similarity {
     */
   private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
-  /** See [[graft.operators.Par.inParallel]] — overlap independent
-    * store-builder actions (disjoint tables only).
-    */
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    Par.inParallel(tasks: _*)
-
   /** Embedding dimension of the test corpus. */
   val DIM = 64
 
@@ -68,6 +62,45 @@ object Similarity {
         Window.partitionBy(col("qid")).orderBy(ord, col("vid"))))
       .where(col("rank") <= k)
   }
+
+  /** Recall@k of an approximate tier against the exact answer, per
+    * query: the one scoring core of every recall and sweep audit.
+    * `exact` and `approx` are read as (qid, vid); the exact rows
+    * left-join the approximate ones, so a query the tier misses
+    * entirely still reports recall 0. Output: `tags` (leading literal
+    * columns such as (beam, rounds) or (tier, nprobe)), then qid,
+    * n_exact, n_hit and recall = r3(n_hit / n_exact). Lazy: no
+    * checkpoint and no job of its own, so a lazy audit stays one plan;
+    * the graph audits, whose walks run eagerly, go through
+    * [[walkRecall]].
+    */
+  private def recallAt(exact: DataFrame, approx: DataFrame, tags: Column*): DataFrame =
+    exact.select(col("qid"), col("vid"))
+      .join(approx.select(col("qid"), col("vid"), lit(1).as("hit")), Seq("qid", "vid"), "left")
+      .groupBy(col("qid"))
+      .agg(count(lit(1)).as("n_exact"), sum(coalesce(col("hit"), lit(0))).as("n_hit"))
+      .select(tags ++ Seq(col("qid"), col("n_exact"), col("n_hit"),
+        r3(col("n_hit") / col("n_exact")).as("recall")): _*)
+
+  /** The graph audits' fan-out over [[recallAt]]: the exact side,
+    * projected to (qid, vid) and eagerly checkpointed, runs in parallel
+    * with each walk (guide §2.6: a walk's checkpoints are eager, so run
+    * one after another they serialise their rounds' scheduler
+    * barriers), then each walk's recall rows, led by its tags, are
+    * unioned in input order. Output columns are [[recallAt]]'s.
+    */
+  private def walkRecall(exact: => DataFrame,
+                         walks: (Seq[Column], () => DataFrame)*): DataFrame = {
+    val sides = Par.inParallelAll(
+      (() => exact.select(col("qid"), col("vid")).localCheckpoint()) +: walks.map(_._2))
+    walks.map(_._1).zip(sides.tail).map { case (tags, approx) =>
+      recallAt(sides.head, approx, tags: _*)
+    }.reduce(_ unionByName _)
+  }
+
+  /** A graph sweep's (beam, rounds) tags. */
+  private def budget(beam: Int, rounds: Int): Seq[Column] =
+    Seq(lit(beam.toLong).as("beam"), lit(rounds.toLong).as("rounds"))
 
   /** Process-level memo for DRIVER-SIDE trained artifacts (k-means
     * centroids, PQ codebooks, PCA components, OPQ rotations): keyed
@@ -304,8 +337,7 @@ object Similarity {
     val q = prepared(embeddings).where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), pairCos().as("cos"))
     // phase 1: top-k within (qid, salt); phase 2: global top-k per qid
     saltedTopK(scored, "cos", ascending = false, k)
   }
@@ -327,8 +359,7 @@ object Similarity {
     val q = e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), pairCos().as("cos"))
     saltedTopK(scored, "cos", ascending = false, k)
   }
 
@@ -352,8 +383,7 @@ object Similarity {
     val scored = e.join(broadcast(q),
         col("vec_id") =!= col("qid") &&
         col("label") === pmod(col("qid"), lit(nLabels.toLong)).cast("int"))
-      .select(col("qid"), col("vec_id").as("vid"), col("label"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), col("label"), pairCos().as("cos"))
     saltedTopK(scored, "cos", ascending = false, k)
   }
 
@@ -854,7 +884,7 @@ object Similarity {
     // a takedown may remove a centroid's NODE row, and append/compact
     // must keep routing under the pinned codebook regardless
     import spark.implicits._
-    inParallel(
+    Par.inParallel(
       () => graft.sources.Formats.writeBucketedKeys(
         assigned.select(col("vec_id"), col("cell"), col("v")),
         s"${table}_nodes", Seq("cell"), nBuckets),
@@ -922,7 +952,7 @@ object Similarity {
     // the nodes/probes appends are independent of each other (and of
     // the finished edge swap) — overlap them; they stay AFTER the
     // staging write, which scans the PRE-append _nodes/_probes
-    inParallel(
+    Par.inParallel(
       () => graft.sources.Formats.writeBucketedKeys(
         newAssigned.select(col("vec_id"), col("cell"), col("v")),
         s"${table}_nodes", Seq("cell"), nBuckets, mode = "append"),
@@ -1092,7 +1122,7 @@ object Similarity {
     def staged(t: String) = s"${table}_${t}_compacting"
     def write(df: DataFrame, t: String, key: String) = () =>
       graft.sources.Formats.writeBucketedKeys(df, staged(t), Seq(key), nBuckets)
-    inParallel(Seq(write(kept.unionByName(rebuilt), "edges", "src"),
+    Par.inParallel(Seq(write(kept.unionByName(rebuilt), "edges", "src"),
       write(nodes.select(col("vec_id"), col("cell"), col("v")), "nodes", "cell")) ++
       probes.map(write(_, "probes", "pcell")): _*)
     Store.commit(spark, (Seq("edges", "nodes") ++ probes.map(_ => "probes"))
@@ -1220,11 +1250,17 @@ object Similarity {
     require(rounds >= 1, s"$caller: rounds must be >= 1, got $rounds")
   }
 
-  /** A walk's pair score from node columns (v, norm) and query columns
-    * (qv, qn) — the one expression both walk paths evaluate.
+  /** The r3-rounded cosine of a candidate (v, norm) against a query
+    * (qv, `qNorm`) — the one pair score of every exact, rerank and walk
+    * tier.
     */
-  private def walkCos: Column =
-    r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qn")))
+  private def pairCos(qNorm: String = "qnorm"): Column =
+    r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col(qNorm)))
+
+  /** A walk's pair score: [[pairCos]] with the walk's query norm `qn`
+    * — the one expression both walk paths evaluate.
+    */
+  private def walkCos: Column = pairCos("qn")
 
   /** [[graphWalkScored]]'s round loop — the r18 job-count restructure
     * of the per-round dataflow. Three structural changes vs the r17
@@ -1530,14 +1566,15 @@ object Similarity {
         .groupBy(col("qid"), col("vid"))
         .agg(max(col("qv")).as("qv"), max(col("qn")).as("qn"),
           min(col("cos")).as("cos"), max(col("label")).as("label"))
-      visited = if (r < rounds)
-        merged
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
-          .withColumn("rkm", row_number().over(
-            Window.partitionBy(col("qid"), isMatch)
-              .orderBy(col("cos").desc, col("vid"))))
-          .localCheckpoint()
+      visited = if (r < rounds) Par.labelled(nodes.sparkSession, s"filteredWalk:round$r") {
+          merged
+            .withColumn("rk", row_number().over(
+              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
+            .withColumn("rkm", row_number().over(
+              Window.partitionBy(col("qid"), isMatch)
+                .orderBy(col("cos").desc, col("vid"))))
+            .localCheckpoint()
+        }
       else merged
     }
     visited.where(isMatch)
@@ -1658,22 +1695,10 @@ object Similarity {
   def annGraphSearchFilteredRecall(embeddings: DataFrame, nCentroids: Int,
                                    kGraph: Int, nQueries: Int, beam: Int,
                                    rounds: Int, k: Int, nLabels: Int,
-                                   nprobe: Int = 2): DataFrame = {
-    // exact side ∥ walk rounds (the annGraphSearchRecall discipline)
-    val sides = Par.inParallelAll(Seq[() => DataFrame](
-      () => cosineTopKFiltered(embeddings, nQueries, k, nLabels)
-        .select(col("qid"), col("vid")).localCheckpoint(),
-      () => annGraphSearchFiltered(embeddings, nCentroids, kGraph,
-          nQueries, beam, rounds, k, nLabels, nprobe)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))))
-    val (exact, approx) = (sides(0), sides(1))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                                   nprobe: Int = 2): DataFrame =
+    walkRecall(cosineTopKFiltered(embeddings, nQueries, k, nLabels),
+      Nil -> (() => annGraphSearchFiltered(embeddings, nCentroids, kGraph,
+        nQueries, beam, rounds, k, nLabels, nprobe)))
 
   /** The FILTERED-walk tuning table ([[annGraphSweep]]'s discipline
     * pointed at the filtered tier): recall@k at each (beam, rounds)
@@ -1690,26 +1715,12 @@ object Similarity {
                             params: Seq[(Int, Int)],
                             nprobe: Int = 2): DataFrame = {
     require(params.nonEmpty, "annGraphFilteredSweep: need at least one (beam, rounds)")
-    // exact side ∥ independent per-budget walks over the shared graph
-    // memo (the annGraphSweep discipline)
-    val sides = Par.inParallelAll(
-      (() => cosineTopKFiltered(embeddings, nQueries, k, nLabels)
-        .select(col("qid"), col("vid")).localCheckpoint()) +:
-      params.map { case (beam, rounds) => () =>
+    // independent per-budget walks over the shared graph memo
+    walkRecall(cosineTopKFiltered(embeddings, nQueries, k, nLabels),
+      params.map { case (beam, rounds) => budget(beam, rounds) -> (() =>
         annGraphSearchFiltered(embeddings, nCentroids, kGraph,
-            nQueries, beam, rounds, k, nLabels, nprobe)
-          .select(col("qid"), col("vid"), lit(1).as("hit"))
-      })
-    val exact = sides.head
-    params.zip(sides.tail).map { case ((beam, rounds), approx) =>
-      exact.join(approx, Seq("qid", "vid"), "left")
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(lit(beam.toLong).as("beam"), lit(rounds.toLong).as("rounds"),
-          col("qid"), col("n_exact"), col("n_hit"),
-          r3(col("n_hit") / col("n_exact")).as("recall"))
-    }.reduce(_ unionByName _)
+          nQueries, beam, rounds, k, nLabels, nprobe))
+      }: _*)
   }
 
   /** Membership predicate for hierarchy level `level` (1-based; level
@@ -1838,7 +1849,7 @@ object Similarity {
     // (inParallel: latency-bound tiny writes overlap; on a cluster the
     // edge build's task tail back-fills with the other writes)
     import spark.implicits._
-    inParallel(
+    Par.inParallel(
       () => graft.sources.Formats.writeBucketedKeys(
         assigned.select(col("vec_id"), col("cell"), col("v")),
         s"${table}_nodes", Seq("cell"), nBuckets),
@@ -2025,7 +2036,7 @@ object Similarity {
     // levels write DISJOINT table families — build them concurrently
     // (inParallel; level ℓ is r^ℓ of the corpus, so the small upper
     // levels ride inside level 0's wall instead of extending it)
-    inParallel((0 until nLayers).map { lvl => () =>
+    Par.inParallel((0 until nLayers).map { lvl => () =>
       if (lvl == 0) writeLevel(embeddings, s"${table}_l0")
       else writeLevel(embeddings.where(layerPred(lvl, keep, nSample)), s"${table}_l$lvl")
     }: _*)
@@ -2103,7 +2114,7 @@ object Similarity {
       else appendKnnGraph(df, lt)
     // per-level appends touch DISJOINT table families — run them
     // concurrently (the writeKnnGraphHier build-side discipline)
-    inParallel((0 until nLayers).map { lvl => () =>
+    Par.inParallel((0 until nLayers).map { lvl => () =>
       if (lvl == 0) appendLevel(newVecs, s"${table}_l0")
       else {
         val lDelta = newVecs.where(layerPred(lvl, keep, nSample))
@@ -2239,22 +2250,10 @@ object Similarity {
     */
   def annGraphSearchHierFilteredRecall(embeddings: DataFrame, table: String,
                                        nQueries: Int, beam: Int, rounds: Int,
-                                       k: Int, nLabels: Int): DataFrame = {
-    // exact side ∥ stored hier navigation + walk (recall discipline)
-    val sides = Par.inParallelAll(Seq[() => DataFrame](
-      () => cosineTopKFiltered(embeddings, nQueries, k, nLabels)
-        .select(col("qid"), col("vid")).localCheckpoint(),
-      () => annGraphSearchHierFilteredStored(embeddings.sparkSession,
-          table, nQueries, beam, rounds, k, nLabels)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))))
-    val (exact, approx) = (sides(0), sides(1))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                                       k: Int, nLabels: Int): DataFrame =
+    walkRecall(cosineTopKFiltered(embeddings, nQueries, k, nLabels),
+      Nil -> (() => annGraphSearchHierFilteredStored(embeddings.sparkSession,
+        table, nQueries, beam, rounds, k, nLabels)))
 
   /** Fold accumulated takedowns into EVERY level of a stored
     * hierarchical graph — lifecycle parity for the cold-start tier
@@ -2280,7 +2279,7 @@ object Similarity {
     val rootTs = Store.pending(spark, rootTsT, "vec_id").map(_.localCheckpoint())
     // per-level fold + compaction touches DISJOINT table families —
     // run the levels concurrently (the hier build/append discipline)
-    inParallel((0 until nLayers).map { lvl => () =>
+    Par.inParallel((0 until nLayers).map { lvl => () =>
       val lt = s"${table}_l$lvl"
       rootTs.foreach(Store.file(_, s"${lt}_gtombstones"))
       compactGraph(lt, isRouted(spark.table(s"${lt}_meta").head()))
@@ -2305,22 +2304,10 @@ object Similarity {
                                kGraph: Int, nQueries: Int, beam: Int,
                                rounds: Int, k: Int, keep: Int = 2,
                                nBuckets: Int = 8, nprobe: Int = 2,
-                               nLayers: Int = 2): DataFrame = {
-    // exact side ∥ hier navigation + walk (the recall discipline)
-    val sides = Par.inParallelAll(Seq[() => DataFrame](
-      () => cosineTopK(embeddings, nQueries, k)
-        .select(col("qid"), col("vid")).localCheckpoint(),
-      () => annGraphSearchHier(embeddings, nCentroids, kGraph, nQueries,
-          beam, rounds, k, keep, nBuckets, nprobe, nLayers)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))))
-    val (exact, approx) = (sides(0), sides(1))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                               nLayers: Int = 2): DataFrame =
+    walkRecall(cosineTopK(embeddings, nQueries, k),
+      Nil -> (() => annGraphSearchHier(embeddings, nCentroids, kGraph, nQueries,
+        beam, rounds, k, keep, nBuckets, nprobe, nLayers)))
 
   /** The graph-walk TUNING TABLE (the [[annIvfProbeSweep]] discipline
     * pointed at the graph tier): recall@k at each (beam, rounds)
@@ -2337,49 +2324,21 @@ object Similarity {
     require(params.nonEmpty, "annGraphSweep: need at least one (beam, rounds)")
     val graph = knnGraphEdges(embeddings, nCentroids, kGraph, nprobe)
     val e = prepared(embeddings.where(col("embedding").isNotNull))
-    // the exact side and each budget's walk are INDEPENDENT job chains
-    // over the shared graph memo — overlap all of them (guide §2.6;
-    // the walks' checkpoints are eager, so a sequential map()
-    // serialized budgets × rounds scheduler barriers)
-    val sides = Par.inParallelAll(
-      (() => cosineTopK(embeddings, nQueries, k)
-        .select(col("qid"), col("vid")).localCheckpoint()) +:
-      params.map { case (beam, rounds) => () =>
-        graphWalk(e, graph, nQueries, beam, rounds, k)
-          .select(col("qid"), col("vid"), lit(1).as("hit"))
-      })
-    val exact = sides.head
-    params.zip(sides.tail).map { case ((beam, rounds), approx) =>
-      exact.join(approx, Seq("qid", "vid"), "left")
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(lit(beam.toLong).as("beam"), lit(rounds.toLong).as("rounds"),
-          col("qid"), col("n_exact"), col("n_hit"),
-          r3(col("n_hit") / col("n_exact")).as("recall"))
-    }.reduce(_ unionByName _)
+    // each budget's walk is an INDEPENDENT job chain over the shared
+    // graph memo
+    walkRecall(cosineTopK(embeddings, nQueries, k),
+      params.map { case (beam, rounds) => budget(beam, rounds) -> (() =>
+        graphWalk(e, graph, nQueries, beam, rounds, k))
+      }: _*)
   }
 
+  /** Recall@k of the graph walk vs the exact cosine top-k. */
   def annGraphSearchRecall(embeddings: DataFrame, nCentroids: Int, kGraph: Int,
                            nQueries: Int, beam: Int, rounds: Int, k: Int,
-                           nprobe: Int = 2): DataFrame = {
-    // exact side ∥ walk rounds (guide §2.6): the walk's checkpoints
-    // are eager, so a sequential build left the exact scan to run
-    // serially inside the final job
-    val sides = Par.inParallelAll(Seq[() => DataFrame](
-      () => cosineTopK(embeddings, nQueries, k)
-        .select(col("qid"), col("vid")).localCheckpoint(),
-      () => annGraphSearch(embeddings, nCentroids, kGraph,
-          nQueries, beam, rounds, k, nprobe)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))))
-    val (exact, approx) = (sides(0), sides(1))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                           nprobe: Int = 2): DataFrame =
+    walkRecall(cosineTopK(embeddings, nQueries, k),
+      Nil -> (() => annGraphSearch(embeddings, nCentroids, kGraph,
+        nQueries, beam, rounds, k, nprobe)))
 
   private def semanticDedupWith(embeddings: DataFrame, enc: String,
                                 threshold: Double): DataFrame = {
@@ -2506,8 +2465,7 @@ object Similarity {
         col("norm").as("qnorm"), col("cell"))
     val scored = assigned.join(broadcast(q), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), pairCos().as("cos"))
     saltedTopK(scored, "cos", ascending = false, k)
   }
 
@@ -2954,17 +2912,9 @@ object Similarity {
     * survives at a 32-bit budget on THIS corpus.
     */
   def annHammingRecall(embeddings: DataFrame, nPlanes: Int, nQueries: Int,
-                       k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annHammingTopK(embeddings, nPlanes, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                       k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annHammingTopK(embeddings, nPlanes, nQueries, k))
 
   /** Maximal-marginal-relevance reranking (Carbonell & Goldstein 1998)
     * of the exact cosine top-N: greedily select k of the N candidates
@@ -3217,17 +3167,9 @@ object Similarity {
     */
   def annPqRotatedTrainedRecall(embeddings: DataFrame, nCodewords: Int, m: Int,
                                 nQueries: Int, k: Int, p: Int = 4,
-                                dim: Int = DIM): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annPqRotatedTrained(embeddings, nCodewords, m, nQueries, k, p, dim)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                                dim: Int = DIM): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annPqRotatedTrained(embeddings, nCodewords, m, nQueries, k, p, dim))
 
   /** OPQ-IVFADC composed: [[annIvfPqTopKTrained]] with EVERY stage
     * (centroid training, PQ book training, assignment, query
@@ -3255,18 +3197,10 @@ object Similarity {
   def annIvfPqRotatedTrainedRecall(embeddings: DataFrame, nCentroids: Int,
                                    nCodewords: Int, m: Int, kmIter: Int,
                                    nQueries: Int, k: Int, p: Int = 4,
-                                   dim: Int = DIM): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annIvfPqRotatedTrained(embeddings, nCentroids, nCodewords, m,
-        kmIter, nQueries, k, p, dim)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                                   dim: Int = DIM): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annIvfPqRotatedTrained(embeddings, nCentroids, nCodewords, m,
+        kmIter, nQueries, k, p, dim))
 
   /** Deterministic Householder direction for [[rotateEmbeddings]]:
     * u = normalize(md5-derived pseudo-uniform in [−0.5, 0.5)) — a
@@ -3335,17 +3269,9 @@ object Similarity {
     * regime).
     */
   def annPqRotatedRecall(embeddings: DataFrame, nCodewords: Int, m: Int,
-                         nQueries: Int, k: Int, dim: Int = DIM): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annPqRotated(embeddings, nCodewords, m, nQueries, k, dim)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                         nQueries: Int, k: Int, dim: Int = DIM): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annPqRotated(embeddings, nCodewords, m, nQueries, k, dim))
 
   /** Mean codebook distortion avg(1 − rounded cos(v, assigned
     * centroid)) — the quality number a training loop watches; Lloyd
@@ -3402,8 +3328,7 @@ object Similarity {
         explode(expr(s"graft_ivf_cells(v, '$enc', $nprobe)")).as("cell"))
     val scored = assigned.join(broadcast(q), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), pairCos().as("cos"))
     saltedTopK(scored, "cos", ascending = false, k)
   }
 
@@ -3653,17 +3578,9 @@ object Similarity {
     * tuning nPlanes (left join so queries with zero bucket-mates
     * still report recall 0).
     */
-  def annRecall(embeddings: DataFrame, nPlanes: Int, nQueries: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annLshTopK(embeddings, nPlanes, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+  def annRecall(embeddings: DataFrame, nPlanes: Int, nQueries: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annLshTopK(embeddings, nPlanes, nQueries, k))
 
   /** Recall@k of the PQ tier against the exact top-k — the accuracy
     * side of the compression trade the PQ deployment loop tunes
@@ -3671,17 +3588,9 @@ object Similarity {
     * LSH tier.
     */
   def annPqRecall(embeddings: DataFrame, nCodewords: Int, m: Int,
-                  nQueries: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annPqTopK(embeddings, nCodewords, m, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                  nQueries: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annPqTopK(embeddings, nCodewords, m, nQueries, k))
 
   /** Multi-probe IVF+PQ: [[annIvfPqTopK]] with the query side probing
     * its `nprobe` nearest cells ([[graft.functions.IvfCells]] on the
@@ -3733,17 +3642,9 @@ object Similarity {
     * where [[annPqRecall]] isolates the PQ term alone).
     */
   def annIvfPqRecall(embeddings: DataFrame, nCentroids: Int, nCodewords: Int,
-                     m: Int, nQueries: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annIvfPqTopK(embeddings, nCentroids, nCodewords, m, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                     m: Int, nQueries: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annIvfPqTopK(embeddings, nCentroids, nCodewords, m, nQueries, k))
 
   /** The nprobe TUNING TABLE: recall@k of the multi-probe IVF tier at
     * each candidate `nprobe`, in one frame — the curve an operator
@@ -3760,16 +3661,8 @@ object Similarity {
     require(probes.nonEmpty, "annIvfProbeSweep: need at least one nprobe")
     val exact = cosineTopK(embeddings, nQueries, k)
       .select(col("qid"), col("vid")).localCheckpoint()
-    def branch(tier: String, p: Int, approx0: DataFrame): DataFrame = {
-      val approx = approx0.select(col("qid"), col("vid"), lit(1).as("hit"))
-      exact.join(approx, Seq("qid", "vid"), "left")
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(lit(tier).as("tier"), lit(p.toLong).as("nprobe"), col("qid"),
-          col("n_exact"), col("n_hit"),
-          r3(col("n_hit") / col("n_exact")).as("recall"))
-    }
+    def branch(tier: String, p: Int, approx: DataFrame): DataFrame =
+      recallAt(exact, approx, lit(tier).as("tier"), lit(p.toLong).as("nprobe"))
     val ivf = probes.map(p => branch("ivf", p,
       annIvfTopKProbe(embeddings, nCentroids, nQueries, k, p)))
     val pq = if (pqCodewords > 0) probes.map(p => branch("ivfpq", p,
@@ -3804,8 +3697,7 @@ object Similarity {
       .select(col("vec_id").as("sqid"), col("v").as("qv"), col("norm").as("qnorm"))
     e.join(broadcast(sl), col("vec_id") === col("vid"))
       .join(broadcast(q), col("qid") === col("sqid"))
-      .select(col("qid"), col("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vid"), pairCos().as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid")))
         .cast("long"))
@@ -3819,18 +3711,10 @@ object Similarity {
     * a table diff.
     */
   def annIvfPqRerankRecall(embeddings: DataFrame, nCentroids: Int, nCodewords: Int,
-                           m: Int, nQueries: Int, shortlist: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annIvfPqRerank(embeddings, nCentroids, nCodewords, m,
-        nQueries, shortlist, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                           m: Int, nQueries: Int, shortlist: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annIvfPqRerank(embeddings, nCentroids, nCodewords, m,
+        nQueries, shortlist, k))
 
   /** Matryoshka two-stage search (Kusupati et al. 2022's MRL serving
     * pattern): stage 1 shortlists by cosine over only the FIRST
@@ -3869,8 +3753,7 @@ object Similarity {
       .select(col("vec_id").as("sqid"), col("v").as("qv"), col("norm").as("qnorm"))
     e.join(broadcast(sl), col("vec_id") === col("vid"))
       .join(broadcast(q), col("qid") === col("sqid"))
-      .select(col("qid"), col("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vid"), pairCos().as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid")))
         .cast("long"))
@@ -3885,17 +3768,9 @@ object Similarity {
     * gives — the gate records the honest number for THIS corpus).
     */
   def annMatryoshkaRecall(embeddings: DataFrame, pDims: Int, nQueries: Int,
-                          shortlist: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annMatryoshka(embeddings, pDims, nQueries, shortlist, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                          shortlist: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annMatryoshka(embeddings, pDims, nQueries, shortlist, k))
 
   // ------------------------------------------------------------------
   // SQ8 scalar quantization: per-dim affine uint8 codes
@@ -4058,17 +3933,9 @@ object Similarity {
     * should sit WELL above the PQ tiers' at gate scale (it keeps 256
     * levels per dimension; PQ keeps 16 codewords per 16-dim subspace).
     */
-  def annSqRecall(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annSqTopK(embeddings, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+  def annSqRecall(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annSqTopK(embeddings, nQueries, k))
 
   // ------------------------------------------------------------------
   // Residual PQ (FAISS IVFPQ proper): codes encode v − centroid(cell)
@@ -4177,17 +4044,9 @@ object Similarity {
     * residual encoding's whole justification is this number moving up.
     */
   def annIvfPqResidualRecall(embeddings: DataFrame, nCentroids: Int, nCodewords: Int,
-                             m: Int, nQueries: Int, k: Int): DataFrame = {
-    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("vid"))
-    val approx = annIvfPqResidualTopK(embeddings, nCentroids, nCodewords, m, nQueries, k)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
-  }
+                             m: Int, nQueries: Int, k: Int): DataFrame =
+    recallAt(cosineTopK(embeddings, nQueries, k),
+      annIvfPqResidualTopK(embeddings, nCentroids, nCodewords, m, nQueries, k))
 
   // ------------------------------------------------------------------
   // Stored ANN index (IVFPQ): write once, probe nightly, append deltas
@@ -4249,7 +4108,7 @@ object Similarity {
       embeddings.where(col("vec_id") < math.max(nCentroids, nCodewords)))
     // the two tables are independent — overlap the writes (Par)
     import spark.implicits._
-    inParallel(
+    Par.inParallel(
       () => graft.sources.Formats.writeBucketedKeys(
         encodeForIndex(embeddings, encIvf, encPq, sqMins, sqScales),
         s"${table}_codes", Seq("cell"), nBuckets),
@@ -4587,17 +4446,9 @@ object Similarity {
                         m: Int, nQueries: Int, k: Int, nLabels: Int,
                         table: String, nBuckets: Int): DataFrame = {
     writeAnnIndex(embeddings, nCentroids, nCodewords, m, table, nBuckets)
-    val exact = cosineTopKFiltered(embeddings, nQueries, k, nLabels)
-      .select(col("qid"), col("vid"))
-    val approx = annIvfPqAgainstIndexFiltered(
-        embeddings.where(col("vec_id") < nQueries), table, k, nLabels)
-      .select(col("qid"), col("vid"), lit(1).as("hit"))
-    exact.join(approx, Seq("qid", "vid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      .select(col("qid"), col("n_exact"), col("n_hit"),
-        r3(col("n_hit") / col("n_exact")).as("recall"))
+    recallAt(cosineTopKFiltered(embeddings, nQueries, k, nLabels),
+      annIvfPqAgainstIndexFiltered(
+        embeddings.where(col("vec_id") < nQueries), table, k, nLabels))
   }
 
   /** RANGE search against the STORED index (FAISS `range_search` on
@@ -4683,8 +4534,7 @@ object Similarity {
         col("norm").as("qnorm"), col("bucket"))
     val scored = b.join(broadcast(q), Seq("bucket"))
       .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("vid"),
-        r3(expr("graft_vec_dot(v, qv)") / (col("norm") * col("qnorm"))).as("cos"))
+      .select(col("qid"), col("vec_id").as("vid"), pairCos().as("cos"))
     saltedTopK(scored, "cos", ascending = false, k)
   }
 }

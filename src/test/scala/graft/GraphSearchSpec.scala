@@ -824,7 +824,8 @@ class GraphSearchSpec extends AnyFunSuite {
   }
 
   /** A walk's outcome: its schema and rows (sorted by their string
-    * form), or the error conditions along the failure's cause chain.
+    * form), or the error conditions and `IllegalArgumentException`
+    * messages (a driver-side `require`) along the failure's cause chain.
     */
   private def outcome(walk: => org.apache.spark.sql.DataFrame)
       : Either[Seq[String], (org.apache.spark.sql.types.StructType, Seq[Seq[Any]])] =
@@ -833,15 +834,20 @@ class GraphSearchSpec extends AnyFunSuite {
       Right((df.schema, df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq))
     } catch {
       case t: Throwable => Left(Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .collect { case st: org.apache.spark.SparkThrowable if st.getCondition != null =>
-          st.getCondition }.toSeq.distinct)
+        .collect {
+          case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+          case ia: IllegalArgumentException => ia.getMessage
+        }.toSeq.distinct)
     }
 
   /** `walk` on both graph-walk paths: in-task under the session's
     * broadcast budget, then the round loop with the existing
-    * `spark.sql.autoBroadcastJoinThreshold` scoped to -1. Asserts each
-    * side really took its path (by its job descriptions) and that the
-    * two outcomes are equal; returns the in-task outcome.
+    * `spark.sql.autoBroadcastJoinThreshold` scoped to -1. Asserts that
+    * each side that walked (it answered, or ran a walk job before it
+    * failed) really took its path, by its job descriptions, and that
+    * the two outcomes are equal; returns the in-task outcome. A walk
+    * refused before its first walk job took no path: at most a
+    * metadata read ran.
     */
   private def bothPaths(walk: => org.apache.spark.sql.DataFrame) = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
@@ -851,10 +857,14 @@ class GraphSearchSpec extends AnyFunSuite {
     conf.set(key, "-1")
     val (loop, loopJobs) = try jobsOf(outcome(walk))
       finally prev.fold(conf.unset(key))(conf.set(key, _))
-    assert(taskJobs.contains("graphWalk:collect") && !taskJobs.exists(_.startsWith("graphWalk:round")),
-      s"in-task side ran ${taskJobs.mkString(", ")}")
-    assert(!loopJobs.exists(_.startsWith("graphWalk:collect")),
-      s"loop side ran ${loopJobs.mkString(", ")}")
+    def walked(out: Either[_, _], jobs: Seq[String]) =
+      out.isRight || jobs.exists(_.startsWith("graphWalk:"))
+    if (walked(inTask, taskJobs))
+      assert(taskJobs.contains("graphWalk:collect") && !taskJobs.exists(_.startsWith("graphWalk:round")),
+        s"in-task side ran ${taskJobs.mkString(", ")}")
+    if (walked(loop, loopJobs))
+      assert(!loopJobs.exists(_.startsWith("graphWalk:collect")),
+        s"loop side ran ${loopJobs.mkString(", ")}")
     assert(inTask === loop)
     inTask
   }
@@ -994,17 +1004,25 @@ class GraphSearchSpec extends AnyFunSuite {
       Similarity.annGraphSearchFilteredStored(spark, "graft_walk_args_f", 3, _, _, _, 4),
       Similarity.annGraphSearchHierFilteredStored(spark, "graft_walk_args_h", 3, _, _, _, 4))
     for (w <- filtered) assert(w(4, 1, 2).collect().nonEmpty)
-    def errors() = (walk _ +: filtered).flatMap(w => Seq(() => w(4, 0, 2), () => w(2, 1, 3)))
-      .map(w => intercept[IllegalArgumentException](w()).getMessage)
-    val inTask = errors()
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    val loop = try errors() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    for (msgs <- Seq(inTask, loop); Seq(rounds0, kOverBeam) <- msgs.grouped(2)) {
-      assert(rounds0.contains("rounds must be >= 1"), msgs)
-      assert(kOverBeam.contains("k=3 must be <= beam=2"), msgs)
+    // both paths refuse with the same message (bothPaths compares them)
+    def refused(out: Either[Seq[String], _], msg: String) =
+      assert(out.left.toOption.exists(_.exists(_.contains(msg))), out.toString)
+    for (w <- walk _ +: filtered) {
+      refused(bothPaths(w(4, 0, 2)), "rounds must be >= 1")
+      refused(bothPaths(w(2, 1, 3)), "k=3 must be <= beam=2")
     }
+  }
+
+  test("the filtered walk labels its checkpointed rounds filteredWalk:round<r>") {
+    val emb = corpus().withColumn("label", (col("vec_id") % 4).cast("int"))
+    Similarity.writeKnnGraph(emb, 16, 4, "graft_walk_flabels", 4)
+    Similarity.writeGraphNodeLabels(emb, "graft_walk_flabels")
+    val (rows, jobs) = jobsOf(
+      Similarity.annGraphSearchFilteredStored(spark, "graft_walk_flabels", 3, 4, 4, 2, 4).collect())
+    assert(rows.nonEmpty)
+    // rounds 1-3 checkpoint; the last round feeds the answer unlabelled
+    assert(jobs.filter(_.startsWith("filteredWalk:")).distinct === (1 to 3).map(r => s"filteredWalk:round$r"),
+      jobs)
   }
 
   /** 400 deterministic 8-d vectors for the store-scale walk specs. */
