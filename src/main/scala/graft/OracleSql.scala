@@ -39,6 +39,42 @@ object OracleSql {
   /** [[recallBranch]] untagged, over the `approx` CTE. */
   private def recallTail: String = recallBranch("", "approx a")
 
+  /** The exact cosine top-k every recall oracle scores against: `xs`
+    * scores each (query of `q`, other row of `e`) pair on the vector
+    * column `v`, with the extra predicate `cond` (columns prefixed by
+    * their CTE when `qualified`); `xr` ranks per query; `exact` keeps
+    * the (qid, vid) pairs ranked within `k`.
+    */
+  private def exactTopK(e: String, q: String, k: Int, v: String = "v",
+                        cond: String = "", qualified: Boolean = false): String = {
+    val (eq, qq) = if (qualified) (s"$e.", s"$q.") else ("", "")
+    s"""xs AS (
+       |  SELECT ${qq}qid, ${eq}vec_id AS vid, ${R(s"list_cosine_similarity(${qq}qv, $eq$v)")} AS cos
+       |  FROM $e CROSS JOIN $q WHERE ${eq}vec_id != ${qq}qid$cond),
+       |xr AS (
+       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
+       |  FROM xs),
+       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)""".stripMargin
+  }
+
+  /** Recall@k of the `approxSql` answer's (qid, vid) rows against the
+    * exact cosine top-k of the first `nQueries` vectors, restricted to
+    * `label = qid % nLabels` when `nLabels` > 0.
+    */
+  private def approxRecall(approxSql: String, nQueries: Int, k: Int,
+                           nLabels: Int = 0): String = {
+    val (label, cond) =
+      if (nLabels > 0) ("label, ", s" AND label = qid % $nLabels") else ("", "")
+    s"""WITH approx AS (
+       |  SELECT qid, vid, 1 AS hit FROM (
+       |$approxSql) a),
+       |e3 AS (SELECT vec_id, ${label}CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |       WHERE embedding IS NOT NULL),
+       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
+       |${exactTopK("e3", "q3", k, cond = cond)}
+       |$recallTail""".stripMargin
+  }
+
   /** Daily resample of events — the shared base of the series chain. */
   val daily: String =
     s"""daily AS (
@@ -2246,20 +2282,8 @@ object OracleSql {
   def annGraphSearchFilteredRecall(nCentroids: Int, kGraph: Int, nQueries: Int,
                                    beam: Int, rounds: Int, k: Int,
                                    nLabels: Int, nprobe: Int = 2): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annGraphSearchFiltered(nCentroids, kGraph, nQueries, beam, rounds, k, nLabels, nprobe)}) a),
-       |e3 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid AND label = qid % $nLabels),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annGraphSearchFiltered(nCentroids, kGraph, nQueries, beam, rounds, k, nLabels, nprobe),
+      nQueries, k, nLabels)
 
   /** Recall@k of the FILTERED hier walk vs the exact filtered top-k —
     * the oversearch audit on the cold-start tier, next to 48g's flat
@@ -2269,20 +2293,8 @@ object OracleSql {
                                        nQueries: Int, beam: Int, rounds: Int,
                                        k: Int, keep: Int, nBuckets: Int,
                                        nLabels: Int, nprobe: Int = 2): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annGraphSearchHier(nCentroids, kGraph, nQueries, beam, rounds, k, keep, nBuckets, nprobe, nLabels = nLabels)}) a),
-       |e3 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid AND label = qid % $nLabels),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annGraphSearchHier(nCentroids, kGraph, nQueries, beam, rounds, k, keep, nBuckets, nprobe, nLabels = nLabels),
+      nQueries, k, nLabels)
 
   /** Filtered-walk recall at each (beam, rounds) budget — one branch
     * per budget, each the standalone filtered-recall chain.
@@ -2560,20 +2572,8 @@ object OracleSql {
                                beam: Int, rounds: Int, k: Int,
                                keep: Int, nBuckets: Int, nprobe: Int = 2,
                                nLayers: Int = 2): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annGraphSearchHier(nCentroids, kGraph, nQueries, beam, rounds, k, keep, nBuckets, nprobe, nLayers)}) a),
-       |e3 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annGraphSearchHier(nCentroids, kGraph, nQueries, beam, rounds, k, keep, nBuckets, nprobe, nLayers),
+      nQueries, k)
 
   /** Recall@k of the walk at each (beam, rounds) budget — one branch
     * per budget, each the standalone recall chain with its literals.
@@ -2590,20 +2590,8 @@ object OracleSql {
   /** Recall@k of the graph walk vs the exact cosine top-k. */
   def annGraphSearchRecall(nCentroids: Int, kGraph: Int, nQueries: Int,
                            beam: Int, rounds: Int, k: Int, nprobe: Int = 2): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annGraphSearch(nCentroids, kGraph, nQueries, beam, rounds, k, nprobe)}) a),
-       |e3 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annGraphSearch(nCentroids, kGraph, nQueries, beam, rounds, k, nprobe),
+      nQueries, k)
 
   /** [[graft.operators.Similarity.semanticDecontaminate]]'s mirror:
     * the shared IVF assignment CTEs (rounded cosine argmax, cid-asc
@@ -2731,13 +2719,7 @@ object OracleSql {
     s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |            WHERE embedding IS NOT NULL),
        |q0 AS (SELECT vec_id AS qid, v AS qv FROM e0 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e0 CROSS JOIN q0 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
+       |${exactTopK("e0", "q0", k)}
        |$branches
        |ORDER BY tier, nprobe, qid""".stripMargin
   }
@@ -3908,13 +3890,7 @@ object OracleSql {
     s"""WITH ${trainedRotCtes(p, m, nIter, dim)},
        |re AS (SELECT vec_id, v FROM rot$p),
        |q0 AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q0 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q0", k)},
        |cw AS (
        |  SELECT s.s, re.vec_id AS c, re.v FROM re CROSS JOIN range(0, $m) s(s)
        |  WHERE re.vec_id < $nCodewords),
@@ -4276,13 +4252,7 @@ object OracleSql {
   def annSqRecall(nQueries: Int, k: Int, dim: Int = 64): String =
     s"""WITH ${sqCtes(nQueries, dim)},
        |$sqScanSc,
-       |xs AS (
-       |  SELECT q.qid, e.vec_id AS vid, ${R("list_cosine_similarity(q.qv, e.v)")} AS cos
-       |  FROM e CROSS JOIN q WHERE e.vec_id != q.qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q", k, qualified = true)},
        |pr AS (
        |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adist, vid) AS rank
        |  FROM sc),
@@ -4359,13 +4329,7 @@ object OracleSql {
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |           WHERE embedding IS NOT NULL),
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q", k)},
        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < $nCentroids),
        |ca0 AS (
        |  SELECT e.vec_id, c.cid, ${R("list_cosine_similarity(e.v, c.cv)")} AS ccos
@@ -4688,13 +4652,7 @@ object OracleSql {
        |${kmeansCtes(nCentroids, kmIter, dim, src = s"rot$p", withE = false)},
        |${pqKmeansCtes(nCodewords, m, kmIter, dim, withE = false, src = s"rot$p")},
        |q0 AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q0 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q0", k)},
        |fc0 AS (
        |  SELECT e.vec_id, c.cid, ${R("list_cosine_similarity(e.v, c.cv)")} AS ccos
        |  FROM rot$p e CROSS JOIN c$kmIter c),
@@ -4769,13 +4727,7 @@ object OracleSql {
     s"""WITH raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |             WHERE embedding IS NOT NULL),
        |q0 AS (SELECT vec_id AS qid, v AS qv FROM raw WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM raw CROSS JOIN q0 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("raw", "q0", k)},
        |e AS (SELECT vec_id, $bucket AS sig FROM raw),
        |q AS (SELECT vec_id AS qid, sig AS qsig FROM e WHERE vec_id < $nQueries),
        |s AS (
@@ -4856,13 +4808,7 @@ object OracleSql {
     }
     s"""WITH ${rotatedE(dim)},
        |q0 AS (SELECT vec_id AS qid, v0 AS qv FROM raw WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v0)")} AS cos
-       |  FROM raw CROSS JOIN q0 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("raw", "q0", k, v = "v0")},
        |cw AS (
        |  SELECT s.s, e.vec_id AS c, e.v FROM e CROSS JOIN range(0, $m) s(s)
        |  WHERE e.vec_id < $nCodewords),
@@ -4899,13 +4845,7 @@ object OracleSql {
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |           WHERE embedding IS NOT NULL),
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q", k)},
        |cw AS (
        |  SELECT s.s, e.vec_id AS c, e.v FROM e CROSS JOIN range(0, $m) s(s)
        |  WHERE e.vec_id < $nCodewords),
@@ -4954,13 +4894,7 @@ object OracleSql {
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |           WHERE embedding IS NOT NULL),
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q WHERE vec_id != qid $exactCond),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q", k, cond = s" $exactCond")},
        |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < $nCentroids),
        |ca0 AS (
        |  SELECT e.vec_id, c.cid, ${R("list_cosine_similarity(e.v, c.cv)")} AS ccos
@@ -5025,20 +4959,8 @@ object OracleSql {
   def annIvfPqRerankRecall(nCentroids: Int, nCodewords: Int, m: Int,
                            nQueries: Int, shortlist: Int, k: Int,
                            dim: Int = 64): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annIvfPqRerank(nCentroids, nCodewords, m, nQueries, shortlist, k, dim)}) a),
-       |e3 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annIvfPqRerank(nCentroids, nCodewords, m, nQueries, shortlist, k, dim),
+      nQueries, k)
 
   /** Matryoshka two-stage: prefix-dim cosine shortlist, full-dim
     * exact rerank (the annIvfPqRerank tail on a truncated stage 1).
@@ -5067,20 +4989,8 @@ object OracleSql {
 
   /** Recall@k of the Matryoshka tier vs the exact cosine top-k. */
   def annMatryoshkaRecall(pDims: Int, nQueries: Int, shortlist: Int, k: Int): String =
-    s"""WITH approx AS (
-       |  SELECT qid, vid, 1 AS hit FROM (
-       |${annMatryoshka(pDims, nQueries, shortlist, k)}) a),
-       |e3 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |       WHERE embedding IS NOT NULL),
-       |q3 AS (SELECT vec_id AS qid, v AS qv FROM e3 WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e3 CROSS JOIN q3 WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k)
-       |$recallTail""".stripMargin
+    approxRecall(annMatryoshka(pDims, nQueries, shortlist, k),
+      nQueries, k)
 
   def annTopK(nQueries: Int, k: Int): String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -5550,13 +5460,7 @@ object OracleSql {
     s"""WITH v0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |e AS (SELECT vec_id, v, $bucket AS bucket FROM v0),
        |q AS (SELECT vec_id AS qid, v AS qv, bucket AS qbucket FROM e WHERE vec_id < $nQueries),
-       |xs AS (
-       |  SELECT qid, vec_id AS vid, ${R("list_cosine_similarity(qv, v)")} AS cos
-       |  FROM e CROSS JOIN q WHERE vec_id != qid),
-       |xr AS (
-       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-       |  FROM xs),
-       |exact AS (SELECT qid, vid FROM xr WHERE rank <= $k),
+       |${exactTopK("e", "q", k)},
        |ls AS (
        |  SELECT q.qid, e.vec_id AS vid, ${R("list_cosine_similarity(q.qv, e.v)")} AS cos
        |  FROM e JOIN q ON e.bucket = q.qbucket AND e.vec_id != q.qid),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.r3
 import graft.operators.{Dedup, Generate, Relational, Similarity, TextOps, TimeSeries}
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
@@ -29,8 +30,6 @@ object SparkEntry {
   private def dec2(c: String) = col(c).cast("decimal(12,2)")
   private def pct2(c: String) = col(c).cast("decimal(4,2)")
   // canonical rounding — see TimeSeries.r3
-  private def r2c(c: org.apache.spark.sql.Column) = floor(c * 100.0 + 0.5001) / 100.0
-  private def r3c(c: org.apache.spark.sql.Column) = floor(c * 1000.0 + 0.5001) / 1000.0
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing" -> ((s, dir) => {
@@ -38,13 +37,13 @@ object SparkEntry {
         .where(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          r2c(sum(dec2("l_quantity")).cast("double")).as("sum_qty"),
-          r2c(sum(dec2("l_extendedprice")).cast("double")).as("sum_base_price"),
-          r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("sum_disc_price"),
-          r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount")) * (lit(1) + pct2("l_tax"))).cast("double")).as("sum_charge"),
-          r3c(sum(dec2("l_quantity")).cast("double") / count(lit(1))).as("avg_qty"),
-          r3c(sum(dec2("l_extendedprice")).cast("double") / count(lit(1))).as("avg_price"),
-          r3c(sum(pct2("l_discount")).cast("double") / count(lit(1))).as("avg_disc"),
+          r3(sum(dec2("l_quantity")).cast("double"), 100.0).as("sum_qty"),
+          r3(sum(dec2("l_extendedprice")).cast("double"), 100.0).as("sum_base_price"),
+          r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("sum_disc_price"),
+          r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount")) * (lit(1) + pct2("l_tax"))).cast("double"), 100.0).as("sum_charge"),
+          r3(sum(dec2("l_quantity")).cast("double") / count(lit(1))).as("avg_qty"),
+          r3(sum(dec2("l_extendedprice")).cast("double") / count(lit(1))).as("avg_price"),
+          r3(sum(pct2("l_discount")).cast("double") / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     }),
@@ -118,7 +117,7 @@ object SparkEntry {
       l.join(o, l("l_orderkey") === o("o_orderkey"))
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("o_orderdate"))
-        .agg(r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("revenue"))
+        .agg(r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
     }),
@@ -138,7 +137,7 @@ object SparkEntry {
       val n = Tables.apply(s, dir, "nation")
       l.join(o, l("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_custkey"))
-        .agg(r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("revenue"))
+        .agg(r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("revenue"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("c_name"), col("n_name"),
@@ -158,7 +157,7 @@ object SparkEntry {
       val daily = TimeSeries.resampleDaily(ev)
       val err = ev.where(col("event_type") === "error")
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(r3c(max(col("value"))).as("err_v"))
+        .agg(r3(max(col("value"))).as("err_v"))
         .withColumn("err_day", col("day"))
       Relational.asofJoin(daily, err, "user_id", "day", Seq("err_v", "err_day"))
         .select(col("user_id"), col("day"), col("v"),
@@ -172,7 +171,7 @@ object SparkEntry {
       val daily = TimeSeries.resampleDaily(ev)
       val err = ev.where(col("event_type") === "error")
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(r3c(max(col("value"))).as("err_v"))
+        .agg(r3(max(col("value"))).as("err_v"))
         .withColumn("err_day", col("day"))
       Relational.asofJoinForward(daily, err, "user_id", "day", Seq("err_v", "err_day"))
         .select(col("user_id"), col("day"), col("v"),
@@ -187,7 +186,7 @@ object SparkEntry {
       val daily = TimeSeries.resampleDaily(ev)
       val err = ev.where(col("event_type") === "error")
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(r3c(max(col("value"))).as("err_v"))
+        .agg(r3(max(col("value"))).as("err_v"))
         .withColumn("err_day", col("day"))
       Relational.asofJoinNearest(daily, err, "user_id", "day", "err_day",
           Seq("err_v", "err_day"))
@@ -758,8 +757,8 @@ object SparkEntry {
       samples.select(col("user_id"),
           size(col("x")).cast("long").as("x_n"),
           size(col("y")).cast("long").as("y_n"),
-          when(size(col("x")) > 0, r3c(fsum("x"))).as("x_sum"),
-          when(size(col("y")) > 0, r3c(fsum("y"))).as("y_sum"))
+          when(size(col("x")) > 0, r3(fsum("x"))).as("x_sum"),
+          when(size(col("y")) > 0, r3(fsum("y"))).as("y_sum"))
         .orderBy(col("user_id"))
     }),
 
@@ -788,8 +787,8 @@ object SparkEntry {
       graft.sources.MlFeed.batches(s, shardDir, 32)
         .select(col("batch").cast("long").as("batch"),
           col("n").cast("long").as("n"),
-          r3c(csum("xs")).as("xs_sum"),
-          r3c(csum("ys")).as("ys_sum"))
+          r3(csum("xs")).as("xs_sum"),
+          r3(csum("ys")).as("ys_sum"))
         .orderBy(col("batch"))
     }),
 
@@ -812,8 +811,8 @@ object SparkEntry {
         .select(col("shard").cast("long").as("shard"),
           col("batch").cast("long").as("batch"),
           col("n").cast("long").as("n"),
-          r3c(csum("xs")).as("xs_sum"),
-          r3c(csum("ys")).as("ys_sum"))
+          r3(csum("xs")).as("xs_sum"),
+          r3(csum("ys")).as("ys_sum"))
         .orderBy(col("shard"), col("batch"))
     }),
 
@@ -1064,8 +1063,8 @@ object SparkEntry {
         .where(col("rev").cast("double") >
           col("tot").cast("double") / col("cnt") * lit(1.5))
         .select(col("l_partkey"),
-          r2c(col("rev").cast("double")).as("revenue"),
-          (floor(col("rev").cast("double") / col("tot").cast("double") * 1000000.0 + 0.5001) / 1000000.0).as("share"))
+          r3(col("rev").cast("double"), 100.0).as("revenue"),
+          r3(col("rev").cast("double") / col("tot").cast("double"), 1e6).as("share"))
         .orderBy(col("l_partkey"))
     }),
 
@@ -1150,8 +1149,8 @@ object SparkEntry {
       samples.select(col("user_id"),
           size(col("x")).cast("long").as("x_n"),
           size(col("y")).cast("long").as("y_n"),
-          when(size(col("x")) > 0, r3c(fsum("x"))).as("x_sum"),
-          when(size(col("y")) > 0, r3c(fsum("y"))).as("y_sum"))
+          when(size(col("x")) > 0, r3(fsum("x"))).as("x_sum"),
+          when(size(col("y")) > 0, r3(fsum("y"))).as("y_sum"))
         .orderBy(col("user_id"))
     }),
 
@@ -1434,7 +1433,7 @@ object SparkEntry {
         .join(broadcast(c),
           col("o_custkey") === col("c_custkey") && col("c_nationkey") === col("s_nationkey"))
         .groupBy(col("n_name"))
-        .agg(r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("revenue"))
+        .agg(r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("revenue"))
         .orderBy(col("n_name"))
     }),
 
@@ -1448,7 +1447,7 @@ object SparkEntry {
           pct2("l_discount") >= lit(0.05).cast("decimal(4,2)") &&
           pct2("l_discount") <= lit(0.07).cast("decimal(4,2)") &&
           col("l_quantity") < 24)
-        .agg(r3c(sum(dec2("l_extendedprice") * pct2("l_discount")).cast("double"))
+        .agg(r3(sum(dec2("l_extendedprice") * pct2("l_discount")).cast("double"))
           .as("revenue"),
           count(lit(1)).as("n_items"))
     }),
@@ -1463,7 +1462,7 @@ object SparkEntry {
       val disc = dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))
       l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .agg(
-          r3c(sum(when(col("p_type") === "PROMO", disc).otherwise(lit(0).cast("decimal(12,2)"))).cast("double")
+          r3(sum(when(col("p_type") === "PROMO", disc).otherwise(lit(0).cast("decimal(12,2)"))).cast("double")
             * 100.0 / sum(disc).cast("double")).as("promo_share"),
           count(lit(1)).as("n_items"))
     }),
@@ -2323,7 +2322,7 @@ object SparkEntry {
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
       Relational.rangeJoin(pt, "ts_us", iv, "t0", "t1",
           width = 3600000000L, keys = Seq("user_id"))
-        .select(col("user_id"), col("event_id"), col("day"), r3c(col("value")).as("value"))
+        .select(col("user_id"), col("event_id"), col("day"), r3(col("value")).as("value"))
         .orderBy(col("user_id"), col("event_id"), col("day"))
     }),
 
@@ -2730,10 +2729,10 @@ object SparkEntry {
         .join(broadcast(sn), col("s_suppkey") === col("l_suppkey"))
         .groupBy(col("o_year"))
         .agg(
-          r3c(sum(when(col("n_name") === "NATION_18", col("rev"))
+          r3(sum(when(col("n_name") === "NATION_18", col("rev"))
               .otherwise(lit(0).cast("decimal(12,2)"))).cast("double") /
             sum(col("rev")).cast("double")).as("mkt_share"),
-          r2c(sum(col("rev")).cast("double")).as("total_revenue"))
+          r3(sum(col("rev")).cast("double"), 100.0).as("total_revenue"))
         .orderBy(col("o_year"))
     }),
 
@@ -2904,7 +2903,7 @@ object SparkEntry {
         .join(broadcast(Tables(s, dir, "supplier").select("s_suppkey", "s_name")),
           col("s_suppkey") === col("l_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
-          r2c(col("total").cast("double")).as("total_revenue"))
+          r3(col("total").cast("double"), 100.0).as("total_revenue"))
         .orderBy(col("s_suppkey"))
     }),
 
@@ -2923,7 +2922,7 @@ object SparkEntry {
       li.join(broadcast(st), col("l_partkey") === col("pk"))
         .where(lit(5) * dec2("l_quantity") * col("n") < col("sq"))
         .agg(
-          r2c(sum(dec2("l_extendedprice")).cast("double") / 7.0).as("avg_yearly"),
+          r3(sum(dec2("l_extendedprice")).cast("double") / 7.0, 100.0).as("avg_yearly"),
           count(lit(1)).as("n_lines"))
     }),
 
@@ -2943,7 +2942,7 @@ object SparkEntry {
           (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) && col("l_quantity").between(10, 20)) ||
           (col("p_brand") === "Brand#34" && col("p_size").between(1, 15) && col("l_quantity").between(20, 30)))
         .agg(
-          r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("revenue"),
+          r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("revenue"),
           count(lit(1)).as("n_lines"))
     }),
 
@@ -2971,7 +2970,7 @@ object SparkEntry {
                (col("supp_nation") === "NATION_19" && col("cust_nation") === "NATION_18"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(r2c(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double")).as("revenue"))
+        .agg(r3(sum(dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))).cast("double"), 100.0).as("revenue"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
     }),
 
@@ -3016,7 +3015,7 @@ object SparkEntry {
         .join(broadcast(eu.select(col("s_suppkey"))),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(r2c(col("l_extendedprice") / col("l_quantity"))).as("unit_cost"))
+        .agg(min(r3(col("l_extendedprice") / col("l_quantity"), 100.0)).as("unit_cost"))
       val minCost = cost.groupBy(col("l_partkey").as("mk"))
         .agg(min(col("unit_cost")).as("min_cost"))
       cost.join(broadcast(minCost),
@@ -3048,8 +3047,8 @@ object SparkEntry {
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("n_name").as("nation"), col("o_year"))
         .agg(
-          r2c(sum(lit(10) * dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))
-            - lit(6) * dec2("p_retailprice") * dec2("l_quantity")).cast("double") / 10.0)
+          r3(sum(lit(10) * dec2("l_extendedprice") * (lit(1) - pct2("l_discount"))
+            - lit(6) * dec2("p_retailprice") * dec2("l_quantity")).cast("double") / 10.0, 100.0)
             .as("profit"),
           count(lit(1)).as("n_lines"))
         .orderBy(col("nation"), col("o_year"))

@@ -15,14 +15,8 @@ object Verify {
     // from other queries remain — a later driver compare could mix
     // partial and stale artifacts. Wiping keeps any outDir
     // self-consistent: it holds exactly the queries this run produced.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    if (only.nonEmpty) {
-      val d = new java.io.File(outDir)
-      if (d.exists()) rm(d)
-    }
+    // deleteTree removes a symlink, never what it points to.
+    if (only.nonEmpty) Session.deleteTree(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.Rounding.r3d
+
 /** Apply a CHAIN of Householder reflections `x ← r3(x − 2u(r3(uᵀx)))`
   * to a vector, one reflection after another — the learned-rotation
   * map of the OPQ-style trained-PQ tier.
@@ -30,8 +32,6 @@ case class HouseholderChain(child: Expression, usEnc: String)
     HouseholderChain.decode(usEnc)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-
-  private def r3d(x: Double) = math.floor(x * 1000.0 + 0.5001) / 1000.0
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]

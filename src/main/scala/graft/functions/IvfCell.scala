@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
 
+import graft.Rounding.r3d
+
 /** IVF coarse-quantizer cell assignment as a pure projection: returns
   * the centroid id with the highest rounded cosine similarity to the
   * input vector (ties → smallest cid, matching
@@ -66,7 +68,7 @@ case class IvfCell(child: Expression, encoded: String) extends UnaryExpression {
         if (!arr.isNullAt(d)) dot += VectorExprs.elemAt(child, arr, d) * cv(d)
         d += 1
       }
-      val ccos = math.floor(dot / (vnorm * cnorms(c)) * 1000.0 + 0.5001) / 1000.0
+      val ccos = r3d(dot / (vnorm * cnorms(c)))
       // strict > + ascending-cid iteration = smallest cid wins ties
       if (ccos > best) { best = ccos; bestCid = cids(c) }
       c += 1
@@ -178,7 +180,7 @@ case class IvfCells(child: Expression, encoded: String, nprobe: Int)
         if (!arr.isNullAt(d)) dot += VectorExprs.elemAt(child, arr, d) * cv(d)
         d += 1
       }
-      scores(c) = math.floor(dot / (vnorm * cnorms(c)) * 1000.0 + 0.5001) / 1000.0
+      scores(c) = r3d(dot / (vnorm * cnorms(c)))
       c += 1
     }
     // selection of the top nprobe by (score desc, cid asc): strict >

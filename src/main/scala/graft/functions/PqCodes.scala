@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
+import graft.Rounding.r3d
+
 /** Product-quantization code assignment as a pure projection: for each
   * of the codebook's `m` subspaces, the codeword id with the smallest
   * ROUNDED squared L2 distance to the input vector's sub-slice (ties →
@@ -80,7 +82,7 @@ case class PqCodes(child: Expression, encoded: String)
           d2 += diff * diff
           d += 1
         }
-        val d2r = math.floor(d2 * 1000.0 + 0.5001) / 1000.0
+        val d2r = r3d(d2)
         // strict < + ascending-cid iteration = smallest cid wins ties
         if (d2r < best) { best = d2r; bestCid = cids(s)(c) }
         c += 1

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.r3
 import graft.sources.Store
 
 /** Deduplication operators for LLM training-data pipelines.
@@ -25,8 +26,6 @@ import graft.sources.Store
   * partitioning, any run.
   */
 object Dedup {
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** Exact-dedup decision table: content hash, copy count, and
     * keep = "is the smallest doc_id of its hash group".
@@ -336,23 +335,21 @@ object Dedup {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
     val n = deg.count().toDouble
-    var rank = deg.select(col("src").as("doc_id"),
+    val rank0 = deg.select(col("src").as("doc_id"),
       r3(lit(1.0) / lit(n)).as("pr")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    Iterate.rounds(pairs.sparkSession, "pageRank", iters, rank0, cutLast = true) { (_, rank) =>
       val inflow = edges
         .join(rank.select(col("doc_id").as("src"), col("pr")), "src")
         .join(deg, "src")
         .groupBy(col("dst"))
         .agg(sum(col("pr") / col("deg")).as("inflow"))
         .select(col("dst").as("doc_id"), col("inflow"))
-      rank = deg.select(col("src").as("doc_id"))
+      deg.select(col("src").as("doc_id"))
         .join(inflow, Seq("doc_id"), "left")
         .select(col("doc_id"),
           r3((lit(1.0) - lit(damping)) / lit(n) +
             lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-        .localCheckpoint()
     }
-    rank
   }
 
   /** Synchronous label propagation over the candidate graph (Raghavan
@@ -387,17 +384,19 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
-    var lab = edges.select(col("src").as("doc_id")).distinct()
+    val lab0 = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      lab = edges
+    // the last round is cut too: the sizes aggregate and the join below
+    // both read it
+    val lab = Iterate.rounds(pairs.sparkSession, "labelProp", rounds, lab0,
+        cutLast = true) { (_, lab) =>
+      edges
         .join(lab.select(col("doc_id").as("src"), col("label")), "src")
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("dst")).orderBy(col("cnt").desc, col("label"))))
         .where(col("rn") === 1)
         .select(col("dst").as("doc_id"), col("label"))
-        .localCheckpoint()
     }
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("community_n"))
     lab.join(sizes, "label").select(col("doc_id"), col("label"), col("community_n"))
@@ -408,36 +407,34 @@ object Dedup {
     // two orientations) — a union of the plan with its swap evaluates
     // the candidate-generation plan twice (measured 2× on the
     // unpersisted LSH pipeline feeding this).
-    // localCheckpoint (not persist): each round's plan must start from
-    // a LEAF, or the logical lineage doubles every iteration and
-    // Catalyst analysis time goes exponential (measured: 1.3s ->
-    // 33s/round by iteration 5 with persist-only). Standard iterative-
-    // Spark practice; at cluster scale use reliable checkpoint() to
-    // survive executor loss.
+    // Each round's plan starts from a checkpointed LEAF (see Iterate).
     val edges = pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    val labels0 = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    // the round's one count is the convergence check: the changed rows
+    // (`prev` rides through the cut, so the check is a scan, not
+    // another join job). Silent non-convergence would return labels
+    // short of the fixpoint (≠ the recursive-CTE oracle)
+    // nondeterministically on adversarial graphs — fail loudly instead.
+    Iterate.fixpoint(pairs.sparkSession, "connectedComponents", labels0, -1L,
+        Some(maxIter -> "raise maxIter (diameter of the candidate graph exceeds 2^maxIter)"))(
+        _.where(col("cluster") =!= col("prev")).count(), (_, changed) => changed == 0) { labels =>
       // 1) min-label propagation from neighbours, then 2) pointer-jump
       // (path halving): the propagated min is re-resolved through the
       // PREVIOUS round's label table (cluster ← label(cluster)), so
       // labels hop two levels per round and convergence is
       // O(log diameter) instead of O(diameter). Both joins live in ONE
-      // plan over the checkpointed `labels` leaf — one materialization
-      // job per round. Carrying `prev` through the checkpoint keeps
-      // the convergence check a scan, not another join job.
+      // plan over the checkpointed `labels` leaf — one job per round.
       val neigh = edges
         .join(labels.select(col("doc_id").as("src"), col("cluster").as("ncluster")), "src")
         .groupBy(col("dst")).agg(min(col("ncluster")).as("ncluster"))
         .select(col("dst").as("doc_id"), col("ncluster"))
       val byId = labels.select(col("doc_id").as("_lid"), col("cluster").as("_lcl"))
-      val next = labels
+      labels.select(col("doc_id"), col("cluster"))
         .join(neigh, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("cluster"), coalesce(col("ncluster"), col("cluster"))).as("c1"),
@@ -446,22 +443,7 @@ object Dedup {
         .select(col("doc_id"),
           least(col("c1"), coalesce(col("_lcl"), col("c1"))).as("cluster"),
           col("prev"))
-        // lazy: the convergence count right below materializes the
-        // checkpoint in the SAME job — halves the per-round job count
-        .localCheckpoint(false)
-      val changed = next.where(col("cluster") =!= col("prev")).count()
-      labels = next.select(col("doc_id"), col("cluster"))
-      converged = changed == 0
-      iter += 1
-    }
-    // Silent non-convergence would return labels short of the fixpoint
-    // (≠ the recursive-CTE oracle) nondeterministically on adversarial
-    // graphs — fail loudly instead.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds; " +
-          "raise maxIter (diameter of the candidate graph exceeds 2^maxIter)")
-    labels
+    }._1.select(col("doc_id"), col("cluster"))
   }
 
   /** The full near-dup removal pipeline a training-data run executes,

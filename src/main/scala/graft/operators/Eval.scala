@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.{r3, r3d}
+
 /** Model-evaluation and feature-engineering operators — the scoring
   * half of a training pipeline (the reference scores its forecasts in
   * src/demo/scoring.py; these are the classifier-side analogues a
@@ -16,8 +18,6 @@ import org.apache.spark.sql.functions._
   * input size.
   */
 object Eval {
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** Kendall rank correlation between two rankings of the same query
     * batch (tau-a — ranks within a list are distinct, so no tie
@@ -516,7 +516,7 @@ object Eval {
     val edges = scored.where(col("grp") === 0)
       .agg(expr(s"percentile(score, array(${qs.mkString("D, ")}D))").as("e"))
       .head().getSeq[Double](0)
-      .map(x => math.floor(x * 1000.0 + 0.5001) / 1000.0)
+      .map(r3d(_))
     val edgeArr = edges.map(e => s"${e}D").mkString("array(", ", ", ")")
     val binned = scored
       .select(col("grp"), expr(s"size(filter($edgeArr, e -> e < score))").as("bin"))

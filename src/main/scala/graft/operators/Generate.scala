@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.r3
+
 /** Deterministic synthetic time-series generator — the Spark-native
   * re-expression of the reference's mock-series factory
   * (reference: src/demo/create_time_series.py:94-196: per-customer
@@ -80,8 +82,6 @@ object Generate {
   private def u(key: Column, tag: String): Column =
     (conv(substring(md5(concat(key.cast("string"), lit(":" + tag))), 1, 8), 16, 10)
       .cast("bigint") % 100000L).cast("double") / 100000.0
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** Generate `nKeys` daily series of length `nDays` with period-`p`
     * seasonality. Output: (key, t, v, signal_type).

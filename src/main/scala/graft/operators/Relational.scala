@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.r3
+
 /** Relational operators beyond plain groupBy/join: as-of join,
   * sessionization, grouped top-k. All single-shuffle designs that
   * survive 100-TB inputs (no cross products, no global sorts).
@@ -115,7 +117,7 @@ object Relational {
         min(col("ts_us")).as("session_start_us"),
         max(col("ts_us")).as("session_end_us"),
         count(lit(1)).as("n_events"),
-        (floor(sum(col("value")) * 1000.0 + 0.5001) / 1000.0).as("sum_value"))
+        r3(sum(col("value"))).as("sum_value"))
   }
 
   /** [[sessionize]] with the events-sized hot-key window REMOVED —
@@ -222,7 +224,7 @@ object Relational {
         col("start_us").as("session_start_us"),
         col("end_us").as("session_end_us"),
         col("n_events"),
-        (floor(col("raw_value") * 1000.0 + 0.5001) / 1000.0).as("sum_value"))
+        r3(col("raw_value")).as("sum_value"))
   }
 
   /** PER-SESSION strict-order funnel: the [[funnel]] ladder scoped to
@@ -321,7 +323,7 @@ object Relational {
           .otherwise(lit("direct")))
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_purchases"),
-        (floor(sum(col("value")) * 1000.0 + 0.5001) / 1000.0).as("revenue"))
+        r3(sum(col("value"))).as("revenue"))
   }
 
   /** LINEAR multi-touch attribution — the other pole of the
@@ -361,7 +363,7 @@ object Relational {
           .otherwise(col("pval") / col("n_touches")).as("credit"))
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_credits"),
-        (floor(sum(col("credit")) * 1000.0 + 0.5001) / 1000.0).as("revenue"))
+        r3(sum(col("credit"))).as("revenue"))
   }
 
   /** Dwell-time distribution per event type: the gap to the SAME
@@ -387,9 +389,9 @@ object Relational {
       .where(col("dwell_s").isNotNull)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        (floor(avg(col("dwell_s")) * 1000.0 + 0.5001) / 1000.0).as("mean_s"),
-        (floor(expr("percentile(dwell_s, 0.5)") * 1000.0 + 0.5001) / 1000.0).as("p50_s"),
-        (floor(expr("percentile(dwell_s, 0.9)") * 1000.0 + 0.5001) / 1000.0).as("p90_s"))
+        r3(avg(col("dwell_s"))).as("mean_s"),
+        r3(expr("percentile(dwell_s, 0.5)")).as("p50_s"),
+        r3(expr("percentile(dwell_s, 0.9)")).as("p90_s"))
   }
 
   /** Top-k session PATHS: the full ordered event-type sequence of
@@ -487,7 +489,7 @@ object Relational {
       .agg(count(lit(1)).as("_n"), sum(col(valueCol)).as("_s"))
       .groupBy(col(key))
       .agg(sum(col("_n")).as("n_events"),
-        (floor(sum(col("_s")) * 1000.0 + 0.5001) / 1000.0).as("total_value"))
+        r3(sum(col("_s"))).as("total_value"))
 
   /** Multi-granularity revenue totals in ONE pass: CUBE over
     * `(o_orderstatus, o_orderpriority)` — per-cell, per-status,
@@ -514,7 +516,7 @@ object Relational {
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(grouping_id().as("gid"),
         count(lit(1)).as("n_orders"),
-        (floor(sum(col("price")).cast("double") * 100.0 + 0.5001) / 100.0).as("revenue"))
+        r3(sum(col("price")).cast("double"), 100.0).as("revenue"))
       .select(col("o_orderstatus"), col("o_orderpriority"), col("gid"),
         col("n_orders"), col("revenue"))
 
@@ -617,8 +619,6 @@ object Relational {
       stages.indices.map(i =>
         when(col(s"t${i + 1}_us").isNotNull, 1L).otherwise(0L)).reduce(_ + _))
   }
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** WEEKLY churn rollup: per ISO week the active-user count, how
     * many of them do NOT return the following week (churned), the
@@ -945,10 +945,10 @@ object Relational {
     cells.join(sizes, Seq("cohort"))
       .withColumn("raw_cum", sum(col("raw_rev")).over(cum))
       .select(col("cohort"), col("week_n"),
-        (floor(col("raw_rev") * 1000.0 + 0.5001) / 1000.0).as("revenue"),
-        (floor(col("raw_cum") * 1000.0 + 0.5001) / 1000.0).as("cum_revenue"),
+        r3(col("raw_rev")).as("revenue"),
+        r3(col("raw_cum")).as("cum_revenue"),
         col("cohort_users"),
-        (floor(col("raw_cum") / col("cohort_users") * 1000.0 + 0.5001) / 1000.0)
+        r3(col("raw_cum") / col("cohort_users"))
           .as("ltv_per_user"))
   }
 
@@ -975,7 +975,7 @@ object Relational {
         max(struct(col("ts_us"), col("event_id"), col("value"))).as("c"),
         min(col("value")).as("low"), max(col("value")).as("high"),
         count(lit(1)).as("n_events"),
-        (floor(avg(col("value")) * 1000.0 + 0.5001) / 1000.0).as("mean_value"))
+        r3(avg(col("value"))).as("mean_value"))
       .select(col("user_id"), col("day"),
         col("o.value").as("open"), col("high"), col("low"),
         col("c.value").as("close"), col("n_events"), col("mean_value"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.{r3, r3d}
 import graft.functions.VectorExprs
 import graft.sources.Store
 
@@ -25,22 +26,6 @@ import graft.sources.Store
   * keeps the 5.1s arithmetic with a ~100× smaller plan.
   */
 object Similarity {
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
-
-  /** LAZY localCheckpoint — lineage cut whose materialization folds
-    * into the IMMEDIATELY FOLLOWING action instead of paying its own
-    * scheduler round-trip. Measured (r17): a WIN only when that next
-    * action is already mandatory and adjacent (the reachability BFS,
-    * whose per-round `count()` is the convergence contract — round
-    * cost drops from two jobs to one); a LOSS everywhere else — AQE
-    * materializes a lazy frame's shuffle stages at construction
-    * regardless, and consumers that hit the frame before its cache
-    * populates recompute the tail stages (walk-family walls rose
-    * 10-30% under a fully-lazy regime before this was re-measured and
-    * scoped back). Keep eager `localCheckpoint()` the default.
-    */
-  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
   /** Embedding dimension of the test corpus. */
   val DIM = 64
@@ -299,7 +284,6 @@ object Similarity {
                           cids: Array[Array[Long]],
                           books: Array[Array[Array[Double]]],
                           subDim: Int): DataFrame = {
-    def r3d(x: Double) = math.floor(x * 1000.0 + 0.5001) / 1000.0
     val rows = for {
       (qid, qv) <- qs.toSeq
       s <- books.indices
@@ -746,11 +730,12 @@ object Similarity {
     // window; the LAST round stays lazy — every caller checkpoints the
     // crank-filtered assignment immediately, and the crank window
     // rides the final merge's hash(vec_id) partitioning exchange-free.
-    var beamScored = e
+    val beam0 = e
       .crossJoin(broadcast(cents.where(col("ccid") === entry)))
       .select(col("vec_id"), col("ccid").as("cid"), cos.as("cos"))
       .localCheckpoint()
-    for (r <- 1 to rounds) {
+    Iterate.rounds(e.sparkSession, "routedCells", rounds, beam0,
+        cutLast = false) { (_, beamScored) =>
       val scored = beamScored
         .join(broadcast(cg), col("cid") === col("src"))
         .select(col("vec_id"), col("nbr").as("cid"))
@@ -759,15 +744,13 @@ object Similarity {
         .join(e, "vec_id")
         .join(broadcast(cents), col("cid") === col("ccid"))
         .select(col("vec_id"), col("cid"), cos.as("cos"))
-      val merged = beamScored.unionByName(scored)
+      beamScored.unionByName(scored)
         .repartition(col("vec_id"))
         .groupBy(col("vec_id"), col("cid")).agg(min(col("cos")).as("cos"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))))
         .where(col("rk") <= beam).drop("rk")
-      beamScored = if (r < rounds) merged.localCheckpoint() else merged
-    }
-    beamScored.withColumn("crank", row_number().over(
+    }.withColumn("crank", row_number().over(
       Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))))
   }
 
@@ -1305,11 +1288,15 @@ object Similarity {
       .join(e, cand("vid") === e("vec_id"))
       .select(cand("qid"), cand("qv"), cand("qn"), cand("vid"), walkCos.as("cos"))
     val carry = Seq(col("qid"), col("qv"), col("qn"), col("vid"))
-    var visited: DataFrame = null // (qid, qv, qn, vid, cos[, rk])
-    for (r <- 1 to rounds) {
+    def rk(df: DataFrame) = df.withColumn("rk", row_number().over(
+      Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
+    // visited = (qid, qv, qn, vid, cos[, rk]); the seeds stand in for it
+    // before round 1
+    val visited = Iterate.rounds(e.sparkSession, "graphWalk", rounds, seeds,
+        cutLast = false, between = rk) { (r, visited) =>
       // round 1 expands ALL seeds (the r17 contract: the first frontier
       // is the seed set, unfiltered); later rounds expand the top-beam
-      val frontier = if (r == 1) seeds
+      val frontier = if (r == 1) visited
         else visited.where(col("rk") <= beam).select(carry: _*)
       val expand = broadcast(frontier).join(adj, frontier("vid") === adj("src"))
         .select(frontier("qid"), frontier("qv"), frontier("qn"),
@@ -1319,17 +1306,11 @@ object Similarity {
       val fresh = if (r == 1) scoreNew(frontier.unionByName(expand))
         else visited.select(carry :+ col("cos"): _*)
           .unionByName(scoreNew(expand))
-      val merged = fresh
+      fresh
         .repartition(col("qid"))
         .groupBy(col("qid"), col("vid"))
         .agg(max(col("qv")).as("qv"), max(col("qn")).as("qn"),
           min(col("cos")).as("cos"))
-      visited = if (r < rounds) Par.labelled(e.sparkSession, s"graphWalk:round$r") {
-          merged.withColumn("rk", row_number().over(
-              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
-            .localCheckpoint()
-        }
-      else merged
     }
     visited
       .where(col("vid") =!= col("qid"))
@@ -1523,13 +1504,20 @@ object Similarity {
     val sym = graph.unionByName(
       graph.select(col("nbr").as("src"), col("src").as("nbr")))
     val carry = Seq(col("qid"), col("qv"), col("qn"), col("vid"))
-    var visited: DataFrame = null // (qid, qv, qn, vid, cos, label[, rk, rkm])
-    for (r <- 1 to rounds) {
+    def windows(df: DataFrame) = df
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
+      .withColumn("rkm", row_number().over(
+        Window.partitionBy(col("qid"), isMatch).orderBy(col("cos").desc, col("vid"))))
+    // visited = (qid, qv, qn, vid, cos, label[, rk, rkm]); the seeds
+    // stand in for it before round 1
+    val visited = Iterate.rounds(nodes.sparkSession, "filteredWalk", rounds, seeds,
+        cutLast = false, between = windows) { (r, visited) =>
       // the mixed navigation ∪ matching frontier: rank overall and
       // rank within the (qid, match) group, keep `rk ≤ beam OR (match
       // AND rkm ≤ beam)` — the same set as union(topBeam(all),
       // topBeam(matches)); round 1 expands ALL seeds
-      val frontier = if (r == 1) seeds
+      val frontier = if (r == 1) visited
         else visited.where(col("rk") <= beam || (isMatch && col("rkm") <= beam))
           .select(carry: _*)
       val hop1 = broadcast(frontier).join(sym, frontier("vid") === sym("src"))
@@ -1561,21 +1549,11 @@ object Similarity {
       val fresh = if (r == 1) scoreNew(cand)
         else visited.select(carry ++ Seq(col("cos"), col("label")): _*)
           .unionByName(scoreNew(cand))
-      val merged = fresh
+      fresh
         .repartition(col("qid"))
         .groupBy(col("qid"), col("vid"))
         .agg(max(col("qv")).as("qv"), max(col("qn")).as("qn"),
           min(col("cos")).as("cos"), max(col("label")).as("label"))
-      visited = if (r < rounds) Par.labelled(nodes.sparkSession, s"filteredWalk:round$r") {
-          merged
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid"))))
-            .withColumn("rkm", row_number().over(
-              Window.partitionBy(col("qid"), isMatch)
-                .orderBy(col("cos").desc, col("vid"))))
-            .localCheckpoint()
-        }
-      else merged
     }
     visited.where(isMatch)
       .where(col("vid") =!= col("qid"))
@@ -1639,44 +1617,29 @@ object Similarity {
     val nNodes = nodes.count()
     require(nNodes > 0, "reachability: the graph has no surviving nodes")
     val seed = nodes.agg(min(col("vec_id"))).head().getLong(0)
-    def closure(edges: DataFrame): Long = {
-      import spark.implicits._
-      // lazy checkpoint + count: the count MATERIALIZES the checkpoint
-      // (caching its blocks for the next round) in the same job, so a
-      // BFS round costs one scheduler round-trip, not two — the loop's
-      // per-round count() is already the convergence contract
-      var visited = ckpt(Seq(seed).toDF("vid"))
-      var n = 1L
-      var grown = true
-      while (grown) {
-        // TWO hops per round: same fixpoint (closure), same
-        // convergence test (no growth after a 2-hop round ⇒ closed
-        // under 1 hop), half the driver round-trips — the audit is
-        // latency-bound, diameter-many rounds of tiny frames
+    import spark.implicits._
+    // TWO hops per round: same fixpoint (closure), same convergence
+    // test (no growth after a 2-hop round ⇒ closed under 1 hop), half
+    // the driver round-trips — the audit is latency-bound,
+    // diameter-many rounds of tiny frames. The closure only grows and
+    // is bounded by nNodes, so it needs no round bound.
+    def closure(edges: DataFrame): Long =
+      Iterate.fixpoint(spark, "reachability", Iterate.lazyCut(Seq(seed).toDF("vid")), 1L)(
+          _.count(), (n, n2) => n2 <= n) { visited =>
         val hop1 = visited.join(edges, visited("vid") === edges("src"))
           .select(edges("nbr").as("vid"))
         val g2 = edges.select(col("src").as("s2"), col("nbr").as("n2"))
         val hop2 = hop1.join(g2, hop1("vid") === g2("s2"))
           .select(col("n2").as("vid"))
-        val nxt = ckpt(visited.unionByName(hop1).unionByName(hop2).distinct())
-        val n2 = nxt.count()
-        grown = n2 > n
-        n = n2
-        visited = nxt
-      }
-      n
-    }
+        visited.unionByName(hop1).unionByName(hop2).distinct()
+      }._2
     // the two closures are INDEPENDENT job chains over the same cached
     // edge frame — overlap them (guide §2.6: concurrent jobs back-fill
     // the tail; each chain is latency-bound on tiny frames, so the
     // overlap nearly halves the audit's wall)
-    val undirF = scala.concurrent.Future(closure(g.unionByName(
-      g.select(col("nbr").as("src"), col("src").as("nbr")))))(
-      scala.concurrent.ExecutionContext.global)
-    val nDir = closure(g)
-    val nUndir = scala.concurrent.Await.result(undirF,
-      scala.concurrent.duration.Duration.Inf)
-    import spark.implicits._
+    val Seq(nDir, nUndir) = Par.inParallelAll(Seq(
+      () => closure(g),
+      () => closure(g.unionByName(g.select(col("nbr").as("src"), col("src").as("nbr"))))))
     Seq((nNodes, nDir, nUndir)).toDF(
         "n_nodes", "n_reach_directed", "n_reach_undirected")
       .select(col("n_nodes"), col("n_reach_directed"), col("n_reach_undirected"),
@@ -2469,11 +2432,6 @@ object Similarity {
     saltedTopK(scored, "cos", ascending = false, k)
   }
 
-  /** The canonical rounding, driver-side: floor(x·1000 + 0.5001)/1000
-    * — the same IEEE ops as [[r3]] / the SQL oracle's `R`.
-    */
-  private def r3d(x: Double): Double = math.floor(x * 1000.0 + 0.5001) / 1000.0
-
   /** One Lloyd iteration: assign every vector to its nearest current
     * centroid (rounded-cosine argmax — the [[graft.functions.IvfCell]]
     * zero-exchange projection, spherical k-means' assignment step) and
@@ -2529,18 +2487,7 @@ object Similarity {
     */
   def kmeansCentroids(embeddings: DataFrame, k: Int, nIter: Int): Array[(Long, Array[Double])] =
     memoized(embeddings, s"kmeans:$k:$nIter") {
-      VectorExprs.register(embeddings.sparkSession)
-      var cents = embeddings
-        .where(col("vec_id") < k && col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getAs[Number](0).longValue(),
-          r.getSeq[Number](1).map(_.doubleValue()).toArray))
-        .sortBy(_._1)
-      require(cents.nonEmpty,
-        s"kmeans: no non-null vectors with vec_id < $k to seed the codebook")
-      var it = 0
-      while (it < nIter) { cents = kmeansStep(embeddings, cents); it += 1 }
-      cents
+      kmeansIterate(embeddings, embeddings, k, nIter)
     }
 
   /** md5-PRNG sample bucket of `vec_id` — the engine-portable
@@ -2576,24 +2523,21 @@ object Similarity {
   }
 
   /** Seed from the full corpus' first-k, then `nIter` Lloyd rounds
-    * where only `sample` votes — shared by the gate-arithmetic and
-    * auto-sized sampled fits.
+    * where only `sample` votes — the full and sampled fits.
     */
   private def kmeansIterate(sample: DataFrame, embeddings: DataFrame,
                             k: Int, nIter: Int): Array[(Long, Array[Double])] = {
     VectorExprs.register(embeddings.sparkSession)
-    var cents = embeddings
-      .where(col("vec_id") < k && col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getAs[Number](0).longValue(),
-        r.getSeq[Number](1).map(_.doubleValue()).toArray))
-      .sortBy(_._1)
-    require(cents.nonEmpty,
+    val seeds = headVectors(embeddings, k)
+    require(seeds.nonEmpty,
       s"kmeans: no non-null vectors with vec_id < $k to seed the codebook")
-    var it = 0
-    while (it < nIter) { cents = kmeansStep(sample, cents); it += 1 }
-    cents
+    lloyd(sample, seeds, nIter)
   }
+
+  /** `nIter` [[kmeansStep]] rounds from `cents`, only `sample` voting. */
+  private def lloyd(sample: DataFrame, cents: Array[(Long, Array[Double])],
+                    nIter: Int): Array[(Long, Array[Double])] =
+    (1 to nIter).foldLeft(cents)((c, _) => kmeansStep(sample, c))
 
   /** [[kmeansCentroidsSampled]] with the FAISS auto-sizing rule: train
     * on ~`perCentroid`·k vectors (FAISS default 256·k) whatever the
@@ -2635,18 +2579,8 @@ object Similarity {
   def kmeansFitSampled(embeddings: DataFrame, k: Int, nIter: Int,
                        keep: Int, nBuckets: Int): DataFrame = {
     require(nIter >= 1, s"kmeansFitSampled: nIter must be >= 1, got $nIter")
-    val cents = kmeansCentroidsSampled(embeddings, k, nIter - 1, keep, nBuckets)
-    val enc = graft.functions.IvfCell.encode(cents.map(_._1), cents.map(_._2))
-    embeddings.where(col("embedding").isNotNull && sampleBucket(nBuckets) < keep)
-      .select(col("embedding"),
-        expr(s"coalesce(graft_ivf_cell(embedding, '$enc'), -1L)").as("cid"))
-      .select(col("cid"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("cid"), col("d"))
-      .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
-      .select(col("cid"), col("d"), col("n"), r3(col("sx") / col("n")).as("cd"))
-      .groupBy(col("cid"))
-      .agg(max(col("n")).as("n"),
-        r3(sum((col("d") + 1) * col("cd"))).as("checksum"))
+    fitSummary(embeddings.where(sampleBucket(nBuckets) < keep),
+      kmeansCentroidsSampled(embeddings, k, nIter - 1, keep, nBuckets))
   }
 
   /** The `kmeans_fit` gate surface: run `nIter − 1` full Lloyd rounds
@@ -2731,10 +2665,7 @@ object Similarity {
     */
   def kmeansFitMaximin(embeddings: DataFrame, k: Int, nIter: Int): DataFrame = {
     require(nIter >= 1, s"kmeansFitMaximin: nIter must be >= 1, got $nIter")
-    var cents = kmeansSeedsMaximin(embeddings, k)
-    var it = 0
-    while (it < nIter - 1) { cents = kmeansStep(embeddings, cents); it += 1 }
-    fitSummary(embeddings, cents)
+    fitSummary(embeddings, lloyd(embeddings, kmeansSeedsMaximin(embeddings, k), nIter - 1))
   }
 
   /** Per-dimension DRIFT between two corpus halves (old = even
@@ -2811,7 +2742,6 @@ object Similarity {
     * literals.
     */
   def whitenEmbeddings(embeddings: DataFrame, dim: Int = DIM): DataFrame = {
-    def r3d(x: Double) = math.floor(x * 1000.0 + 0.5001) / 1000.0
     val stats = embeddingStats(embeddings).collect()
     val mu = Array.fill(dim)(0.0)
     val sd = Array.fill(dim)(1.0)
@@ -3478,17 +3408,19 @@ object Similarity {
   def pqTrainedBooks(embeddings: DataFrame, nCodewords: Int, m: Int, nIter: Int)
       : (Array[Array[Long]], Array[Array[Array[Double]]]) =
     memoized(embeddings, s"pqbooks:$nCodewords:$m:$nIter") {
-      VectorExprs.register(embeddings.sparkSession)
-      val head = headVectors(embeddings, nCodewords)
-      var (cids, books) = { val (_, c, b, _) = pqBooks(head, m); (c, b) }
-      var it = 0
-      while (it < nIter) {
-        val r = pqKmeansStep(embeddings, cids, books)
-        cids = r._1; books = r._2
-        it += 1
-      }
-      (cids, books)
+      pqLloyd(embeddings, embeddings, nCodewords, m, nIter)
     }
+
+  /** Seed each subspace's book from the full corpus' first-`nCodewords`
+    * sub-slices, then `nIter` [[pqKmeansStep]] rounds where only
+    * `sample` votes — the full and sampled PQ fits.
+    */
+  private def pqLloyd(sample: DataFrame, embeddings: DataFrame, nCodewords: Int,
+                      m: Int, nIter: Int): (Array[Array[Long]], Array[Array[Array[Double]]]) = {
+    VectorExprs.register(embeddings.sparkSession)
+    val (_, cids, books, _) = pqBooks(headVectors(embeddings, nCodewords), m)
+    (1 to nIter).foldLeft((cids, books)) { case ((c, b), _) => pqKmeansStep(sample, c, b) }
+  }
 
   /** [[pqTrainedBooks]] on the deterministic md5-PRNG sample (`keep` of
     * `nBuckets` buckets) — the same FAISS sampling discipline as
@@ -3502,17 +3434,7 @@ object Similarity {
       : (Array[Array[Long]], Array[Array[Array[Double]]]) = {
     require(keep >= 1 && keep <= nBuckets,
       s"pqTrainedBooksSampled: keep=$keep must be in [1, $nBuckets]")
-    VectorExprs.register(embeddings.sparkSession)
-    val head = headVectors(embeddings, nCodewords)
-    var (cids, books) = { val (_, c, b, _) = pqBooks(head, m); (c, b) }
-    val sample = embeddings.where(sampleBucket(nBuckets) < keep)
-    var it = 0
-    while (it < nIter) {
-      val r = pqKmeansStep(sample, cids, books)
-      cids = r._1; books = r._2
-      it += 1
-    }
-    (cids, books)
+    pqLloyd(embeddings.where(sampleBucket(nBuckets) < keep), embeddings, nCodewords, m, nIter)
   }
 
   /** The `pq_fit` gate surface (mirrors [[kmeansFit]]): `nIter − 1`

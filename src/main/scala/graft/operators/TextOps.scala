@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.{r3, r3d}
 import graft.sources.Store
 
 /** Text-analysis operators for LLM training-data pipelines: token
@@ -14,8 +15,6 @@ import graft.sources.Store
   * maps straight through the scan.
   */
 object TextOps {
-
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   val STOPWORDS: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for")
 
@@ -1427,8 +1426,7 @@ object TextOps {
       .groupBy(col("token"), col("n"), col("rank"))
       .agg(min(col("cnt")).as("n_cms"))
       .select(col("token"), col("rank"), col("n").as("n_exact"), col("n_cms"),
-        (floor((col("n_cms") - col("n")).cast("double") / col("n") * 1000000.0 + 0.5001)
-          / 1000000.0).as("over_err"))
+        r3((col("n_cms") - col("n")).cast("double") / col("n"), 1e6).as("over_err"))
   }
 
   /** Hybrid retrieval: the BM25 rank list and the dense cosine rank
@@ -2088,13 +2086,6 @@ object TextOps {
           .orderBy(col("n").desc, col("token"))).cast("long"))
   }
 
-  /** Floor-quantize at 1e-6 — the canonical rounding at the precision
-    * the unigram-LM log-probs ship with (coarser r3 would merge
-    * distinct piece probabilities; the DP compares these values, so
-    * both engines must quantize identically BEFORE summing).
-    */
-  private def q6d(x: Double): Double = math.floor(x * 1e6 + 0.5001) / 1e6
-
   /** Distinct words × corpus frequency — the unigram-LM trainer's only
     * corpus-volume pass (the [[bpeTrainMerges]] collapse, but keeping
     * single-char words: unigram-LM segments them too).
@@ -2105,13 +2096,13 @@ object TextOps {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
   /** Smoothed, quantized piece log-probs from raw counts: lnp =
-    * q6(ln((c+1) / Σ(c+1))) — add-one so a kept-alphabet char with
+    * r3d(ln((c+1) / Σ(c+1)), 1e6) — add-one so a kept-alphabet char with
     * zero Viterbi count stays finite, one uniform formula for the
     * seed and every EM round (and for the oracle's CTEs).
     */
   private def ulmLnp(counts: Seq[(String, Long)]): Seq[(String, Long, Double)] = {
     val tt = counts.map(_._2 + 1L).sum.toDouble
-    counts.map { case (p, c) => (p, c, q6d(math.log((c + 1L).toDouble / tt))) }
+    counts.map { case (p, c) => (p, c, r3d(math.log((c + 1L).toDouble / tt), 1e6)) }
   }
 
   /** Unigram-LM (SentencePiece) tokenizer training, Kudo 2018 — the
@@ -2219,7 +2210,7 @@ object TextOps {
       for (tgt <- ulmPruneSchedule(nSeed, targetVocab, shrink)) {
         val chars = vocab.filter(_._1.length == 1)
         val kept = vocab.filter(_._1.length >= 2)
-          .sortBy { case (p, c, lnp) => (-q6d(c * -lnp), p) }
+          .sortBy { case (p, c, lnp) => (-r3d(c * -lnp, 1e6), p) }
           .take(tgt)
         vocab = ulmLnp((kept ++ chars).map(v => (v._1, v._2)).sortBy(_._1))
         emRound()
@@ -2383,7 +2374,6 @@ object TextOps {
       buf
     }.toArray
     val freqs: Array[Long] = types.iterator.map(_._2).toArray
-    def q6(x: Double): Double = math.floor(x * 1e6 + 0.5001) / 1e6
     val out = ArrayBuffer.empty[(Int, String, String, Long, Double)]
     var r = 1
     var exhausted = false
@@ -2410,8 +2400,8 @@ object TextOps {
         var bv = 0L
         var bs = 0.0
         cnt.foreach { case (k, v) =>
-          val s = q6(math.log(v.toDouble) - math.log(symCnt(k._1).toDouble) -
-            math.log(symCnt(k._2).toDouble))
+          val s = r3d(math.log(v.toDouble) - math.log(symCnt(k._1).toDouble) -
+            math.log(symCnt(k._2).toDouble), 1e6)
           if (bk == null || s > bs || (s == bs && (v > bv || (v == bv &&
             (utf8Lt(k._1, bk._1) || (k._1 == bk._1 && utf8Lt(k._2, bk._2)))))))
             { bk = k; bv = v; bs = s }
@@ -2562,8 +2552,8 @@ object TextOps {
         .join(broadcast(symCnt.select(col("s").as("a"), col("c").as("ca"))), Seq("a"))
         .join(broadcast(symCnt.select(col("s").as("b"), col("c").as("cb"))), Seq("b"))
         .select(col("a"), col("b"), col("cnt"),
-          (floor((log(col("cnt").cast("double")) - log(col("ca").cast("double")) -
-            log(col("cb").cast("double"))) * 1e6 + 0.5001) / 1e6).as("lscore"))
+          r3(log(col("cnt").cast("double")) - log(col("ca").cast("double")) -
+            log(col("cb").cast("double")), 1e6).as("lscore"))
         .localCheckpoint(eager = true)
       val ranked = statsDf
         .orderBy(col("lscore").desc, col("cnt").desc, col("a"), col("b"))
@@ -2622,8 +2612,8 @@ object TextOps {
         .join(broadcast(symCnt.select(col("s").as("a"), col("c").as("ca"))), Seq("a"))
         .join(broadcast(symCnt.select(col("s").as("b"), col("c").as("cb"))), Seq("b"))
         .select(col("a"), col("b"), col("cnt"),
-          (floor((log(col("cnt").cast("double")) - log(col("ca").cast("double")) -
-            log(col("cb").cast("double"))) * 1e6 + 0.5001) / 1e6).as("lscore"))
+          r3(log(col("cnt").cast("double")) - log(col("ca").cast("double")) -
+            log(col("cb").cast("double")), 1e6).as("lscore"))
         .orderBy(col("lscore").desc, col("cnt").desc, col("a"), col("b"))
         .limit(1).collect()
       if (best.isEmpty) exhausted = true
@@ -2789,7 +2779,7 @@ object TextOps {
     val raw = totals.map { case (s, n) => s -> math.pow(n.toDouble, invT) }
     val z = raw.map(_._2).sum
     val weights = raw.map { case (s, w) =>
-      s -> math.floor(w / z * 1000.0 + 0.5001) / 1000.0
+      s -> r3d(w / z)
     }.toMap
     mixtureFromCounts(counts, weights, totalBudget, seed)
   }

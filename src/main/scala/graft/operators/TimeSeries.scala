@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.r3
+
 /** Spark-native time-series operator chain.
   *
   * Re-expresses the per-series Python-UDF pipeline of the reference
@@ -36,15 +38,6 @@ object TimeSeries {
 
   private def wOrdered = Window.partitionBy(KEY).orderBy(DAY)
   private def wKey = Window.partitionBy(KEY)
-
-  /** Canonical 3-decimal rounding: floor(x·1000 + 0.5 + ε)/1000 — only
-    * IEEE mul/add/floor/div, so Spark and any oracle engine produce
-    * bit-identical results (library ROUNDs disagree at half-boundaries).
-    * The ε=1e-4 guard absorbs FP-noise from parallel-sum ordering —
-    * exact half-boundary values (common when averaging 3-decimal data)
-    * would otherwise flip run-to-run in BOTH engines.
-    */
-  private def r3(c: Column): Column = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** Daily resample of the raw event stream: `(user_id, day, v)` with
     * `v = round(sum(value), 3)`. One shuffle, partial-agg combined.
@@ -1501,10 +1494,11 @@ object TimeSeries {
     require(rounds >= 1 && z > 0,
       s"outliersEsd: need rounds >= 1 and z > 0, got rounds=$rounds z=$z")
     val base = daily.select(col(KEY), col(DAY), col("v")).localCheckpoint()
-    var flagged = base.limit(0)
+    val none = base.limit(0)
       .select(col(KEY), col(DAY), col("v"),
         lit(0.0).as("z_at_flag"), lit(0).as("round"))
-    for (r <- 1 to rounds) {
+    Iterate.rounds(daily.sparkSession, "outliersEsd", rounds, none,
+        cutLast = true) { (r, flagged) =>
       val rem = base.join(
         flagged.select(col(KEY).as("fk"), col(DAY).as("fd")),
         base(KEY) === col("fk") && base(DAY) === col("fd"), "left_anti")
@@ -1519,9 +1513,8 @@ object TimeSeries {
         .where(col("rk") === 1 && abs(col("zz")) >= z)
         .select(col(KEY), col(DAY), col("v"),
           col("zz").as("z_at_flag"), lit(r).as("round"))
-      flagged = flagged.unionByName(cand).localCheckpoint()
+      flagged.unionByName(cand)
     }
-    flagged
   }
 
   def outliersMad(daily: DataFrame, nMads: Double): DataFrame =

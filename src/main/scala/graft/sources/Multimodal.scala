@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Rounding.r3
+
 /** Multimodal column plumbing: opaque `binary` payload + typed
   * metadata, with a partition-batched feature extractor.
   *
@@ -122,12 +124,9 @@ object Multimodal {
       .groupBy(col("shard"), col("z.bin").as("bin"))
       .agg(count(lit(1)).as("n_blobs"), sum(col("z.n")).as("bytes_used"))
       .select(col("shard"), col("bin"), col("n_blobs"), col("bytes_used"),
-        (floor(col("bytes_used") / lit(budget.toDouble) * 1000.0 + 0.5001) / 1000.0)
+        r3(col("bytes_used") / lit(budget.toDouble))
           .as("fill"))
   }
-
-  private def r3(c: org.apache.spark.sql.Column) =
-    floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** [[ingest]] with a deterministic MODALITY MIX (doc_id % 3 →
     * image/audio/video) and per-modality metadata: duration_ms for

@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Rounding.{r3, r3d}
+
 /** Structured Streaming variants of the batch operators. The same
   * logical aggregations run incrementally with watermarked state —
   * at 100 TB/day this is the ingest path, with the batch operators
   * as the backfill path (lambda-free: identical expressions).
   */
 object StreamOps {
-
-  private def r3(c: org.apache.spark.sql.Column) = floor(c * 1000.0 + 0.5001) / 1000.0
 
   /** The PINNED BM25 score column for streaming triage: corpus stats
     * (N, avgdl) and per-term df COLLECT from the masked stored index
@@ -622,7 +622,7 @@ object StreamOps {
             tok = if (acc) nt - 1.0 else nt
             last = ts
             out += ((user, eid, ts, acc,
-              math.floor(tok * 1000.0 + 0.5001) / 1000.0))
+              r3d(tok)))
           }
           state.update((tok, last))
           out.result().iterator

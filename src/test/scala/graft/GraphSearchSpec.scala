@@ -802,26 +802,7 @@ class GraphSearchSpec extends AnyFunSuite {
     assert(rec > 0.0 && rec <= 1.0)
   }
 
-  /** Runs `body` and returns its value with the description of every
-    * Spark job it started (`-` for none).
-    */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        descs.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse("-"))
-    }
-    org.apache.spark.SpecBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.SpecBus.drain(sc)
-      (out, scala.jdk.CollectionConverters.IteratorHasAsScala(descs.iterator).asScala.toSeq)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsOf[T](body: => T): (T, Seq[String]) = SpecJobs.jobsOf(spark)(body)
 
   /** A walk's outcome: its schema and rows (sorted by their string
     * form), or the error conditions and `IllegalArgumentException`

@@ -28,4 +28,23 @@ class ParSpec extends AnyFunSuite {
     }
     assert(err.getMessage === "first")
   }
+
+  test("only Par starts futures, so every sibling is awaited") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val par = new java.io.File(root, "graft/operators/Par.scala")
+    assert(par.isFile)
+    val offenders = files(root).filter { f =>
+      f != par && {
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.mkString.contains("Future(") finally src.close()
+      }
+    }
+    assert(offenders.isEmpty,
+      s"Future( outside graft.operators.Par: ${offenders.map(_.getPath).mkString(", ")}" +
+        " — run concurrent work through Par.inParallelAll")
+  }
 }

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard for the recall@k audit: the engine scores every recall
   * and sweep gate through `Similarity.recallAt`, and the oracle writes
-  * their SQL tail through `OracleSql.recallBranch`. A second copy of
-  * either could drift from the gates it mirrors.
+  * their SQL tail through `OracleSql.recallBranch` and their exact
+  * top-k through `OracleSql.exactTopK`. A second copy of any of them
+  * could drift from the gates it mirrors.
   */
 class RecallCoreSpec extends AnyFunSuite {
 
@@ -39,5 +40,11 @@ class RecallCoreSpec extends AnyFunSuite {
     val oracle = owners(new java.io.File(root, "OracleSql.scala"), "AS n_hit")
     assert(oracle.size == 1 && oracle.head.endsWith(":recallBranch"),
       s"AS n_hit outside OracleSql.recallBranch: ${oracle.mkString(", ")} — end with recallTail")
+  }
+
+  test("the oracle's exact top-k chain is written once") {
+    val chain = owners(new java.io.File(root, "OracleSql.scala"), "exact AS (SELECT qid, vid FROM xr")
+    assert(chain.size == 1 && chain.head.endsWith(":exactTopK"),
+      s"exact top-k chain outside OracleSql.exactTopK: ${chain.mkString(", ")} — build it with exactTopK")
   }
 }

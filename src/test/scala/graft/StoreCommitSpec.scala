@@ -48,11 +48,6 @@ class StoreCommitSpec extends AnyFunSuite {
     new java.io.File(new java.io.File(new java.net.URI(loc)).getParentFile, name)
   }
 
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete()
-  }
-
   test("a leftover <t>_retired table: the compaction refuses by name and renames nothing") {
     val t = "graft_commit_left"
     pendingStore(t)
@@ -93,7 +88,7 @@ class StoreCommitSpec extends AnyFunSuite {
       assert(sorted(spark.table(s"${t}_nodes")) === nodes)
       assert(sorted(spark.table(s"${t}_gtombstones")) === tombs, "tombstones stay pending")
       assert(walk(t) === before)
-    } finally deleteTree(stray)
+    } finally Session.deleteTree(stray)
     Similarity.compactKnnGraph(t)
     assert(!spark.catalog.tableExists(s"${t}_gtombstones"))
     assert(!spark.catalog.tableExists(s"${t}_edges_retired") &&
@@ -123,7 +118,7 @@ class StoreCommitSpec extends AnyFunSuite {
       intercept[Exception](TimeSeries.compactDailyStore(spark, t, 4))
       assert(!spark.catalog.tableExists(s"${t}_retired"))
       assert(lags() === before)
-    } finally deleteTree(stray)
+    } finally Session.deleteTree(stray)
     TimeSeries.compactDailyStore(spark, t, 4)
     assert(lags() === before)
   }
